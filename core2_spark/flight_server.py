@@ -1,7 +1,8 @@
 """Arrow Flight result server (reference README.adoc:14 — "preliminary
 Arrow Flight SQL driver support"; SURVEY.md §3 client boundary).
 
-Two envelopes over one server:
+A protocol codec over ``service``: every statement takes the one path
+classify → bind → build → guard.  Two envelopes over one server:
 
 - the REAL FlightSQL protocol envelope: Any-wrapped protobuf commands
   (``CommandStatementQuery`` → FlightInfo with an Any-wrapped
@@ -12,27 +13,36 @@ Two envelopes over one server:
 - a legacy raw-SQL envelope (descriptor/ticket = SQL text) kept for
   scripting clients.
 
-Prepared statements (round-5): ``ActionCreatePreparedStatement`` /
+GetFlightInfo builds the statement through the executor and answers
+from its analyzed schema (``total_records=-1``): it executes nothing,
+so each statement runs once, in DoGet.  The ticket is the statement
+text; DoGet builds it through the executor again, so the executor
+alone decides which snapshot a statement reads, as on HTTP and pgwire.
+
+Prepared statements: ``ActionCreatePreparedStatement`` /
 ``ClosePreparedStatement`` actions plus ``CommandPreparedStatementQuery``
 and ``CommandPreparedStatementUpdate`` — the prepare-then-execute flow
-a stock ADBC/JDBC client defaults to.  The server stays stateless:
-the prepared-statement handle IS the statement text (the statements
-are parameterless, so nothing needs server-side state), and the
-create result carries the IPC-serialized dataset schema so clients
-can bind result metadata before executing.
+a stock ADBC/JDBC client defaults to.  The server is stateless: the
+handle IS the statement text, a DoPut of parameter values answers
+with the bound text as the new handle (``service.bind``), and the
+create result carries the IPC-serialized dataset schema.
 
-Scale posture: Flight is a RESULT boundary, not a data-movement path —
-queries should reduce (aggregates, top-k) before crossing it.  The
-``max_result_rows`` guard refuses to materialize oversized results on
-the driver, same discipline as ``sources.read_arrow_ipc``.
+DoPut also takes ``CommandStatementUpdate`` (SQL DML as one engine
+transaction) and legacy Arrow uploads, committed as one ``submit_tx``
+Put straight from the Arrow table.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from core2_spark import flightsql_proto as fsql
+from core2_spark.service import Statements, bind, df_to_arrow
 
 try:  # grpc support is optional in pyarrow builds
     import pyarrow.flight as _flight
@@ -40,18 +50,11 @@ except ImportError:  # pragma: no cover
     _flight = None
 
 
-def df_to_arrow(df: DataFrame, max_result_rows: int | None = None) -> pa.Table:
-    """Spark DataFrame → Arrow table (Spark 4's native toArrow), with a
-    driver-materialization guard."""
-    if max_result_rows is not None:
-        n = df.limit(max_result_rows + 1).count()
-        if n > max_result_rows:
-            raise ValueError(
-                f"result exceeds max_result_rows={max_result_rows}; Flight is "
-                "a result boundary — aggregate or LIMIT before fetching, or "
-                "raise the cap deliberately"
-            )
-    return df.toArrow()
+def _first_row(params: pa.Table) -> list:
+    """FlightSQL binds parameters as a record batch: one row of values."""
+    if params.num_rows == 0:
+        return []
+    return [col[0].as_py() for col in params.columns]
 
 
 class SqlFlightServer(_flight.FlightServerBase if _flight else object):
@@ -59,9 +62,9 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
     optionally accept Arrow uploads as engine transactions via do_put.
 
     ``executor`` is typically ``Snapshot.sql`` (basis-pinned, temporal
-    dialect enabled) or a closure over ``Engine.db()``; ``engine``
-    (optional) enables the write side — each do_put stream commits as
-    one ``submit_tx`` Put.
+    dialect enabled) or a closure over ``Engine.db()``; every query
+    reads through it.  ``engine`` (optional) enables the write side and
+    the catalog.
     """
 
     def __init__(
@@ -74,27 +77,16 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
         if _flight is None:  # pragma: no cover
             raise RuntimeError("pyarrow was built without flight support")
         super().__init__(location)
-        self._executor = executor
+        self._statements = Statements(executor, engine)
         self._max_result_rows = max_result_rows
-        self._engine = engine
-
-    def _run(self, sql: str) -> pa.Table:
-        return df_to_arrow(self._executor(sql), self._max_result_rows)
 
     # -- FlightSQL catalog metadata -----------------------------------
     CATALOG = "core2"
     DB_SCHEMA = "default"
 
-    def _table_names(self) -> list[str]:
-        if self._engine is None:
-            return []
-        return sorted(self._engine._all_tables())
-
     def _metadata_table(self, name: str, payload: bytes) -> pa.Table:
         """Result sets for the FlightSQL catalog commands, with the
         column names/nullability the public spec fixes."""
-        from core2_spark import flightsql_proto as fsql
-
         if name == "CommandGetCatalogs":
             return pa.table(
                 {"catalog_name": pa.array([self.CATALOG], pa.utf8())}
@@ -110,7 +102,10 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
             return pa.table({"table_type": pa.array(["TABLE"], pa.utf8())})
         if name == "CommandGetTables":
             spec = fsql.parse_get_tables(payload)
-            names = self._table_names()
+            statements = self._statements
+            names = (
+                sorted(statements.engine._all_tables()) if statements.has_engine else []
+            )
             pat = spec["table_name_pattern"]
             if pat:  # SQL LIKE pattern (%/_) per the spec
                 import re
@@ -133,57 +128,43 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
 
     # -- Flight protocol ----------------------------------------------
     def get_flight_info(self, context, descriptor):
-        """GetFlightInfo: FlightSQL Any-wrapped commands get the
-        protocol-correct envelope (statement queries answer with an
-        Any-wrapped TicketStatementQuery whose handle is the query
-        text — the server is stateless; catalog commands answer with
-        the command itself as the ticket, as the spec prescribes).
-        Anything else is the legacy envelope: raw SQL bytes."""
-        from core2_spark import flightsql_proto as fsql
-
+        """GetFlightInfo: statements (legacy raw SQL, FlightSQL
+        statement or prepared-statement queries) are built, not run —
+        the schema is the analyzed one and the row count unknown (-1);
+        the ticket is the SQL text, Any-wrapped as a TicketStatementQuery
+        for FlightSQL.  Catalog commands answer with their (small)
+        result's schema and the command itself as the ticket, as the
+        spec prescribes."""
         cmd = descriptor.command
         parsed = fsql.unpack_any(cmd)
         if parsed is None:  # legacy raw-SQL envelope
             sql = cmd.decode()
-            table = self._run(sql)
-            ticket = sql.encode()
+        elif parsed[0] == "CommandStatementQuery":
+            sql = fsql.parse_statement_query(parsed[1])
+        elif parsed[0] == "CommandPreparedStatementQuery":
+            sql = fsql.parse_prepared_statement_handle(parsed[1]).decode()
         else:
-            name, payload = parsed
-            if name == "CommandStatementQuery":
-                sql = fsql.parse_statement_query(payload)
-                table = self._run(sql)
-                ticket = fsql.ticket_statement_query(sql.encode())
-            elif name == "CommandPreparedStatementQuery":
-                # stateless prepared statements: the handle is the SQL
-                sql = fsql.parse_prepared_statement_handle(payload).decode()
-                table = self._run(sql)
-                ticket = cmd
-            else:
-                table = self._metadata_table(name, payload)
-                ticket = cmd
-        return _flight.FlightInfo(
-            table.schema,
-            descriptor,
-            [_flight.FlightEndpoint(_flight.Ticket(ticket), [])],
-            table.num_rows,
-            table.nbytes,
-        )
+            table = self._metadata_table(*parsed)
+            endpoint = _flight.FlightEndpoint(_flight.Ticket(cmd), [])
+            return _flight.FlightInfo(
+                table.schema, descriptor, [endpoint], table.num_rows, table.nbytes
+            )
+        schema = to_arrow_schema(self._statements.build(sql).schema)
+        ticket = sql.encode()
+        if parsed is not None:
+            ticket = fsql.ticket_statement_query(ticket)
+        endpoint = _flight.FlightEndpoint(_flight.Ticket(ticket), [])
+        return _flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
 
     def do_get(self, context, ticket):
-        from core2_spark import flightsql_proto as fsql
-
         raw = ticket.ticket
         parsed = fsql.unpack_any(raw)
-        if parsed is None:  # legacy envelope
-            return _flight.RecordBatchStream(self._run(raw.decode()))
-        name, payload = parsed
-        if name == "TicketStatementQuery":
-            sql = fsql.parse_statement_ticket(payload).decode()
-            return _flight.RecordBatchStream(self._run(sql))
-        if name == "CommandPreparedStatementQuery":
-            sql = fsql.parse_prepared_statement_handle(payload).decode()
-            return _flight.RecordBatchStream(self._run(sql))
-        return _flight.RecordBatchStream(self._metadata_table(name, payload))
+        if parsed is not None and parsed[0] != "TicketStatementQuery":
+            return _flight.RecordBatchStream(self._metadata_table(*parsed))
+        if parsed is not None:
+            raw = fsql.parse_statement_ticket(parsed[1])
+        df = self._statements.build(raw.decode())
+        return _flight.RecordBatchStream(df_to_arrow(df, self._max_result_rows))
 
     # -- FlightSQL prepared statements (actions) ------------------------
     def list_actions(self, context):
@@ -193,13 +174,10 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
         ]
 
     def do_action(self, context, action):
-        """CreatePreparedStatement: handle = the statement text (the
-        server is stateless; statements are parameterless), dataset
-        schema resolved by analyzing the query — no execution.  The
-        result is Any-wrapped, as the arrow implementations emit it.
-        ClosePreparedStatement: nothing to release."""
-        from core2_spark import flightsql_proto as fsql
-
+        """CreatePreparedStatement: handle = the statement text, dataset
+        schema from analysis alone.  The result is Any-wrapped, as the
+        arrow implementations emit it.  ClosePreparedStatement: nothing
+        to release."""
         body = bytes(action.body.to_pybytes()) if action.body else b""
         if action.type == "CreatePreparedStatement":
             parsed = fsql.unpack_any(body)
@@ -211,14 +189,11 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
             sql = fsql.parse_action_create_prepared_statement_request(parsed[1])
             schema_bytes = b""
             try:
-                # analysis-only: Spark schema → Arrow schema, serialized
-                # as an IPC-encapsulated message per the spec
-                from pyspark.sql.pandas.types import to_arrow_schema
-
-                df = self._executor(sql)
-                schema_bytes = to_arrow_schema(df.schema).serialize().to_pybytes()
+                # serialized as an IPC-encapsulated message per the spec
+                schema = to_arrow_schema(self._statements.build(sql).schema)
+                schema_bytes = schema.serialize().to_pybytes()
             except Exception:
-                pass  # schema optional; execute still works
+                pass  # schema optional (placeholders do not analyze)
             yield _flight.Result(
                 pa.py_buffer(
                     fsql.action_create_prepared_statement_result(
@@ -234,123 +209,57 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
             )
 
     def do_put(self, context, descriptor, reader, writer):
-        """Write path, two envelopes:
+        """Three FlightSQL commands and one legacy envelope:
 
-        - FlightSQL ``CommandStatementUpdate``: the SQL DML dialect
-          (INSERT/UPDATE/DELETE/ERASE) runs as one engine transaction;
-          the app-metadata response is a ``DoPutUpdateResult`` (-1 =
-          count unknown — DML compiles against the pre-tx snapshot,
-          counting would double-execute it);
+        - ``CommandPreparedStatementQuery``: the stream carries one
+          record batch of parameter values; the reply's app metadata
+          is the updated (bound) handle;
+        - ``CommandStatementUpdate`` / ``CommandPreparedStatementUpdate``
+          (values bound from the stream): the SQL DML dialect runs as
+          one engine transaction; the reply is a ``DoPutUpdateResult``
+          of -1 (count unknown — counting would double-execute);
         - legacy JSON ``{"table": ..., "tx_time": ...?}``: the Arrow
           stream commits atomically as one submit_tx Put."""
-        import json
-
-        if self._engine is None:
-            raise _flight.FlightServerError(
-                "this server is read-only (no engine attached)"
-            )
-        from core2_spark import flightsql_proto as fsql
-        from core2_spark.engine import Put
-
         parsed = fsql.unpack_any(descriptor.command)
-        if parsed is not None:
-            name, payload = parsed
-            if name == "CommandPreparedStatementQuery":
-                # parameter binding (the ADBC flow for `... WHERE x = ?`):
-                # the stream carries one record batch of parameter
-                # values; the server is stateless, so the reply's app
-                # metadata returns an UPDATED handle — the statement
-                # text with the values substituted as SQL literals.
-                handle = fsql.parse_prepared_statement_handle(payload)
-                params = reader.read_all()
-                bound = _bind_parameters(handle.decode(), params)
-                writer.write(
-                    pa.py_buffer(
-                        fsql.do_put_prepared_statement_result(bound.encode())
-                    )
-                )
-                return
-            if name == "CommandStatementUpdate":
-                sql = fsql.parse_statement_update(payload)
-                reader.read_all()  # drain the (empty) bound-params stream
-            elif name == "CommandPreparedStatementUpdate":
-                params = reader.read_all()
-                sql = _bind_parameters(
-                    fsql.parse_prepared_statement_handle(payload).decode(), params
-                )
-            else:
-                raise _flight.FlightServerError(
-                    f"unsupported FlightSQL DoPut command {name}"
-                )
-            self._engine.sql_dml(sql)
-            writer.write(pa.py_buffer(fsql.do_put_update_result(-1)))
+        if parsed is None:
+            engine = self._statements.engine
+            from core2_spark.engine import Put
+
+            spec = json.loads(descriptor.command.decode())
+            rows = engine.spark.createDataFrame(reader.read_all())
+            engine.submit_tx([Put(spec["table"], rows)], tx_time=spec.get("tx_time"))
             return
+        name, payload = parsed
+        values = _first_row(reader.read_all())
+        if name == "CommandPreparedStatementQuery":
+            handle = fsql.parse_prepared_statement_handle(payload).decode()
+            bound = bind(handle, values, "?")
+            writer.write(
+                pa.py_buffer(fsql.do_put_prepared_statement_result(bound.encode()))
+            )
+            return
+        if name == "CommandStatementUpdate":
+            sql = fsql.parse_statement_update(payload)
+        elif name == "CommandPreparedStatementUpdate":
+            sql = fsql.parse_prepared_statement_handle(payload).decode()
+        else:
+            raise _flight.FlightServerError(
+                f"unsupported FlightSQL DoPut command {name}"
+            )
+        self._statements.engine.sql_dml(bind(sql, values, "?"))
+        writer.write(pa.py_buffer(fsql.do_put_update_result(-1)))
 
-        spec = json.loads(descriptor.command.decode())
-        table = reader.read_all()
-        rows = self._engine.spark.createDataFrame(table.to_pandas())
-        self._engine.submit_tx(
-            [Put(spec["table"], rows)], tx_time=spec.get("tx_time")
-        )
 
-
-def _bind_parameters(sql: str, params: pa.Table) -> str:
-    """Substitute ``?`` placeholders (in order, outside string
-    literals) with the first row of ``params`` rendered as SQL
-    literals.  FlightSQL binds parameters as an Arrow record batch;
-    with a stateless handle the bound statement IS the new handle."""
-    if params is None or params.num_rows == 0 or params.num_columns == 0:
-        return sql
-    row = [col[0].as_py() for col in params.columns]
-
-    def lit(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, (int, float)):
-            return repr(v)
-        if isinstance(v, (bytes, bytearray)):
-            return "X'" + bytes(v).hex() + "'"
-        return "'" + str(v).replace("'", "''") + "'"
-
-    out: list[str] = []
-    i, n, p = 0, len(sql), 0
-    while i < n:
-        c = sql[i]
-        if c == "'":  # skip string literals ('' escapes)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if c == "?" and p < len(row):
-            out.append(lit(row[p]))
-            p += 1
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+def _fetch(client, command: bytes) -> pa.Table:
+    """GetFlightInfo → endpoint ticket → DoGet."""
+    info = client.get_flight_info(_flight.FlightDescriptor.for_command(command))
+    return client.do_get(info.endpoints[0].ticket).read_all()
 
 
 def fetch_sql(location: str, sql: str) -> pa.Table:
     """Client helper: run SQL against a SqlFlightServer and return the
     Arrow result (what a Flight-speaking BI tool does under the hood)."""
-    client = _flight.connect(location)
-    try:
-        info = client.get_flight_info(
-            _flight.FlightDescriptor.for_command(sql.encode())
-        )
-        return client.do_get(info.endpoints[0].ticket).read_all()
-    finally:
-        client.close()
+    return fetch_flightsql(location, sql.encode())
 
 
 def fetch_flightsql(location: str, command: bytes) -> pa.Table:
@@ -360,12 +269,29 @@ def fetch_flightsql(location: str, command: bytes) -> pa.Table:
     a stock ADBC/JDBC FlightSQL driver performs."""
     client = _flight.connect(location)
     try:
-        info = client.get_flight_info(
-            _flight.FlightDescriptor.for_command(command)
-        )
-        return client.do_get(info.endpoints[0].ticket).read_all()
+        return _fetch(client, command)
     finally:
         client.close()
+
+
+def _prepare(client, sql: str) -> dict:
+    """CreatePreparedStatement → ``{"handle", "dataset_schema"}``."""
+    action = _flight.Action(
+        "CreatePreparedStatement", fsql.action_create_prepared_statement_request(sql)
+    )
+    results = list(client.do_action(action))
+    parsed = fsql.unpack_any(bytes(results[0].body.to_pybytes()))
+    assert parsed is not None and parsed[0] == "ActionCreatePreparedStatementResult"
+    return fsql.parse_action_create_prepared_statement_result(parsed[1])
+
+
+def _execute_and_close(client, handle: bytes) -> pa.Table:
+    table = _fetch(client, fsql.command_prepared_statement_query(handle))
+    action = _flight.Action(
+        "ClosePreparedStatement", fsql.action_close_prepared_statement_request(handle)
+    )
+    list(client.do_action(action))
+    return table
 
 
 def prepare_and_fetch(location: str, sql: str) -> tuple[pa.Table, pa.Schema | None]:
@@ -375,41 +301,15 @@ def prepare_and_fetch(location: str, sql: str) -> tuple[pa.Table, pa.Schema | No
     CommandPreparedStatementQuery with the handle → GetFlightInfo →
     DoGet → ClosePreparedStatement.  Returns (result table, dataset
     schema advertised at prepare time — None if the server omitted it)."""
-    from core2_spark import flightsql_proto as fsql
-
     client = _flight.connect(location)
     try:
-        results = list(
-            client.do_action(
-                _flight.Action(
-                    "CreatePreparedStatement",
-                    fsql.action_create_prepared_statement_request(sql),
-                )
-            )
-        )
-        parsed = fsql.unpack_any(bytes(results[0].body.to_pybytes()))
-        assert parsed is not None and parsed[0] == "ActionCreatePreparedStatementResult"
-        res = fsql.parse_action_create_prepared_statement_result(parsed[1])
+        res = _prepare(client, sql)
         schema = (
             pa.ipc.read_schema(pa.py_buffer(res["dataset_schema"]))
             if res["dataset_schema"]
             else None
         )
-        info = client.get_flight_info(
-            _flight.FlightDescriptor.for_command(
-                fsql.command_prepared_statement_query(res["handle"])
-            )
-        )
-        table = client.do_get(info.endpoints[0].ticket).read_all()
-        list(
-            client.do_action(
-                _flight.Action(
-                    "ClosePreparedStatement",
-                    fsql.action_close_prepared_statement_request(res["handle"]),
-                )
-            )
-        )
-        return table, schema
+        return _execute_and_close(client, res["handle"]), schema
     finally:
         client.close()
 
@@ -420,24 +320,12 @@ def prepare_bind_fetch(location: str, sql: str, params: list) -> pa.Table:
     parameter values against the handle, read the updated handle from
     the app metadata, then execute it — byte-for-byte the stock ADBC
     sequence for ``SELECT ... WHERE x = ?``."""
-    from core2_spark import flightsql_proto as fsql
-
     client = _flight.connect(location)
     try:
-        results = list(
-            client.do_action(
-                _flight.Action(
-                    "CreatePreparedStatement",
-                    fsql.action_create_prepared_statement_request(sql),
-                )
-            )
-        )
-        parsed = fsql.unpack_any(bytes(results[0].body.to_pybytes()))
-        res = fsql.parse_action_create_prepared_statement_result(parsed[1])
-
+        handle = _prepare(client, sql)["handle"]
         batch = pa.table({f"p{i}": [v] for i, v in enumerate(params)})
         desc = _flight.FlightDescriptor.for_command(
-            fsql.command_prepared_statement_query(res["handle"])
+            fsql.command_prepared_statement_query(handle)
         )
         writer, meta_reader = client.do_put(desc, batch.schema)
         writer.write_table(batch)
@@ -447,22 +335,7 @@ def prepare_bind_fetch(location: str, sql: str, params: list) -> pa.Table:
             bytes(ack.to_pybytes())
         )
         writer.close()
-
-        info = client.get_flight_info(
-            _flight.FlightDescriptor.for_command(
-                fsql.command_prepared_statement_query(bound_handle)
-            )
-        )
-        table = client.do_get(info.endpoints[0].ticket).read_all()
-        list(
-            client.do_action(
-                _flight.Action(
-                    "ClosePreparedStatement",
-                    fsql.action_close_prepared_statement_request(bound_handle),
-                )
-            )
-        )
-        return table
+        return _execute_and_close(client, bound_handle)
     finally:
         client.close()
 
@@ -471,8 +344,6 @@ def put_table(
     location: str, table_name: str, table: pa.Table, tx_time: str | None = None
 ) -> None:
     """Client helper: upload an Arrow table as one engine transaction."""
-    import json
-
     client = _flight.connect(location)
     try:
         desc = _flight.FlightDescriptor.for_command(

@@ -2,33 +2,32 @@
 upstream core2 ships an HTTP server module alongside pgwire/Flight;
 SURVEY.md §3 client boundary).
 
-One read surface, two encodings:
+A protocol codec over ``service``: one JSON body parser, one error
+path and one result encoder serve every route, and every query takes
+the one path build → guard (``df_to_arrow`` executes it once).
 
-- ``POST /query`` with JSON body ``{"sql": "..."}`` →
-  - ``Accept: application/vnd.apache.arrow.stream`` → Arrow IPC
-    stream bytes (the zero-copy path a data client wants),
-  - anything else → JSON ``{"columns": [...], "rows": [[...], ...]}``
-    (the curl/browser path);
+- ``POST /query`` with ``{"sql": "...", "basis": token?}`` → the
+  result, at the snapshot the optional basis token names;
+- ``POST /xtql`` with ``{"query": [<pipeline ops>], "basis": token?}``
+  → the result of an XTQL pipeline (the xtql.py dict representation);
 - ``POST /tx`` with ``{"statements": ["...", ...], "tx_time": ...?}``
   → the statements run as ONE engine transaction via
-  ``Engine.sql_dml_many`` (requires an attached engine); response
-  carries the committed transaction time;
-- ``GET /tables`` → the table catalog (requires an attached engine);
-- ``GET /basis`` → the current log head serialized as a portable
-  basis token; ``POST /query`` accepts an optional ``"basis"`` field
-  carrying such a token, so a client can pin one snapshot and run
-  many queries against it across requests — the reference's
+  ``Engine.sql_dml_many``; the response carries the committed
+  transaction time;
+- ``GET /tables`` → the table catalog;
+- ``GET /basis`` → the current log head as a portable basis token, so
+  a client can pin one snapshot across requests — the reference's
   pass-a-basis contract over HTTP;
 - ``GET /changes?table=t&since=...[&until=...]`` → the CDC feed
-  (``Snapshot.changes``) for that window, Arrow IPC or JSON by
-  ``Accept`` — an HTTP consumer can tail the transaction log with
-  nothing but a cursor over its last-seen system time.
+  (``Snapshot.changes``) for that window — an HTTP consumer can tail
+  the transaction log with a cursor over its last-seen system time.
 
-Like the Flight server, HTTP is a RESULT boundary: the
-``max_result_rows`` guard refuses to materialize unreduced scans on
-the driver.  The temporal dialect flows through unchanged since
-execution goes through the supplied executor (typically
-``Snapshot.sql``).
+Results are an Arrow IPC stream when the request's ``Accept`` names
+``application/vnd.apache.arrow.stream``, else JSON ``{"columns": [...],
+"rows": [[...], ...]}``.  Every route but ``/query`` needs an attached
+engine.  Failures are 400s with ``{"error": message, "sqlstate": code}``
+(``service.error``), and the ``max_result_rows`` guard refuses to
+materialize unreduced scans on the driver.
 """
 
 from __future__ import annotations
@@ -37,11 +36,13 @@ import json
 import threading
 from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import parse_qs, urlparse
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from core2_spark.flight_server import df_to_arrow
+from core2_spark import service
+from core2_spark.service import Statements, df_to_arrow
 
 ARROW_MIME = "application/vnd.apache.arrow.stream"
 
@@ -73,10 +74,7 @@ class SqlHttpServer:
         max_result_rows: int = 1_000_000,
         engine=None,
     ):
-        self._executor = executor
-        self._max_result_rows = max_result_rows
-        self._engine = engine
-        outer = self
+        statements = Statements(executor, engine)
 
         class Handler(BaseHTTPRequestHandler):
             def log_message(self, fmt, *args):  # quiet test output
@@ -89,144 +87,80 @@ class SqlHttpServer:
                 self.end_headers()
                 self.wfile.write(body)
 
-            def _error(self, code: int, message: str) -> None:
-                self._send(code, json.dumps({"error": message}).encode(), "application/json")
+            def _send_json(self, code: int, obj) -> None:
+                self._send(code, json.dumps(obj).encode(), "application/json")
+
+            def _send_result(self, df: DataFrame) -> None:
+                table = df_to_arrow(df, max_result_rows)
+                if ARROW_MIME in self.headers.get("Accept", ""):
+                    self._send(200, _table_to_ipc(table), ARROW_MIME)
+                else:
+                    self._send(200, _table_to_json(table), "application/json")
+
+            def _body(self, key: str, kind: type = str) -> dict:
+                """The JSON request body; ``key`` must hold a non-empty
+                ``kind``."""
+                try:
+                    n = int(self.headers.get("Content-Length", "0"))
+                    spec = json.loads(self.rfile.read(n).decode())
+                    value = spec[key]
+                except (ValueError, KeyError, TypeError) as exc:
+                    raise ValueError(f"bad request body: {exc!r}") from exc
+                if not isinstance(value, kind) or not value:
+                    raise ValueError(f"bad request body: {key!r} must be a non-empty {kind.__name__}")
+                return spec
+
+            def _route(self, routes: dict) -> None:
+                url = urlparse(self.path)
+                handle = routes.get(url.path)
+                if handle is None:
+                    return self._send_json(404, {"error": f"no route {self.path}"})
+                try:
+                    handle(self, parse_qs(url.query))
+                except Exception as exc:
+                    sqlstate, message = service.error(exc)
+                    self._send_json(400, {"error": message, "sqlstate": sqlstate})
 
             def do_GET(self):
-                from urllib.parse import parse_qs, urlparse
-
-                parsed = urlparse(self.path)
-                if parsed.path == "/changes":
-                    return self._do_changes(parse_qs(parsed.query))
-                if parsed.path == "/basis":
-                    if outer._engine is None:
-                        return self._error(400, "no engine attached")
-                    from core2_spark.basis import basis_to_json
-
-                    token = basis_to_json(outer._engine.db().basis)
-                    return self._send(
-                        200,
-                        json.dumps({"basis": token}).encode(),
-                        "application/json",
-                    )
-                if parsed.path != "/tables":
-                    return self._error(404, f"no route {self.path}")
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                body = json.dumps(
-                    {"tables": sorted(outer._engine._all_tables())}
-                ).encode()
-                self._send(200, body, "application/json")
-
-            def _do_changes(self, params: dict) -> None:
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                try:
-                    table = params["table"][0]
-                    since = params["since"][0]
-                except (KeyError, IndexError):
-                    return self._error(
-                        400, "required query params: table, since (until optional)"
-                    )
-                until = params.get("until", [None])[0]
-                try:
-                    feed = outer._engine.db().changes(
-                        table, since=since, until=until
-                    )
-                    result = df_to_arrow(feed, outer._max_result_rows)
-                except Exception as exc:
-                    return self._error(400, str(exc) or repr(exc))
-                if ARROW_MIME in self.headers.get("Accept", ""):
-                    self._send(200, _table_to_ipc(result), ARROW_MIME)
-                else:
-                    self._send(200, _table_to_json(result), "application/json")
+                self._route(GET)
 
             def do_POST(self):
-                if self.path == "/tx":
-                    return self._do_tx()
-                if self.path == "/xtql":
-                    return self._do_xtql()
-                if self.path != "/query":
-                    return self._error(404, f"no route {self.path}")
-                try:
-                    n = int(self.headers.get("Content-Length", "0"))
-                    spec = json.loads(self.rfile.read(n).decode())
-                    sql = spec["sql"]
-                except (ValueError, KeyError) as exc:
-                    return self._error(400, f"bad request body: {exc!r}")
-                try:
-                    token = spec.get("basis")
-                    if token is not None:
-                        if outer._engine is None:
-                            return self._error(
-                                400, "basis tokens need an attached engine"
-                            )
-                        from core2_spark.basis import basis_from_json
+                self._route(POST)
 
-                        df = outer._engine.db(basis_from_json(token)).sql(sql)
-                    else:
-                        df = outer._executor(sql)
-                    table = df_to_arrow(df, outer._max_result_rows)
-                except Exception as exc:  # surface executor errors as 400s
-                    return self._error(400, repr(exc))
-                if ARROW_MIME in self.headers.get("Accept", ""):
-                    self._send(200, _table_to_ipc(table), ARROW_MIME)
-                else:
-                    self._send(200, _table_to_json(table), "application/json")
+            def query(self, _params):
+                spec = self._body("sql")
+                self._send_result(statements.build(spec["sql"], spec.get("basis")))
 
-            def _do_xtql(self):
-                """``POST /xtql`` with ``{"query": [<pipeline ops>],
-                "basis": token?}`` — the reference serves its pipeline
-                language over HTTP as JSON; the ops are exactly the
-                xtql.py dict representation.  Same dual Arrow/JSON
-                response negotiation as /query."""
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                try:
-                    n = int(self.headers.get("Content-Length", "0"))
-                    spec = json.loads(self.rfile.read(n).decode())
-                    pipeline = spec["query"]
-                    assert isinstance(pipeline, list) and pipeline
-                except (ValueError, KeyError, AssertionError) as exc:
-                    return self._error(400, f"bad request body: {exc!r}")
-                try:
-                    token = spec.get("basis")
-                    if token is not None:
-                        from core2_spark.basis import basis_from_json
+            def xtql(self, _params):
+                spec = self._body("query", list)
+                snap = statements.snapshot(spec.get("basis"))
+                self._send_result(snap.xtql(spec["query"]))
 
-                        snap = outer._engine.db(basis_from_json(token))
-                    else:
-                        snap = outer._engine.db()
-                    table = df_to_arrow(
-                        snap.xtql(pipeline), outer._max_result_rows
-                    )
-                except Exception as exc:
-                    return self._error(400, repr(exc))
-                if ARROW_MIME in self.headers.get("Accept", ""):
-                    self._send(200, _table_to_ipc(table), ARROW_MIME)
-                else:
-                    self._send(200, _table_to_json(table), "application/json")
+            def tx(self, _params):
+                spec = self._body("statements", list)
+                basis = statements.engine.sql_dml_many(
+                    spec["statements"], tx_time=spec.get("tx_time")
+                )
+                self._send_json(200, {"tx_time": basis.current_time.isoformat()})
 
-            def _do_tx(self):
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                try:
-                    n = int(self.headers.get("Content-Length", "0"))
-                    spec = json.loads(self.rfile.read(n).decode())
-                    statements = spec["statements"]
-                    assert isinstance(statements, list) and statements
-                except (ValueError, KeyError, AssertionError) as exc:
-                    return self._error(400, f"bad request body: {exc!r}")
-                try:
-                    basis = outer._engine.sql_dml_many(
-                        statements, tx_time=spec.get("tx_time")
-                    )
-                except Exception as exc:
-                    return self._error(400, str(exc) or repr(exc))
-                body = json.dumps(
-                    {"tx_time": basis.current_time.isoformat()}
-                ).encode()
-                self._send(200, body, "application/json")
+            def changes(self, params):
+                if "table" not in params or "since" not in params:
+                    raise ValueError("required query params: table, since (until optional)")
+                feed = statements.engine.db().changes(
+                    params["table"][0],
+                    since=params["since"][0],
+                    until=params.get("until", [None])[0],
+                )
+                self._send_result(feed)
+
+            def basis(self, _params):
+                self._send_json(200, {"basis": statements.head_token()})
+
+            def tables(self, _params):
+                self._send_json(200, {"tables": sorted(statements.engine._all_tables())})
+
+        GET = {"/changes": Handler.changes, "/basis": Handler.basis, "/tables": Handler.tables}
+        POST = {"/query": Handler.query, "/xtql": Handler.xtql, "/tx": Handler.tx}
 
         self._httpd = ThreadingHTTPServer(("127.0.0.1", port), Handler)
         self.port = self._httpd.server_address[1]

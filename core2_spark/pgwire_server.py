@@ -2,8 +2,14 @@
 README.adoc:14 context — upstream core2 ships a `pgwire.clj` module;
 SURVEY.md §3 client boundary).
 
-The simple-query subset of the public protocol, enough for a psql-/
-driver-shaped client to connect and run queries:
+A protocol codec over ``service``: every statement takes the one path
+classify → bind → build → guard.  Queries execute once
+(``df_to_arrow``); DML and maintenance statements run through
+``Engine.sql_dml`` and answer with a CommandComplete tag (row counts
+unreported — DML compiles against the pre-tx snapshot, counting would
+double-execute it — matching the FlightSQL boundary's -1).
+
+The simple-query subset of the public protocol:
 
 - SSLRequest → refused with 'N' (plaintext only, in-container use);
 - StartupMessage (protocol 3.0) → AuthenticationOk, ParameterStatus
@@ -11,24 +17,24 @@ driver-shaped client to connect and run queries:
 - Query ('Q') → RowDescription / DataRow* / CommandComplete /
   ReadyForQuery, all values in text format with proper type OIDs for
   the common Spark types;
-- errors → ErrorResponse + ReadyForQuery (the session survives);
+- errors → ErrorResponse carrying the statement's SQLSTATE
+  (``service.error``) + ReadyForQuery (the session survives);
 - Terminate ('X') → close.
 
-Extended query protocol (round-5): Parse ('P') / Bind ('B') /
-Describe ('D') / Execute ('E') / Close ('C') / Flush ('H') / Sync
-('S') — the flow real drivers (psycopg, JDBC) send even for plain
-SELECTs.  Named and unnamed statements/portals, text-format results,
-text-format parameters substituted as SQL literals at Bind time
-(``$1``..``$n``), NoData/EmptyQueryResponse where the spec requires.
-After an error in extended mode the session skips messages until Sync
-(per the spec), so a failed statement never desynchronizes the
-stream.  Execute's max-row count is not honored (all rows stream, no
-PortalSuspended) — stock drivers send 0 (= no limit).
+Extended query protocol: Parse ('P') / Bind ('B') / Describe ('D') /
+Execute ('E') / Close ('C') / Flush ('H') / Sync ('S') — the flow real
+drivers (psycopg, JDBC) send even for plain SELECTs.  Named and
+unnamed statements/portals, text-format results, text-format
+parameters bound to ``$1``..``$n`` at Bind time (``service.bind``),
+NoData/EmptyQueryResponse where the spec requires.  Describe on a
+statement answers from the analyzed schema; Describe and Execute on a
+portal share one execution.  After an error in extended mode the
+session skips messages until Sync (per the spec).  Execute's max-row
+count is not honored (all rows stream, no PortalSuspended) — stock
+drivers send 0 (= no limit).
 
 COPY and auth methods beyond trust are not implemented — the same
-"preliminary driver support" tier as the Flight SQL boundary.  Like
-Flight/HTTP, pgwire is a RESULT boundary with the ``max_result_rows``
-guard.
+"preliminary driver support" tier as the Flight SQL boundary.
 """
 
 from __future__ import annotations
@@ -40,7 +46,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from core2_spark.flight_server import df_to_arrow
+from core2_spark import service
+from core2_spark.service import Statements, bind, classify, df_to_arrow
 
 # PostgreSQL type OIDs for the text-format encoding of Spark types —
 # keyed by BOTH Spark simpleString names (bigint, double) and Arrow
@@ -93,16 +100,7 @@ class PgWireServer:
         max_result_rows: int = 1_000_000,
         engine=None,
     ):
-        outer_executor = executor
-        outer_max = max_result_rows
-        outer_engine = engine
-
-        # create/refresh/drop: materialized-view maintenance — in this
-        # dialect those verbs exist only for MATERIALIZED VIEW, and
-        # Engine.sql_dml rejects anything else loudly
-        _DML = ("insert", "update", "delete", "erase", "merge", "patch",
-                "assert", "create", "refresh", "drop", "vacuum",
-                "optimize")
+        statements = Statements(executor, engine)
 
         class Handler(socketserver.BaseRequestHandler):
             def _send(self, data: bytes) -> None:
@@ -120,10 +118,11 @@ class PgWireServer:
             def _ready(self) -> None:
                 self._send(_msg(b"Z", b"I"))
 
-            def _error(self, message: str) -> None:
+            def _error(self, exc: Exception) -> None:
+                sqlstate, message = service.error(exc)
                 payload = (
                     b"S" + _cstr("ERROR")
-                    + b"C" + _cstr("XX000")
+                    + b"C" + _cstr(sqlstate)
                     + b"M" + _cstr(message)
                     + b"\x00"
                 )
@@ -149,7 +148,7 @@ class PgWireServer:
                             self._send(_msg(b"S", _cstr(k) + _cstr(v)))
                         self._ready()
                         return True
-                    self._error(f"unsupported protocol code {code}")
+                    self._error(ValueError(f"unsupported protocol code {code}"))
                     return False
 
             def _row_description_raw(self, names_types) -> bytes:
@@ -193,44 +192,23 @@ class PgWireServer:
                             row += struct.pack("!i", len(b)) + b
                     self._send(_msg(b"D", row))
 
-            @staticmethod
-            def _dml_tag(sql: str) -> str | None:
-                """CommandComplete tag if ``sql`` is a DML statement
-                the engine runs at index time, else None.  Row counts
-                are unreported (DML compiles against the pre-tx
-                snapshot; counting would double-execute), matching the
-                FlightSQL boundary's -1 convention."""
-                head = sql.lstrip().split(None, 1)
-                word = head[0].lower() if head else ""
-                if word not in _DML:
-                    return None
-                return {"insert": "INSERT 0 0", "update": "UPDATE 0",
-                        "delete": "DELETE 0", "erase": "ERASE 0",
-                        "merge": "MERGE 0", "patch": "PATCH 0",
-                        "assert": "ASSERT",
-                        "create": "CREATE MATERIALIZED VIEW",
-                        "refresh": "REFRESH MATERIALIZED VIEW",
-                        "drop": "DROP MATERIALIZED VIEW",
-                        "vacuum": "VACUUM",
-                        "optimize": "OPTIMIZE"}[word]
-
-            def _run_query(self, sql: str) -> None:
-                sql = sql.strip().rstrip(";")
+            def _run(self, sql: str, portal: dict | None = None) -> None:
+                """Run one statement: a write answers with its tag, a
+                query streams its rows (a portal's rows were fetched
+                by Describe already, if it came first)."""
                 if not sql:
                     self._send(_msg(b"I", b""))  # EmptyQueryResponse
                     return
-                tag = self._dml_tag(sql)
+                tag = classify(sql)
                 if tag is not None:
-                    if outer_engine is None:
-                        raise ValueError(
-                            "DML over pgwire needs an attached engine "
-                            "(PgWireServer(engine=...))"
-                        )
-                    outer_engine.sql_dml(sql)
+                    statements.engine.sql_dml(sql)
                     self._send(_msg(b"C", _cstr(tag)))
                     return
-                table = df_to_arrow(outer_executor(sql), outer_max)
-                self._send(self._row_description(table))
+                if portal is None:
+                    table = df_to_arrow(statements.build(sql), max_result_rows)
+                    self._send(self._row_description(table))
+                else:
+                    table = self._portal_table(portal)
                 self._send_data_rows(table)
                 self._send(_msg(b"C", _cstr(f"SELECT {table.num_rows}")))
 
@@ -239,12 +217,6 @@ class PgWireServer:
             def _read_cstr(body: bytes, i: int) -> tuple[str, int]:
                 j = body.index(b"\x00", i)
                 return body[i:j].decode(), j + 1
-
-            @staticmethod
-            def _pg_literal(raw: bytes | None) -> str:
-                if raw is None:
-                    return "NULL"
-                return "'" + raw.decode().replace("'", "''") + "'"
 
             def _portal_table(self, portal: dict):
                 """Execute the portal's query once, lazily: Describe
@@ -255,9 +227,9 @@ class PgWireServer:
                 if "table" not in portal:
                     sql = portal["sql"]
                     portal["table"] = (
-                        None
-                        if not sql or self._dml_tag(sql) is not None
-                        else df_to_arrow(outer_executor(sql), outer_max)
+                        df_to_arrow(statements.build(sql), max_result_rows)
+                        if sql and classify(sql) is None
+                        else None
                     )
                 return portal["table"]
 
@@ -279,20 +251,16 @@ class PgWireServer:
                     i += 2 + 2 * nfmt  # param format codes (text assumed)
                     (nparams,) = struct.unpack_from("!h", body, i)
                     i += 2
-                    params: list[bytes | None] = []
+                    params: list[str | None] = []
                     for _ in range(nparams):
                         (ln,) = struct.unpack_from("!i", body, i)
                         i += 4
                         if ln == -1:
                             params.append(None)
                         else:
-                            params.append(body[i : i + ln])
+                            params.append(body[i : i + ln].decode())
                             i += ln
-                    sql = self._stmts[stmt]
-                    # substitute $n with SQL literals, highest first so
-                    # $12 never matches inside $1
-                    for n in range(len(params), 0, -1):
-                        sql = sql.replace(f"${n}", self._pg_literal(params[n - 1]))
+                    sql = bind(self._stmts[stmt], params, "$")
                     self._portals[portal] = {"sql": sql}
                     self._send(_msg(b"2", b""))  # BindComplete
                     return
@@ -305,13 +273,13 @@ class PgWireServer:
                         # parameterless after Bind-time substitution
                         self._send(_msg(b"t", struct.pack("!h", 0)))
                         sql = self._stmts[name]
-                        if not sql:
+                        if not sql or classify(sql) is not None:
                             self._send(_msg(b"n", b""))  # NoData
                         else:
                             # ANALYSIS ONLY: Describe must not execute
                             # the query — Spark's analyzed schema gives
                             # the row description for free
-                            df = outer_executor(sql)
+                            df = statements.build(sql)
                             self._send(
                                 self._row_description_raw(
                                     [
@@ -335,22 +303,7 @@ class PgWireServer:
                     portal = self._portals.get(name)
                     if portal is None:
                         raise ValueError(f"unknown portal {name!r}")
-                    dml = self._dml_tag(portal["sql"]) if portal["sql"] else None
-                    if dml is not None:
-                        if outer_engine is None:
-                            raise ValueError(
-                                "DML over pgwire needs an attached engine "
-                                "(PgWireServer(engine=...))"
-                            )
-                        outer_engine.sql_dml(portal["sql"])
-                        self._send(_msg(b"C", _cstr(dml)))
-                        return
-                    table = self._portal_table(portal)
-                    if table is None:
-                        self._send(_msg(b"I", b""))  # EmptyQueryResponse
-                        return
-                    self._send_data_rows(table)
-                    self._send(_msg(b"C", _cstr(f"SELECT {table.num_rows}")))
+                    self._run(portal["sql"], portal)
                     return
                 if tag == b"C":  # Close statement/portal
                     kind, body_rest = body[:1], body[1:]
@@ -385,21 +338,19 @@ class PgWireServer:
                         if tag == b"Q":
                             sql = body.rstrip(b"\x00").decode()
                             try:
-                                self._run_query(sql)
+                                self._run(sql.strip().rstrip(";"))
                             except Exception as exc:
-                                # str() carries the analyzer message;
-                                # pyspark exception reprs are often empty
-                                self._error(str(exc) or repr(exc))
+                                self._error(exc)
                             self._ready()
                             continue
                         if tag in (b"P", b"B", b"D", b"E", b"C"):
                             try:
                                 self._handle_extended(tag, body)
                             except Exception as exc:
-                                self._error(str(exc) or repr(exc))
+                                self._error(exc)
                                 skip_to_sync = True
                             continue
-                        self._error(f"unsupported message {tag!r}")
+                        self._error(ValueError(f"unsupported message {tag!r}"))
                         self._ready()
                 except (ConnectionError, OSError):
                     return

@@ -62,7 +62,7 @@ _KEYWORDS = {
 _TOKEN_RE = re.compile(
     r"""
       (?P<ws>\s+|--[^\n]*|/\*.*?\*/)
-    | (?P<str>'(?:[^']|'')*')
+    | (?P<str>'(?:[^'\\]|\\.|'')*')
     | (?P<qid>"(?:[^"]|"")*"|`(?:[^`]|``)*`)
     | (?P<word>[A-Za-z_][A-Za-z0-9_$]*)
     | (?P<other>.)

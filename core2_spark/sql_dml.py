@@ -132,6 +132,10 @@ def parse_records(text: str) -> list[dict]:
                     continue
                 i += 1
                 return "".join(out)
+            if text[i] == "\\" and i + 1 < n and text[i + 1] in "'\\":
+                out.append(text[i + 1])  # \' and \\ escapes (Literal.sql)
+                i += 2
+                continue
             out.append(text[i])
             i += 1
         raise err("unterminated string")
@@ -193,15 +197,22 @@ def parse_records(text: str) -> list[dict]:
                     i += 1
                     return obj
                 raise err("expected ',' or '}' in nested record")
-        m = re.match(r"-?\d+\.\d+([eE][+-]?\d+)?|-?\d+[eE][+-]?\d+",
+        # Spark's literal spellings too (1.5D, 42L, CAST('NaN' AS DOUBLE)):
+        # what a bound parameter renders as
+        m = re.match(r"(-?\d+\.\d+([eE][+-]?\d+)?|-?\d+[eE][+-]?\d+)[dD]?",
                      text[i:])
         if m:
             i += m.end()
-            return float(m.group(0))
-        m = re.match(r"-?\d+", text[i:])
+            return float(m.group(1))
+        m = re.match(r"(-?\d+)[lL]?", text[i:])
         if m:
             i += m.end()
-            return int(m.group(0))
+            return int(m.group(1))
+        m = re.match(r"CAST\s*\(\s*'(NaN|-?Infinity)'\s+AS\s+DOUBLE\s*\)",
+                     text[i:], re.IGNORECASE)
+        if m:
+            i += m.end()
+            return float(m.group(1))
         m = re.match(r"(TRUE|FALSE|NULL)\b", text[i:], re.IGNORECASE)
         if m:
             i += m.end()
@@ -391,26 +402,10 @@ def records_to_df(spark, records: list[dict], mask_col: str | None = None):
 
 
 def _split_set_clauses(sets: str) -> list[tuple[str, str]]:
-    """Split `a = expr, b = expr` on top-level commas (not inside
-    parentheses or quotes)."""
-    parts, depth, in_str, cur = [], 0, False, []
-    for ch in sets:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-                continue
-        cur.append(ch)
-    parts.append("".join(cur))
+    """Split `a = expr, b = expr` on top-level commas."""
     out = []
-    for p in parts:
-        col, expr = p.split("=", 1)
+    for part in _split_top_level(sets):
+        col, expr = part.split("=", 1)
         out.append((col.strip(), expr.strip()))
     return out
 
@@ -437,31 +432,24 @@ def _split_whens(whens: str) -> list[str]:
     upper = whens.upper()
     parts: list[str] = []
     depth = 0
-    in_str = False
     case_depth = 0
     starts: list[int] = []
-    i = 0
-    while i < len(whens):
-        ch = whens[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif upper[i : i + 4] == "CASE" and _is_word(upper, i, 4):
-                case_depth += 1
-            elif upper[i : i + 3] == "END" and _is_word(upper, i, 3):
-                case_depth = max(0, case_depth - 1)
-            elif (
-                depth == 0
-                and case_depth == 0
-                and upper[i : i + 4] == "WHEN"
-                and _is_word(upper, i, 4)
-            ):
-                starts.append(i)
-        i += 1
+    for i, ch in _unquoted(whens):
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif upper[i : i + 4] == "CASE" and _is_word(upper, i, 4):
+            case_depth += 1
+        elif upper[i : i + 3] == "END" and _is_word(upper, i, 3):
+            case_depth = max(0, case_depth - 1)
+        elif (
+            depth == 0
+            and case_depth == 0
+            and upper[i : i + 4] == "WHEN"
+            and _is_word(upper, i, 4)
+        ):
+            starts.append(i)
     for j, s in enumerate(starts):
         e = starts[j + 1] if j + 1 < len(starts) else len(whens)
         parts.append(whens[s + 4 : e])  # drop the WHEN keyword itself
@@ -1038,23 +1026,34 @@ _MVIEW_AGG = re.compile(
 )
 
 
+_STRING = re.compile(r"'(?:[^'\\]|\\.|'')*'", re.DOTALL)
+
+
+def _unquoted(text: str):
+    """``(index, char)`` of every char outside string literals, which
+    end as Spark lexes them ('' and backslash escapes stay inside)."""
+    i = 0
+    while i < len(text):
+        m = _STRING.match(text, i) if text[i] == "'" else None
+        if m:
+            i = m.end()
+            continue
+        yield i, text[i]
+        i += 1
+
+
 def _split_top_level(text: str) -> list[str]:
     """Split on top-level commas (not inside parens or strings)."""
-    parts, depth, in_str, cur = [], 0, False, []
-    for ch in text:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    parts.append("".join(cur).strip())
+    parts, depth, start = [], 0, 0
+    for i, ch in _unquoted(text):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(text[start:i].strip())
+            start = i + 1
+    parts.append(text[start:].strip())
     return parts
 
 

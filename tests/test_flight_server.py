@@ -304,20 +304,15 @@ def test_parameterized_prepared_statement_binding(spark, engine):
     values against CommandPreparedStatementQuery, get the bound
     handle back in app metadata, execute it.  String escaping and
     NULLs included."""
-    from core2_spark.flight_server import (
-        SqlFlightServer,
-        _bind_parameters,
-        prepare_bind_fetch,
-    )
+    from core2_spark.flight_server import SqlFlightServer, prepare_bind_fetch
+    from core2_spark.service import bind
 
-    # unit: placeholder substitution skips string literals, escapes
-    import pyarrow as pa
-
-    t = pa.table({"a": ["O'Brien"], "b": [42], "c": [None]})
-    bound = _bind_parameters(
-        "SELECT '?' AS lit, ? AS s, ? AS n, ? AS z FROM t", t
+    # unit: placeholder substitution skips string literals; values are
+    # rendered by Spark's Literal.sql (backslash-escaped quotes)
+    bound = bind(
+        "SELECT '?' AS lit, ? AS s, ? AS n, ? AS z FROM t", ["O'Brien", 42, None], "?"
     )
-    assert bound == "SELECT '?' AS lit, 'O''Brien' AS s, 42 AS n, NULL AS z FROM t"
+    assert bound == "SELECT '?' AS lit, 'O\\'Brien' AS s, 42 AS n, NULL AS z FROM t"
 
     v1 = spark.createDataFrame(
         [(1, "AAPL", 100.0), (2, "MSFT", 200.0), (3, "GOOG", 300.0)],
@@ -336,5 +331,148 @@ def test_parameterized_prepared_statement_binding(spark, engine):
             loc, "SELECT id FROM trades WHERE sym = ?", ["AAPL"]
         )
         assert out2.to_pydict() == {"id": [1]}
+    finally:
+        server.shutdown()
+
+
+HOSTILE = "x\\' OR 1=1 --"  # Spark reads \' as an escaped quote
+
+
+def _three_trades(spark, engine):
+    v1 = spark.createDataFrame(
+        [(1, "AAPL", 100.0), (2, "MSFT", 200.0), (3, "GOOG", 300.0)],
+        "id long, sym string, px double",
+    )
+    engine.submit_tx([Put("trades", v1)], tx_time="2024-01-01 00:00:01")
+
+
+def test_flight_prepared_query_binding_is_literal(spark, engine):
+    """A bound value is one literal whatever it contains: a quote
+    escape cannot widen the predicate, NaN/±inf bind as doubles, and a
+    ``?`` inside a literal or inside a value is not a placeholder."""
+    from core2_spark.flight_server import SqlFlightServer, prepare_bind_fetch
+
+    _three_trades(spark, engine)
+    server = SqlFlightServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        loc = f"grpc://127.0.0.1:{server.port}"
+        q = "SELECT id FROM trades WHERE sym = ? ORDER BY id"
+        assert prepare_bind_fetch(loc, q, [HOSTILE]).num_rows == 0
+        assert prepare_bind_fetch(loc, q, ["MSFT"]).to_pydict() == {"id": [2]}
+
+        # Spark orders NaN above every double
+        for value, ids in ((float("nan"), [1, 2, 3]), (float("inf"), [1, 2, 3]),
+                           (float("-inf"), [])):
+            got = prepare_bind_fetch(
+                loc, "SELECT id FROM trades WHERE px < ? ORDER BY id", [value]
+            )
+            assert got.to_pydict() == {"id": ids}, value
+
+        got = prepare_bind_fetch(
+            loc, "SELECT 'it\\'s ?' AS lit, \"?\" AS dq, ? AS a, ? AS b", ["?", HOSTILE]
+        )
+        assert got.to_pylist() == [{"lit": "it's ?", "dq": "?", "a": "?", "b": HOSTILE}]
+    finally:
+        server.shutdown()
+
+
+def test_flight_prepared_update_binding_is_literal(spark, engine):
+    """CommandPreparedStatementUpdate binds its DoPut parameter batch
+    through the same binder: a hostile value deletes nothing."""
+    import pyarrow as pa
+    import pyarrow.flight as fl
+
+    from core2_spark import flightsql_proto as fsql
+    from core2_spark.flight_server import SqlFlightServer, fetch_sql
+
+    _three_trades(spark, engine)
+    server = SqlFlightServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        loc = f"grpc://127.0.0.1:{server.port}"
+
+        def delete_where_sym(value):
+            client = fl.connect(loc)
+            try:
+                desc = fl.FlightDescriptor.for_command(
+                    fsql.command_prepared_statement_update(
+                        b"DELETE FROM trades WHERE sym = ?"
+                    )
+                )
+                params = pa.table({"p0": [value]})
+                writer, reader = client.do_put(desc, params.schema)
+                writer.write_table(params)
+                writer.done_writing()
+                assert fsql.parse_do_put_update_result(reader.read().to_pybytes()) == -1
+                writer.close()
+            finally:
+                client.close()
+
+        def ids():
+            return fetch_sql(loc, "SELECT id FROM trades ORDER BY id").to_pydict()["id"]
+
+        delete_where_sym(HOSTILE)
+        assert ids() == [1, 2, 3]
+        delete_where_sym("GOOG")
+        assert ids() == [1, 2]
+    finally:
+        server.shutdown()
+
+
+def test_flight_reads_through_the_executor_with_engine_attached(spark, engine):
+    """GetFlightInfo executes nothing (row count unknown), and an
+    attached engine does not change what a statement reads: a server
+    whose executor is pinned to a snapshot keeps answering from it
+    after a later commit, on Flight as on HTTP."""
+    import pyarrow.flight as fl
+
+    from core2_spark import flightsql_proto as fsql
+    from core2_spark.flight_server import SqlFlightServer
+    from core2_spark.http_server import SqlHttpServer, http_query
+
+    _three_trades(spark, engine)
+    pinned = engine.db()
+    server = SqlFlightServer(pinned.sql, engine=engine)
+    http = SqlHttpServer(pinned.sql, engine=engine)
+    try:
+        client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+        sql = "SELECT COUNT(*) AS n FROM trades"
+        infos = [
+            client.get_flight_info(fl.FlightDescriptor.for_command(cmd))
+            for cmd in (sql.encode(), fsql.command_statement_query(sql))
+        ]
+        assert [info.total_records for info in infos] == [-1, -1]
+        assert infos[0].schema.names == ["n"]
+
+        more = spark.createDataFrame([(4, "IBM", 400.0)], "id long, sym string, px double")
+        engine.submit_tx([Put("trades", more)], tx_time="2024-02-01 00:00:00")
+
+        for info in infos:
+            got = client.do_get(info.endpoints[0].ticket).read_all()
+            assert got.to_pydict() == {"n": [3]}
+        fresh = client.get_flight_info(fl.FlightDescriptor.for_command(sql.encode()))
+        assert client.do_get(fresh.endpoints[0].ticket).read_all().to_pydict() == {"n": [3]}
+        assert http_query(http.port, sql, arrow=True).to_pydict() == {"n": [3]}
+        assert engine.db().sql(sql).collect()[0]["n"] == 4
+        client.close()
+    finally:
+        server.shutdown()
+        http.shutdown()
+
+
+def test_flight_do_put_keeps_nullable_int_columns(spark, engine):
+    """DoPut hands the Arrow table to Spark directly: a nullable int64
+    column stays bigint with its NULL (a pandas hop made it double)."""
+    import pyarrow as pa
+
+    from core2_spark.flight_server import SqlFlightServer, put_table
+
+    server = SqlFlightServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        loc = f"grpc://127.0.0.1:{server.port}"
+        table = pa.table({"id": [1, 2], "qty": pa.array([5, None], pa.int64())})
+        put_table(loc, "stock", table, tx_time="2024-01-01 00:00:01")
+        df = engine.db().sql("SELECT id, qty FROM stock ORDER BY id")
+        assert dict(df.dtypes)["qty"] == "bigint"
+        assert [tuple(r) for r in df.collect()] == [(1, 5), (2, None)]
     finally:
         server.shutdown()

@@ -34,6 +34,18 @@ def test_parse_records_string_escape_and_arrays():
     assert recs == [{"id": 1, "q": "it's", "tags": ["a", "b"], "xs": [1, 2]}]
 
 
+def test_parse_records_spark_literal_spellings():
+    """What a bound parameter renders as (Spark's Literal.sql)."""
+    recs = parse_records(
+        "{id: 7L, q: 'it\\'s \\\\ ok', px: 1.5D, big: 1.0E20D, "
+        "lo: CAST('-Infinity' AS DOUBLE), ok: true}"
+    )
+    assert recs == [
+        {"id": 7, "q": "it's \\ ok", "px": 1.5, "big": 1e20,
+         "lo": float("-inf"), "ok": True}
+    ]
+
+
 def test_parse_records_date_timestamp():
     recs = parse_records(
         "{id: 1, d: DATE '2024-03-01', ts: TIMESTAMP '2024-03-01 12:30:00'}"

@@ -92,6 +92,7 @@ class MiniPgClient:
                     if chunk
                 )
                 error = fields.get(b"M", "unknown error")
+                self.sqlstate = fields.get(b"C")
         return columns, rows, error
 
     def close(self):
@@ -209,6 +210,7 @@ class ExtendedPgClient(MiniPgClient):
                     if chunk
                 )
                 error = fields.get(b"M", "unknown error")
+                self.sqlstate = fields.get(b"C")
         return tags, columns, rows, error
 
 
@@ -506,3 +508,79 @@ def test_pgwire_patch_statement(spark, engine):
         client.close()
     finally:
         server.shutdown()
+
+
+HOSTILE = "x\\' OR 1=1 --"  # Spark reads \' as an escaped quote
+
+
+def _bound(client, sql: str, params: list):
+    """Parse → Bind → Execute → Sync: (rows, error)."""
+    client.parse("", sql)
+    client.bind("", "", params)
+    client.execute("")
+    _tags, _cols, rows, err = client.sync_and_collect()
+    return rows, err
+
+
+def test_pgwire_bind_is_literal(spark, engine):
+    """Bind renders each value as one Spark literal: a quote escape
+    cannot widen a query's or a DML statement's predicate, and a
+    ``$n`` inside a literal or inside a bound value is not a
+    placeholder."""
+    from core2_spark.pgwire_server import PgWireServer
+
+    v1 = spark.createDataFrame(
+        [(1, "AAPL", 100.0), (2, "MSFT", 200.0), (3, "GOOG", 300.0)],
+        "id long, sym string, px double",
+    )
+    engine.submit_tx([Put("trades", v1)], tx_time="2024-01-01 00:00:01")
+    server = PgWireServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        client = ExtendedPgClient(server.port)
+        q = "SELECT id FROM trades WHERE sym = $1 ORDER BY id"
+        assert _bound(client, q, [HOSTILE]) == ([], None)
+        assert _bound(client, q, ["MSFT"]) == ([["2"]], None)
+        rows, err = _bound(client, "SELECT '$1' AS lit, $2 AS a, $1 AS b", ["$2", "v"])
+        assert err is None and rows == [["$1", "v", "$2"]]
+
+        rows, err = _bound(client, "DELETE FROM trades WHERE sym = $1", [HOSTILE])
+        assert err is None
+        _, rows, _ = client.query("SELECT COUNT(*) AS n FROM trades")
+        assert rows == [["3"]]
+        _, err = _bound(
+            client, "UPDATE trades SET sym = $1, px = $2 WHERE id = $3", ["it's", "NaN", "1"]
+        )
+        assert err is None
+        _, rows, _ = client.query("SELECT id, sym, px FROM trades ORDER BY id")
+        assert rows == [["1", "it's", "nan"], ["2", "MSFT", "200.0"], ["3", "GOOG", "300.0"]]
+        client.close()
+    finally:
+        server.shutdown()
+
+
+def test_unknown_table_sqlstate_agrees_on_pgwire_and_http(spark, engine):
+    """Errors come back classified: the SQLSTATE Spark attaches, the
+    same on both wires (not a hard-coded XX000 or a repr)."""
+    import json
+    import urllib.error
+
+    from core2_spark.http_server import SqlHttpServer, http_query
+    from core2_spark.pgwire_server import PgWireServer
+
+    executor = lambda sql: engine.db().sql(sql)  # noqa: E731
+    pg, http = PgWireServer(executor), SqlHttpServer(executor)
+    try:
+        client = MiniPgClient(pg.port)
+        _, _, err = client.query("SELECT * FROM no_such_table")
+        assert err is not None
+        pg_state = client.sqlstate
+        client.close()
+        with pytest.raises(urllib.error.HTTPError) as raised:
+            http_query(http.port, "SELECT * FROM no_such_table")
+        body = json.loads(raised.value.read())
+        assert raised.value.code == 400
+        assert pg_state == body["sqlstate"] == "42P01"
+        assert "no_such_table" in body["error"]
+    finally:
+        pg.shutdown()
+        http.shutdown()

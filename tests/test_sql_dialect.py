@@ -44,6 +44,11 @@ def test_rewriter_is_tokenizer_aware():
     assert rewrite_temporal_sql(s) == s
     assert find_temporal_tables(s) == set()
 
+    # a backslash-escaped quote (Spark's lexing) does not end the literal
+    s = "SELECT 'x\\' FROM t FOR SYSTEM_TIME ALL --' AS c FROM u"
+    assert rewrite_temporal_sql(s) == s
+    assert find_temporal_tables(s) == set()
+
     # name NOT in table position: untouched
     s2 = "SELECT a FOR FROM t"  # nonsense, but 'a' isn't after FROM/JOIN
     assert rewrite_temporal_sql(s2) == s2

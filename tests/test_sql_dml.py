@@ -342,6 +342,14 @@ def test_merge_parse_errors(spark):
             "MERGE INTO t USING s x ON t.id = x.id "
             "WHEN NOT MATCHED THEN INSERT (a, b) VALUES (1)"
         )
+    # a backslash-escaped quote stays inside its literal: no split
+    p = parse_dml("UPDATE t SET a = 'x\\', b = 1', c = 2 WHERE id = 1")
+    assert p.detail["sets"] == [("a", "'x\\', b = 1'"), ("c", "2")]
+    p = parse_dml(
+        "MERGE INTO t USING s x ON t.id = x.id WHEN MATCHED AND x.v = "
+        "'\\' WHEN MATCHED' THEN DELETE"
+    )
+    assert len(p.detail["clauses"]) == 1
     # a CASE..WHEN inside a SET expression must not split the clause
     p = parse_dml(
         "MERGE INTO t USING s x ON t.id = x.id WHEN MATCHED THEN UPDATE "
