@@ -2495,7 +2495,7 @@ class Snapshot:
 
     # -- §3.1 SQL ------------------------------------------------------
     def sql(self, query: str, **asof) -> DataFrame:
-        """SQL over basis-pinned current-state views of every table.
+        """SQL over basis-pinned views of the tables the statement names.
 
         The SQL:2011 temporal dialect is enabled: table references may
         carry ``FOR SYSTEM_TIME AS OF/FROM..TO/ALL`` (and
@@ -2509,7 +2509,10 @@ class Snapshot:
         Views are SCOPED PER CALL (unique suffix, dropped once the
         query is analyzed): two snapshots at different bases running
         concurrently in one SparkSession never clobber each other's
-        view registrations.
+        view registrations.  A call builds only what its text reads: a
+        current-state view per table it names bare, a history view per
+        table it names in a FOR clause, a view per ``mview_`` it names
+        — the other tables at the basis cost nothing.
 
         Materialized views are queryable as ``mview_<name>`` (and join
         freely with tables).  They reflect their OWN refresh clock,
@@ -2579,38 +2582,42 @@ class Snapshot:
         # the BASIS clock, never the wall clock — the same query at
         # the same basis answers identically forever (core2 semantics)
         query = pin_now(query, self.basis.current_time)
-        temporal_tables = find_temporal_tables(query)
-        table_map: dict[str, str] = {}
-        bare_map: dict[str, str] = {}
         registered: list[str] = []
         spark = self.engine.spark
         try:
             if "information_schema." in query.lower():
                 query = self._register_information_schema(query, uid, registered)
-            for name in self.basis.manifests:
-                cur_name = f"{name}__snap_{uid}"
-                self.table(name, **asof).createOrReplaceTempView(cur_name)
-                registered.append(cur_name)
-                bare_map[name] = cur_name
-                if name in temporal_tables:
-                    hist_name = f"{name}__sys_history_{uid}"
-                    bt.without_tombstones(self.history(name)).drop(
-                        bt.TX_SEQ, bt.ROW_SEQ, bt.TOMBSTONE
-                    ).createOrReplaceTempView(hist_name)
-                    registered.append(hist_name)
-                    table_map[name] = hist_name
+            # name every view the text could read, rewrite, then build
+            # only the views the rewrite used: a bare reference the
+            # rename leaves alone resolves to no view either way
+            hist_map = {
+                name: f"{name}__sys_history_{uid}"
+                for name in find_temporal_tables(query)
+                if name in self.basis.manifests
+            }
+            bare_map = {name: f"{name}__snap_{uid}" for name in self.basis.manifests}
+            mviews: dict[str, str] = {}
             if "mview_" in query.lower():  # zero overhead otherwise
                 for vname in self.engine.materialized_views():
-                    ext = f"mview_{vname}"
-                    tmp_name = f"{ext}__snap_{uid}"
-                    self.engine.materialized_view(vname).createOrReplaceTempView(
-                        tmp_name
-                    )
-                    registered.append(tmp_name)
-                    bare_map[ext] = tmp_name
+                    mviews[f"mview_{vname}"] = vname
+                    bare_map[f"mview_{vname}"] = f"mview_{vname}__snap_{uid}"
+            used: set[str] = set()
             rewritten = rename_bare_tables(
-                rewrite_temporal_sql(query, table_map), bare_map
+                rewrite_temporal_sql(query, hist_map), bare_map, used
             )
+            for name, view in hist_map.items():
+                bt.without_tombstones(self.history(name)).drop(
+                    bt.TX_SEQ, bt.ROW_SEQ, bt.TOMBSTONE
+                ).createOrReplaceTempView(view)
+                registered.append(view)
+            for name in sorted(used):
+                df = (
+                    self.engine.materialized_view(mviews[name])
+                    if name in mviews
+                    else self.table(name, **asof)
+                )
+                df.createOrReplaceTempView(bare_map[name])
+                registered.append(bare_map[name])
             if "asof" in rewritten.lower():  # zero overhead otherwise
                 from core2_spark.sql_dialect import rewrite_asof_joins
 
@@ -2674,6 +2681,8 @@ class Snapshot:
         stays O(catalog) on a 100 TB store."""
         import re as _re
 
+        from core2_spark.sql_dml import blank_literals
+
         spark = self.engine.spark
         t_rows, c_rows = [], []
         entries: list[tuple[str, str, DataFrame]] = [
@@ -2716,12 +2725,17 @@ class Snapshot:
             "is_nullable string",
         ).createOrReplaceTempView(cv)
         registered.extend([tv, cv])
-        query = _re.sub(
-            r"\binformation_schema\s*\.\s*tables\b", tv, query, flags=_re.IGNORECASE
+        # match on the literal-blanked text, splice into the original:
+        # a string literal naming information_schema stays as written
+        refs = _re.finditer(
+            r"\binformation_schema\s*\.\s*(tables|columns)\b",
+            blank_literals(query),
+            flags=_re.IGNORECASE,
         )
-        return _re.sub(
-            r"\binformation_schema\s*\.\s*columns\b", cv, query, flags=_re.IGNORECASE
-        )
+        for m in reversed(list(refs)):
+            view = tv if m[1].lower() == "tables" else cv
+            query = query[: m.start()] + view + query[m.end() :]
+        return query
 
     def changes(
         self,

@@ -7,6 +7,8 @@ and analytic-window extras.  (SURVEY.md §2.1 :table/:arrow-csv, §2.3
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -15,6 +17,12 @@ from core2_spark.catalog import load_tables, register_views
 from core2_spark.operators.recursion import fixpoint
 from core2_spark.queries.registry import query
 from core2_spark.queries.util import fround, pround, sql_pround
+
+# scratch outputs of the export/re-read queries, under the repository root
+_DATA = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "_data",
+)
 
 
 @query(
@@ -254,7 +262,7 @@ def external_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan).  The oracle derives the same rows from the base tables,
     proving the round-trip is lossless."""
     t = load_tables(spark, sf_dir, ("nation", "region"))
-    out_dir = "/root/repo/_data/external_csv"
+    out_dir = os.path.join(_DATA, "external_csv")
     joined = (
         t["nation"]
         .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
@@ -279,7 +287,7 @@ def external_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def external_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON external source round-trip with explicit schema."""
     t = load_tables(spark, sf_dir, ("region",))
-    out_dir = "/root/repo/_data/external_json"
+    out_dir = os.path.join(_DATA, "external_json")
     t["region"].coalesce(1).write.mode("overwrite").json(out_dir)
     return spark.read.schema("r_regionkey int, r_name string").json(out_dir).select(
         "r_regionkey", "r_name"
@@ -302,7 +310,7 @@ def external_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes stripes exactly like Parquet row groups — a valid 100 TB
     ingest format, not just an exchange format."""
     t = load_tables(spark, sf_dir, ("supplier",))
-    out_dir = "/root/repo/_data/external_orc"
+    out_dir = os.path.join(_DATA, "external_orc")
     t["supplier"].write.mode("overwrite").orc(out_dir)
     return (
         spark.read.orc(out_dir)
@@ -909,8 +917,6 @@ def external_arrow_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     table round-trips through an Arrow IPC file and is queried like any
     relation — the oracle reads the same rows from parquet, so the
     comparison proves IPC fidelity end-to-end."""
-    import os
-
     import pyarrow as pa
     import pyarrow.feather
 
@@ -918,7 +924,7 @@ def external_arrow_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from core2_spark.sources import read_arrow_ipc
 
     region = load_tables(spark, sf_dir, ("region", "nation"))["region"]
-    out_dir = "/root/repo/_data/arrow_ipc"
+    out_dir = os.path.join(_DATA, "arrow_ipc")
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "region.arrow")
     pa.feather.write_feather(

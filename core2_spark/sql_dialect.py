@@ -328,11 +328,15 @@ def rewrite_temporal_sql(sql: str, table_map: dict[str, str] | None = None) -> s
     return "".join(out)
 
 
-def rename_bare_tables(sql: str, name_map: dict[str, str]) -> str:
+def rename_bare_tables(
+    sql: str, name_map: dict[str, str], renamed: set[str] | None = None
+) -> str:
     """Rename bare table references at table positions (after FROM /
     JOIN, or after ',' inside a FROM list) to scoped view names,
     preserving qualified-column resolution by aliasing back to the
     original name when the reference carries no alias of its own.
+    ``renamed``, when given, collects the ``name_map`` keys actually
+    renamed: the views the rewritten text reads.
 
     Why: ``Snapshot.sql`` registers per-call temp views; renaming the
     references (instead of registering under the bare name) makes two
@@ -345,7 +349,7 @@ def rename_bare_tables(sql: str, name_map: dict[str, str]) -> str:
     ``FROM MVIEW_REV`` must find the ``mview_rev`` mapping instead of
     slipping through unrenamed and failing resolution."""
     toks = _tokens(sql)
-    folded_map = {k.lower(): v for k, v in name_map.items()}
+    folded_keys = {k.lower(): k for k in name_map}
 
     # CTE definitions: `name AS (` — those names shadow real tables.
     shadowed = {
@@ -357,8 +361,9 @@ def rename_bare_tables(sql: str, name_map: dict[str, str]) -> str:
     }
 
     edits: list[tuple[int, int, str]] = []
-    in_from = False
-    from_depth = 0
+    # depths of the FROM lists still open: a parenthesized subquery
+    # inside a FROM list closes its own list, not the outer one
+    open_from: list[int] = []
     depth = 0
     _CLAUSE_ENDERS = {
         "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "UNION",
@@ -370,29 +375,33 @@ def rename_bare_tables(sql: str, name_map: dict[str, str]) -> str:
             continue
         if t.text == ")":
             depth -= 1
-            if in_from and depth < from_depth:
-                in_from = False
+            while open_from and open_from[-1] > depth:
+                open_from.pop()
             continue
         w = t.word()
+        in_from = bool(open_from) and open_from[-1] == depth
         if w == "FROM":
-            in_from, from_depth = True, depth
+            if not in_from:
+                open_from.append(depth)
             continue
-        if in_from and depth == from_depth and w in _CLAUSE_ENDERS:
-            in_from = False
+        if in_from and w in _CLAUSE_ENDERS:
+            open_from.pop()
             continue
         prev = toks[i - 1] if i > 0 else None
         at_table_pos = prev is not None and (
-            prev.word() in ("FROM", "JOIN")
-            or (prev.text == "," and in_from and depth == from_depth)
+            prev.word() in ("FROM", "JOIN") or (prev.text == "," and in_from)
         )
         if not at_table_pos or t.kind not in ("word", "qid"):
             continue
         name = _unquote(t)
-        mapped = name_map.get(name, folded_map.get(name.lower()))
-        if mapped is None or name in shadowed or name.lower() in {
+        key = name if name in name_map else folded_keys.get(name.lower())
+        if key is None or name in shadowed or name.lower() in {
             s.lower() for s in shadowed
         }:
             continue
+        mapped = name_map[key]
+        if renamed is not None:
+            renamed.add(key)
         nxt = toks[i + 1] if i + 1 < len(toks) else None
         has_alias = nxt is not None and (
             nxt.word() == "AS"

@@ -578,7 +578,7 @@ def parse_dml(statement: str) -> _ParsedDml:
     m = _INSERT_SELECT.match(statement)
     if m:
         return _ParsedDml("insert_select", m["table"], {"select": m["select"]})
-    m = _UPDATE.match(statement)
+    m = _match_unquoted(_UPDATE, statement)
     if m:
         return _ParsedDml(
             "update",
@@ -590,7 +590,7 @@ def parse_dml(statement: str) -> _ParsedDml:
                 "app_to": m["app_to"],
             },
         )
-    m = _DELETE.match(statement)
+    m = _match_unquoted(_DELETE, statement)
     if m:
         if m["verb"].upper() == "ERASE" and m["app_from"]:
             raise ValueError(
@@ -1027,6 +1027,25 @@ _MVIEW_AGG = re.compile(
 
 
 _STRING = re.compile(r"'(?:[^'\\]|\\.|'')*'", re.DOTALL)
+
+
+def blank_literals(text: str) -> str:
+    """``text`` with every string literal's body blanked to spaces,
+    quotes kept: the same length, so a pattern matched on it finds no
+    keyword inside a literal and its spans index ``text`` itself."""
+    return _STRING.sub(lambda m: "'" + " " * (len(m.group()) - 2) + "'", text)
+
+
+def _match_unquoted(pattern: re.Pattern, statement: str) -> dict | None:
+    """``pattern.match`` on the literal-blanked statement, each group
+    sliced from the original text by span (None when unmatched)."""
+    m = pattern.match(blank_literals(statement))
+    if m is None:
+        return None
+    return {
+        g: statement[m.start(g) : m.end(g)] if m.start(g) >= 0 else None
+        for g in pattern.groupindex
+    }
 
 
 def _unquoted(text: str):

@@ -9,7 +9,8 @@ import shutil
 
 from core2_spark.basis import acquire_basis
 
-DATA_DIR = "/root/repo/_data/basis_test"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DATA_DIR = os.path.join(REPO, "_data", "basis_test")
 
 
 def test_basis_pins_file_manifest(spark):

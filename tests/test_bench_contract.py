@@ -9,11 +9,13 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_bench_emits_one_json_line():
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001")
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
         text=True,
         env=env,

@@ -28,6 +28,8 @@ import subprocess
 import sys
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # 1.5x the median of the r7/r8 driver artifacts' queries_sequential
 # (BENCH_r07.json / BENCH_r08.json, sf0.1).  Re-pin when the headline
 # set or the fixture tier changes.
@@ -104,7 +106,7 @@ def _run_bench() -> dict:
         SPARK_GRAFT_SKIP_SF1="1",
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
         text=True,
         env=env,
@@ -121,12 +123,12 @@ def _run_bench() -> dict:
 def _run_sf1_tier() -> dict:
     env = dict(
         os.environ,
-        SPARK_GRAFT_SF_DIR="/root/repo/_data/sf1",
+        SPARK_GRAFT_SF_DIR=os.path.join(REPO, "_data", "sf1"),
         SPARK_GRAFT_TIER_ONLY="1",
         SPARK_GRAFT_SKIP_SF1="1",
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
         text=True,
         env=env,
@@ -143,7 +145,7 @@ def test_sf1_analytics_ceilings():
     measurement the bench artifact's sf1 block carries since r10)."""
     import pytest
 
-    if not os.path.isdir("/root/repo/_data/sf1"):
+    if not os.path.isdir(os.path.join(REPO, "_data", "sf1")):
         pytest.skip("sf1 fixture tier not generated")
     seq = _run_sf1_tier()
     assert set(seq) == set(SF1_ANALYTICS_CEILINGS)

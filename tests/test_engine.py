@@ -4,13 +4,15 @@ through the real write path."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
 
 from core2_spark.engine import Delete, Engine, Erase, Put
 
-ROOT = "/root/repo/_data/engine_test"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.join(REPO, "_data", "engine_test")
 
 
 @pytest.fixture
@@ -256,7 +258,7 @@ def test_optimize_compacts_files_preserving_history(spark, engine):
     ids = spark.createDataFrame([(0,)], "id long")
     engine.submit_tx([Delete("t", ids)], tx_time="2024-01-01 00:00:06")
 
-    before_files = len(glob.glob("/root/repo/_data/engine_test/t/**/*.parquet", recursive=True))
+    before_files = len(glob.glob(f"{ROOT}/t/**/*.parquet", recursive=True))
     db = engine.db()
     cur_before = {(r["id"], r["v"]) for r in db.table("t").collect()}
     hist_before = db.history("t").count()
@@ -266,7 +268,7 @@ def test_optimize_compacts_files_preserving_history(spark, engine):
     }
 
     engine.optimize("t", target_files=1)
-    after_files = len(glob.glob("/root/repo/_data/engine_test/t/**/*.parquet", recursive=True))
+    after_files = len(glob.glob(f"{ROOT}/t/**/*.parquet", recursive=True))
     assert after_files < before_files and after_files == 1
 
     db2 = engine.db()

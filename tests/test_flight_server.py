@@ -3,13 +3,15 @@ round-trip, temporal dialect included."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
 
 from core2_spark.engine import Engine, Put
 
-ROOT = "/root/repo/_data/flight_test"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.join(REPO, "_data", "flight_test")
 
 
 @pytest.fixture

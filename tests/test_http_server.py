@@ -4,6 +4,7 @@ both encodings, temporal dialect included."""
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import urllib.request
 
@@ -11,7 +12,8 @@ import pytest
 
 from core2_spark.engine import Engine, Put
 
-ROOT = "/root/repo/_data/http_test"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.join(REPO, "_data", "http_test")
 
 
 @pytest.fixture

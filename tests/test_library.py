@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from core2_spark import dynamics, multimodal, temporal as bt
 from core2_spark.operators.guards import CardinalityError, max_1_row
 
-DATA_DIR = "/root/repo/_data/test_tmp"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DATA_DIR = os.path.join(REPO, "_data", "test_tmp")
 
 
 @pytest.fixture(autouse=True)

@@ -4,6 +4,7 @@ queries — temporal dialect included — and survives errors."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import socket
 import struct
@@ -12,7 +13,8 @@ import pytest
 
 from core2_spark.engine import Engine, Put
 
-ROOT = "/root/repo/_data/pgwire_test"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.join(REPO, "_data", "pgwire_test")
 
 
 @pytest.fixture
@@ -553,6 +555,29 @@ def test_pgwire_bind_is_literal(spark, engine):
         assert err is None
         _, rows, _ = client.query("SELECT id, sym, px FROM trades ORDER BY id")
         assert rows == [["1", "it's", "nan"], ["2", "MSFT", "200.0"], ["3", "GOOG", "300.0"]]
+        client.close()
+    finally:
+        server.shutdown()
+
+
+def test_pgwire_update_binds_value_holding_where(spark, engine):
+    """A bound value holding ` WHERE ` lands in the column: the UPDATE
+    splits its SET list from its predicate outside string literals."""
+    from core2_spark.pgwire_server import PgWireServer
+
+    v1 = spark.createDataFrame(
+        [(1, "AAPL", 100.0), (2, "MSFT", 200.0)], "id long, sym string, px double"
+    )
+    engine.submit_tx([Put("trades", v1)], tx_time="2024-01-01 00:00:01")
+    server = PgWireServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        client = ExtendedPgClient(server.port)
+        _, err = _bound(client, "UPDATE trades SET sym = $1 WHERE id = $2", ["a WHERE b", "1"])
+        assert err is None
+        _, _, err = client.query("UPDATE trades SET sym = 'c WHERE d' WHERE id = 2")
+        assert err is None
+        _, rows, _ = client.query("SELECT id, sym FROM trades ORDER BY id")
+        assert rows == [["1", "a WHERE b"], ["2", "c WHERE d"]]
         client.close()
     finally:
         server.shutdown()

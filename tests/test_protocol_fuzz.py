@@ -16,6 +16,7 @@ at the same seed with a handful of statements."""
 
 from __future__ import annotations
 
+import os
 import random
 import shutil
 
@@ -23,7 +24,8 @@ import pytest
 
 from core2_spark.engine import Engine, Put
 
-ROOT = "/root/repo/_data/protocol_fuzz_test"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.join(REPO, "_data", "protocol_fuzz_test")
 
 # the slow-tier runs (opt in with -m slow / --runslow /
 # SPARK_GRAFT_RUN_SLOW=1) and their default-tier smoke siblings

@@ -4,6 +4,7 @@ co-located joins (no shuffle), partitioned-write pruning."""
 from __future__ import annotations
 
 import io
+import os
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
@@ -12,6 +13,8 @@ from core2_spark.catalog import load_tables
 from core2_spark.operators.skew import salted_count_per_key, salted_join
 from core2_spark.sinks import write_bucketed_table, write_partitioned
 from tests.conftest import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _plan(df) -> str:
@@ -64,7 +67,7 @@ def test_bucketed_join_needs_no_shuffle(spark):
     t = load_tables(spark, SF_DIR, ("orders", "lineitem"))
     for name in ("b_orders", "b_lineitem"):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"/root/repo/spark-warehouse/{name}", ignore_errors=True)
+        shutil.rmtree(os.path.join(REPO, "spark-warehouse", name), ignore_errors=True)
     write_bucketed_table(t["orders"], "b_orders", "o_orderkey", 8)
     write_bucketed_table(
         t["lineitem"].withColumnRenamed("l_orderkey", "o_orderkey"),
@@ -85,7 +88,7 @@ def test_bucketed_join_needs_no_shuffle(spark):
 
 def test_partitioned_write_prunes(spark):
     t = load_tables(spark, SF_DIR, ("orders",))
-    path = "/root/repo/_data/orders_by_status"
+    path = os.path.join(REPO, "_data", "orders_by_status")
     write_partitioned(t["orders"], path, ["o_orderstatus"])
     pruned = spark.read.parquet(path).filter(F.col("o_orderstatus") == "O")
     plan = _plan(pruned)
@@ -105,8 +108,8 @@ def test_bloom_filters_written_to_parquet(spark):
     from core2_spark.sinks import write_with_bloom_filters
 
     t = load_tables(spark, SF_DIR, ("orders",))
-    plain_path = "/root/repo/_data/orders_plain"
-    bloom_path = "/root/repo/_data/orders_bloom"
+    plain_path = os.path.join(REPO, "_data", "orders_plain")
+    bloom_path = os.path.join(REPO, "_data", "orders_bloom")
     one = t["orders"].coalesce(1)
     one.select("o_orderkey", "o_custkey").write.mode("overwrite").parquet(plain_path)
     write_with_bloom_filters(one, bloom_path, ["o_orderkey", "o_custkey"])
@@ -130,7 +133,7 @@ def test_sorted_layout_enables_file_skipping(spark):
     from core2_spark.sinks import write_sorted_layout
 
     t = load_tables(spark, SF_DIR, ("orders",))
-    path = "/root/repo/_data/orders_sorted"
+    path = os.path.join(REPO, "_data", "orders_sorted")
     write_sorted_layout(t["orders"], path, "o_orderdate", n_files=4)
     spans = []
     for f in glob.glob(f"{path}/*.parquet"):
@@ -154,7 +157,7 @@ def test_arrow_ipc_source_roundtrip(spark):
 
     from core2_spark.sources import read_arrow_ipc
 
-    path = "/root/repo/_data/ref.arrow"
+    path = os.path.join(REPO, "_data", "ref.arrow")
     table = pa.table({"k": [1, 2, 3], "name": ["a", "b", "c"]})
     pa.feather.write_feather(table, path)
     df = read_arrow_ipc(spark, path)
@@ -166,7 +169,7 @@ def test_arrow_ipc_size_guard(spark):
 
     from core2_spark.sources import read_arrow_ipc
 
-    path = "/root/repo/_data/ref.arrow"  # written by the roundtrip test
+    path = os.path.join(REPO, "_data", "ref.arrow")  # written by the roundtrip test
     with pytest.raises(ValueError, match="driver-side reference-data"):
         read_arrow_ipc(spark, path, max_bytes=10)
 
@@ -197,7 +200,7 @@ def test_zorder_layout_prunes_on_both_dimensions(spark):
     from core2_spark.sinks import write_zordered
 
     orders = load_tables(spark, SF_DIR, ("orders",))["orders"]
-    path = "/root/repo/_data/zorder_test"
+    path = os.path.join(REPO, "_data", "zorder_test")
     write_zordered(orders, path, ["o_totalprice", "o_custkey"], n_files=8)
 
     spans = {"o_totalprice": [], "o_custkey": []}

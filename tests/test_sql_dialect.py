@@ -246,6 +246,32 @@ def test_rename_bare_tables_shapes():
         rename_bare_tables("SELECT 'FROM trades' FROM quotes", m)
         == "SELECT 'FROM trades' FROM quotes__snap_x AS quotes"
     )
+    # a derived table inside a FROM list leaves the outer list open
+    assert (
+        rename_bare_tables("SELECT 1 FROM (SELECT id FROM trades) s, quotes q", m)
+        == "SELECT 1 FROM (SELECT id FROM trades__snap_x AS trades) s, quotes__snap_x q"
+    )
+
+
+def test_rename_bare_tables_reports_renamed_keys():
+    """``renamed`` collects the map keys the text actually reads: the
+    views Snapshot.sql must build, and no others."""
+    from core2_spark.sql_dialect import rename_bare_tables
+
+    m = {"trades": "trades__snap_x", "quotes": "quotes__snap_x", "mview_v": "v__snap_x"}
+    cases = {
+        "SELECT * FROM TRADES": {"trades"},
+        "SELECT a.id FROM trades a JOIN trades b ON a.id = b.id": {"trades"},
+        "SELECT 1 FROM trades, quotes": {"trades", "quotes"},
+        "SELECT 'FROM quotes' FROM trades": {"trades"},
+        "WITH quotes AS (SELECT 1 AS id) SELECT * FROM quotes, trades": {"trades"},
+        'SELECT * FROM "mview_v"': {"mview_v"},
+        "SELECT quotes FROM other": set(),
+    }
+    for sql, want in cases.items():
+        got: set[str] = set()
+        rename_bare_tables(sql, m, got)
+        assert got == want, sql
 
 
 def test_snapshot_sql_views_are_scoped_per_call(spark, tmp_path):

@@ -358,6 +358,33 @@ def test_merge_parse_errors(spark):
     assert p.verb == "merge" and len(p.detail["clauses"]) == 1
 
 
+def test_update_literal_holding_where(eng):
+    """A ` WHERE ` inside a string literal is not the statement's WHERE:
+    the SET list and the predicate split where the literals end."""
+    from core2_spark.sql_dml import parse_dml
+
+    p = parse_dml("UPDATE t SET note = 'a WHERE b', n = 1 WHERE id = 1 AND s = ' WHERE '")
+    assert p.detail["sets"] == [("note", "'a WHERE b'"), ("n", "1")]
+    assert p.detail["where"] == "id = 1 AND s = ' WHERE '"
+    p = parse_dml(
+        "UPDATE t FOR PORTION OF VALID_TIME FROM '2024-01-01' TO '2024-02-01' "
+        "SET note = 'x\\' WHERE y' WHERE id = 2"
+    )
+    assert p.detail["sets"] == [("note", "'x\\' WHERE y'")]
+    assert (p.detail["where"], p.detail["app_from"], p.detail["app_to"]) == (
+        "id = 2", "2024-01-01", "2024-02-01"
+    )
+    p = parse_dml("DELETE FROM t WHERE note = ' WHERE id = 1'")
+    assert p.detail["where"] == "note = ' WHERE id = 1'"
+
+    eng.sql_dml("UPDATE accounts SET owner = 'a WHERE b' WHERE id = 1")
+    assert rows(eng.db().table("accounts")) == {
+        (1, "a WHERE b", 100.0),
+        (2, "bob", 50.0),
+        (3, "eve", 75.0),
+    }
+
+
 def test_merge_insert_duplicate_source_ids_raise(spark, tmp_path):
     """Duplicate ids flowing to WHEN NOT MATCHED INSERT would freeze
     an arbitrary within-Put winner — refused like the matched-side

@@ -4,12 +4,16 @@ file-layout stand-in for core2's temporal kd-tree (SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from core2_spark import temporal as bt
 from core2_spark.catalog import load_tables
 from core2_spark.sinks import write_partitioned
 from tests.conftest import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_asof_scan_prunes_time_partitions(spark):
@@ -19,7 +23,7 @@ def test_asof_scan_prunes_time_partitions(spark):
         tx_time=F.col("o_orderdate"),
     ).withColumn("sys_year", F.year(bt.SYS_START))
 
-    path = "/root/repo/_data/versions_by_year"
+    path = os.path.join(REPO, "_data", "versions_by_year")
     write_partitioned(versions, path, ["sys_year"])
 
     vdf = spark.read.parquet(path)

@@ -10,6 +10,7 @@ sequences against a naive per-id dict model.
 
 from __future__ import annotations
 
+import os
 import shutil
 from datetime import datetime
 
@@ -19,7 +20,8 @@ from hypothesis import strategies as st
 
 from core2_spark.engine import Delete, Engine, Put
 
-ROOT = "/root/repo/_data/tx_ordering_test"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.join(REPO, "_data", "tx_ordering_test")
 
 
 @pytest.fixture
@@ -328,13 +330,8 @@ def test_random_three_writer_maintenance_schedules(spark, tmp_path):
     final state equals the serial replay of commits in log order, and
     the incremental mview converges to a fresh aggregate."""
     import importlib.util
-    import os
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        "fuzz_concurrent_writers.py",
-    )
+    path = os.path.join(REPO, "scripts", "fuzz_concurrent_writers.py")
     spec = importlib.util.spec_from_file_location("fuzz_cw", path)
     fuzz = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(fuzz)
