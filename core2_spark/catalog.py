@@ -41,18 +41,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Per-(session, sf_dir, table) cache of persisted DataFrames, keyed by
-# session id so a restarted session re-caches.  OPT-IN via
-# SPARK_GRAFT_CACHE=1 and dimensions only: persisting replaces the
-# pruned/pushed-down Parquet scan with a full-width InMemoryTableScan,
-# which measured SLOWER even for dims at bench scale (persist jobs
-# outweigh re-scan savings on small tables) and would be fatal for
-# facts at 100 TB.  The knob exists for long sessions that touch the
-# same dims hundreds of times.
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-_CACHEABLE = frozenset({"region", "nation", "customer", "supplier", "part"})
-
 # Per-application cache of the inferred table SCHEMAS (r11, guide
 # §7.3 "planning time" + §6 "file listing").  `spark.read.parquet`
 # costs 150-400 ms *warm* per call, most of it parquet footer schema
@@ -94,32 +82,14 @@ def _relation_cache_key(
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, merge_schema: bool = False
 ) -> DataFrame:
-    import os as _os
-
-    use_cache = _os.environ.get("SPARK_GRAFT_CACHE") == "1" and name in _CACHEABLE
-    key = (id(spark), sf_dir, name)
-    if use_cache and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    rkey = (
-        None
-        if _os.environ.get("SPARK_GRAFT_NO_RELATION_CACHE") == "1"
-        else _relation_cache_key(spark, sf_dir, name, merge_schema)
-    )
+    rkey = _relation_cache_key(spark, sf_dir, name, merge_schema)
     cached_schema = _SCHEMA_CACHE.get(rkey) if rkey is not None else None
     if name == "events":
         # events: the cached entry is the RAW on-disk schema (pre
         # ts-normalization) — the hit path re-runs the same
         # normalization branch on it.
-        df, raw_schema = _load_events(spark, sf_dir, raw_schema=cached_schema)
-        if rkey is not None and cached_schema is None:
-            while len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
-                _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
-            _SCHEMA_CACHE[rkey] = raw_schema
-        if use_cache:
-            df = df.persist()
-            _TABLE_CACHE[key] = df
-        return df
-    if cached_schema is not None:
+        df, schema = _load_events(spark, sf_dir, raw_schema=cached_schema)
+    elif cached_schema is not None:
         # Schema supplied -> no footer inference; per-file
         # reconciliation against an explicit schema is exactly what
         # mergeSchema's merged result produces, so the hit path is
@@ -130,13 +100,11 @@ def load_table(
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         df = reader.parquet(table_path(sf_dir, name))
+        schema = df.schema
     if rkey is not None and cached_schema is None:
         while len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
             _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
-        _SCHEMA_CACHE[rkey] = df.schema
-    if use_cache:
-        df = df.persist()
-        _TABLE_CACHE[key] = df
+        _SCHEMA_CACHE[rkey] = schema
     return df
 
 

@@ -1695,25 +1695,13 @@ class Engine:
         against the same pre-transaction snapshot, share one tx_time,
         and later statements win on id conflicts via the within-tx
         sequence — atomic multi-statement DML."""
-        from core2_spark.sql_dml import (
-            _CREATE_MVIEW,
-            _DROP_MVIEW,
-            _OPTIMIZE,
-            _REFRESH_MVIEW,
-            _VACUUM,
-            dml_to_ops,
-            maintenance_result,
-        )
+        from core2_spark.sql_dml import dml_to_ops, is_maintenance, maintenance_result
 
         if len(statements) == 1 and maintenance_result(self, statements[0]):
             return self.db().basis
         ops = []
         for stmt in statements:
-            if any(
-                p.match(stmt)
-                for p in (_CREATE_MVIEW, _REFRESH_MVIEW, _DROP_MVIEW,
-                          _VACUUM, _OPTIMIZE)
-            ):
+            if is_maintenance(stmt):
                 raise ValueError(
                     "maintenance statements are not log "
                     "ops and cannot join a multi-statement transaction — "
@@ -2526,38 +2514,45 @@ class Snapshot:
             pin_now,
             rename_bare_tables,
             rewrite_temporal_sql,
+            strip_setting_prefix,
+            tokens,
         )
 
         uid = uuid.uuid4().hex[:8]
-        # EXPLAIN [FORMATTED|EXTENDED]: return the physical plan as a
-        # one-column relation (client tooling parity — psql-style
-        # EXPLAIN over pgwire/HTTP rides this same path).  The plan is
-        # of the DIALECT-REWRITTEN query, so temporal clauses, ASOF
-        # joins, and basis views appear as what actually executes.
-        head = query.lstrip().split(None, 2)
+        # the statement's head, as Spark lexes it: a leading comment is
+        # not its first word
+        head = tokens(query)[:3]
+        first = head[0].word() if head else ""
         # SHOW TABLES / DESCRIBE <t>: client-shell sugar over the
         # information_schema views (same metadata-only path)
-        if head and head[0].upper() == "SHOW" and len(head) > 1 and (
-            head[1].upper() == "TABLES"
-        ):
+        if first == "SHOW" and len(head) > 1 and head[1].word() == "TABLES":
             return self.sql(
                 "SELECT table_name, table_type FROM information_schema.tables "
                 "ORDER BY table_name"
             )
-        if head and head[0].upper() in ("DESCRIBE", "DESC") and len(head) == 2:
-            tname = head[1].strip().strip(";").strip('"')
+        if (
+            first in ("DESCRIBE", "DESC")
+            and len(head) > 1
+            and head[1].kind in ("word", "qid")
+            and (len(head) == 2 or head[2].text == ";")
+        ):
+            tname = head[1].text.strip('"`').replace("\\", "\\\\").replace("'", "\\'")
             return self.sql(
                 "SELECT column_name, data_type, is_nullable "
                 "FROM information_schema.columns "
                 f"WHERE table_name = '{tname}' ORDER BY ordinal_position"
             )
-        if head and head[0].upper() == "EXPLAIN":
+        # EXPLAIN [FORMATTED|EXTENDED]: return the physical plan as a
+        # one-column relation (client tooling parity — psql-style
+        # EXPLAIN over pgwire/HTTP rides this same path).  The plan is
+        # of the DIALECT-REWRITTEN query, so temporal clauses, ASOF
+        # joins, and basis views appear as what actually executes.
+        if first == "EXPLAIN" and len(head) > 1:
             mode = "formatted"
-            rest = query.lstrip()[len(head[0]):].lstrip()
-            if head[1:] and head[1].upper() in ("FORMATTED", "EXTENDED"):
-                mode = head[1].lower()
-                rest = rest[len(head[1]):].lstrip()
-            inner = self.sql(rest, **asof)
+            rest = head[1]
+            if rest.word() in ("FORMATTED", "EXTENDED") and len(head) > 2:
+                mode, rest = rest.text.lower(), head[2]
+            inner = self.sql(query[rest.start :], **asof)
             plan = inner._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
                 inner._jdf.queryExecution(), mode
             )
@@ -2567,9 +2562,7 @@ class Snapshot:
         # SETTING DEFAULT VALID_TIME/SYSTEM_TIME AS OF '...' prefix:
         # statement-scoped default clocks, the SQL spelling of the
         # **asof kwargs (per-table FOR clauses still override)
-        if query.lstrip()[:7].upper() == "SETTING":
-            from core2_spark.sql_dialect import strip_setting_prefix
-
+        if first == "SETTING":
             query, setting = strip_setting_prefix(query)
             for k, v in setting.items():
                 if asof.get(k) is not None:
@@ -2585,7 +2578,7 @@ class Snapshot:
         registered: list[str] = []
         spark = self.engine.spark
         try:
-            if "information_schema." in query.lower():
+            if "information_schema" in query.lower():
                 query = self._register_information_schema(query, uid, registered)
             # name every view the text could read, rewrite, then build
             # only the views the rewrite used: a bare reference the
@@ -2679,10 +2672,20 @@ class Snapshot:
         ordinal, Spark data type, and nullability.  Built from
         manifest/schema METADATA only — no data scan, so introspection
         stays O(catalog) on a 100 TB store."""
-        import re as _re
+        from core2_spark.sql_dialect import tokens
 
-        from core2_spark.sql_dml import blank_literals
-
+        # `information_schema . tables|columns` as word tokens: a
+        # literal or comment naming it stays as written
+        toks = tokens(query)
+        refs = [
+            (toks[i].start, toks[i + 2].end, toks[i + 2].word())
+            for i in range(len(toks) - 2)
+            if toks[i].word() == "INFORMATION_SCHEMA"
+            and toks[i + 1].text == "."
+            and toks[i + 2].word() in ("TABLES", "COLUMNS")
+        ]
+        if not refs:
+            return query
         spark = self.engine.spark
         t_rows, c_rows = [], []
         entries: list[tuple[str, str, DataFrame]] = [
@@ -2725,16 +2728,8 @@ class Snapshot:
             "is_nullable string",
         ).createOrReplaceTempView(cv)
         registered.extend([tv, cv])
-        # match on the literal-blanked text, splice into the original:
-        # a string literal naming information_schema stays as written
-        refs = _re.finditer(
-            r"\binformation_schema\s*\.\s*(tables|columns)\b",
-            blank_literals(query),
-            flags=_re.IGNORECASE,
-        )
-        for m in reversed(list(refs)):
-            view = tv if m[1].lower() == "tables" else cv
-            query = query[: m.start()] + view + query[m.end() :]
+        for start, end, kind in reversed(refs):
+            query = query[:start] + (tv if kind == "TABLES" else cv) + query[end:]
         return query
 
     def changes(

@@ -7,9 +7,10 @@ through the same four steps here:
 1. **classify** — ``classify(sql)`` reads the leading keyword: a write
    (DML, materialized-view DDL, VACUUM, OPTIMIZE — all run through
    ``Engine.sql_dml``) yields its CommandComplete tag, a query None.
-2. **bind** — ``bind(sql, values, marker)`` substitutes ``?`` (Flight)
-   or ``$n`` (pgwire) placeholders in one scan that skips string
-   literals, quoted identifiers and comments.  Each value is rendered
+2. **bind** — ``bind(sql, values, marker)`` substitutes the ``?``
+   (Flight) or ``$n`` (pgwire) placeholder tokens of the dialect's
+   lexer, so string literals, quoted identifiers and comments are
+   skipped where Spark's own lexer skips them.  Each value is rendered
    by Spark's own ``Literal.sql``, so a bound value is always exactly
    one literal: it cannot change the statement's structure, and a
    placeholder inside a literal or inside a bound value stays text.
@@ -27,12 +28,13 @@ wire: the SQLSTATE Spark attached to the exception, else ``XX000``.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable
 
 import pyarrow as pa
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
+
+from core2_spark.sql_dialect import tokens
 
 # the write statements, by leading keyword, with their CommandComplete
 # tags; in this dialect create/refresh/drop exist only for MATERIALIZED
@@ -47,22 +49,11 @@ _WRITE_TAGS = {
 
 
 def classify(sql: str) -> str | None:
-    """The CommandComplete tag of a write statement; None for a query."""
-    head = sql.lstrip().split(None, 1)
-    return _WRITE_TAGS.get(head[0].lower()) if head else None
-
-
-# Spark's lexer: '' and backslash escapes inside quotes; a word may
-# carry a $ (so `a$1` is no placeholder)
-_SCAN = re.compile(
-    r"""
-      --[^\n]* | /\*.*?\*/
-    | '(?:[^'\\]|\\.|'')*' | "(?:[^"\\]|\\.|"")*" | `(?:[^`]|``)*`
-    | [A-Za-z_][A-Za-z0-9_$]*
-    | (?P<marker>\?|\$(?P<n>\d+))
-    """,
-    re.VERBOSE | re.DOTALL,
-)
+    """The CommandComplete tag of a write statement; None for a query.
+    The leading keyword is the first token as Spark lexes the text, so
+    a comment ahead of it does not hide a write."""
+    head = tokens(sql)[:1]
+    return _WRITE_TAGS.get(head[0].text.lower()) if head else None
 
 
 def _literal(value) -> str:
@@ -84,16 +75,19 @@ def bind(sql: str, values: list, marker: str) -> str:
     if not values:
         return sql
     rendered = [_literal(v) for v in values]
-    position = iter(range(len(rendered)))
-
-    def substitute(m: re.Match) -> str:
-        token = m["marker"]
-        if token is None or token[0] != marker:
-            return m.group()
-        i = next(position, None) if marker == "?" else int(m["n"]) - 1
-        return rendered[i] if i is not None and 0 <= i < len(rendered) else token
-
-    return _SCAN.sub(substitute, sql)
+    out, pos, n = [], 0, 0
+    for tok in tokens(sql):
+        if tok.kind != "param" or tok.text[0] != marker:
+            continue
+        if marker == "?":
+            i, n = n, n + 1
+        else:
+            i = int(tok.text[1:]) - 1
+        if 0 <= i < len(rendered):
+            out += [sql[pos : tok.start], rendered[i]]
+            pos = tok.end
+    out.append(sql[pos:])
+    return "".join(out)
 
 
 def df_to_arrow(df: DataFrame, max_result_rows: int | None = None) -> pa.Table:

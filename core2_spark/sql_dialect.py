@@ -14,6 +14,12 @@ a `FOR SYSTEM_TIME` inside a string literal, keyword-like table names,
 and quoted identifiers all behave; subqueried FOR clauses rewrite
 because the scan sees every token, parenthesized or not.
 
+The scanner is the one SQL lexer of the package: ``tokens``,
+``blank`` and ``string_at`` are what the statement classifier, the
+parameter binder and the DML parser read too, and its token
+boundaries are Spark's (quote escapes, nested comments, raw strings),
+so no pass can see a literal or a comment end where Spark does not.
+
 Supported clause forms (per table reference, any order, at most one
 per axis)::
 
@@ -37,6 +43,7 @@ current-state view and FOR references to the history view via
 from __future__ import annotations
 
 import re
+from string import hexdigits, octdigits
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,11 +66,18 @@ _KEYWORDS = {
     "outer", "semi", "anti", "lateral", "by",
 }
 
+# Spark 4.1's lexer (SqlBaseLexer.g4): '...' and "..." take backslash
+# and doubled-quote escapes, r'...' is raw, `...` doubles its quote,
+# `--` runs to the line end unless a backslash continues it, and a
+# `/*` comment nests (its end is found in _lex).  A word may carry a
+# $, so `a$1` is no placeholder.
 _TOKEN_RE = re.compile(
     r"""
-      (?P<ws>\s+|--[^\n]*|/\*.*?\*/)
-    | (?P<str>'(?:[^'\\]|\\.|'')*')
-    | (?P<qid>"(?:[^"]|"")*"|`(?:[^`]|``)*`)
+      (?P<ws>\s+)
+    | (?P<comment>--(?:\\\n|[^\r\n])*|/\*)
+    | (?P<str>[rR]'[^']*'|[rR]"[^"]*"|'(?:[^'\\]|\\.|'')*')
+    | (?P<qid>"(?:[^"\\]|\\.|"")*"|`(?:[^`]|``)*`)
+    | (?P<param>\?|\$\d+)
     | (?P<word>[A-Za-z_][A-Za-z0-9_$]*)
     | (?P<other>.)
     """,
@@ -71,7 +85,11 @@ _TOKEN_RE = re.compile(
 )
 
 
-class _Tok:
+class Token:
+    """One lexed token: ``kind`` is str, qid (a ``"..."`` or
+    backtick-quoted name), param (``?`` or ``$n``), word or other;
+    ``start``/``end`` index the source text."""
+
     __slots__ = ("kind", "text", "start", "end")
 
     def __init__(self, kind: str, text: str, start: int, end: int):
@@ -81,18 +99,133 @@ class _Tok:
         return self.text.upper() if self.kind == "word" else ""
 
 
-def _tokens(sql: str) -> list[_Tok]:
+def _comment_end(sql: str, pos: int) -> int:
+    """End of the bracketed comment whose ``/*`` ends at ``pos``:
+    comments nest, and an unclosed one runs to the end of the text."""
+    depth = 1
+    while depth:
+        close = sql.find("*/", pos)
+        if close < 0:
+            return len(sql)
+        nested = sql.find("/*", pos, close)
+        if nested >= 0:
+            depth, pos = depth + 1, nested + 2
+        else:
+            depth, pos = depth - 1, close + 2
+    return pos
+
+
+def _lex(sql: str):
+    """``(kind, start, end)`` of every token, whitespace and comments
+    included."""
+    pos = 0
+    while pos < len(sql):
+        for m in _TOKEN_RE.finditer(sql, pos):
+            kind, start, end = m.lastgroup, m.start(), m.end()
+            if kind == "comment" and end - start == 2 and sql[start] == "/":
+                pos = _comment_end(sql, end)
+                yield kind, start, pos
+                break
+            yield kind, start, end
+        else:
+            return
+
+
+def tokens(sql: str) -> list[Token]:
     """Significant tokens only (whitespace/comments dropped — the
     rewrite splices by source offsets, so nothing else is reformatted)."""
-    out = []
-    for m in _TOKEN_RE.finditer(sql):
-        kind = m.lastgroup
-        if kind != "ws":
-            out.append(_Tok(kind, m.group(), m.start(), m.end()))
-    return out
+    return [
+        Token(kind, sql[start:end], start, end)
+        for kind, start, end in _lex(sql)
+        if kind not in ("ws", "comment")
+    ]
 
 
-def _unquote(tok: _Tok) -> str:
+def blank(sql: str) -> str:
+    """``sql`` with every comment and every quoted token's body blanked
+    to spaces, quotes kept: the same length, so a pattern matched on it
+    finds no keyword inside a literal or a comment, and its spans index
+    ``sql`` itself."""
+    out, pos = [], 0
+    for kind, start, end in _lex(sql):
+        if kind == "comment":
+            out += [sql[pos:start], " " * (end - start)]
+        elif kind in ("str", "qid"):
+            body = start + (2 if sql[start] in "rR" else 1)
+            out += [sql[pos:body], " " * (end - body - 1), sql[end - 1]]
+        else:
+            continue
+        pos = end
+    out.append(sql[pos:])
+    return "".join(out)
+
+
+# Spark's single-character escapes (unescapeSQLString); any other
+# escaped character stands for itself, and \% and \_ keep their
+# backslash for LIKE
+_ESCAPES = {"0": "\0", "b": "\b", "n": "\n", "r": "\r", "t": "\t",
+            "Z": "\x1a", "%": "\\%", "_": "\\_"}
+
+
+def string_at(text: str, pos: int) -> tuple[str, int] | None:
+    """The string literal (``'...'``, ``"..."`` or raw ``r'...'``)
+    starting at ``text[pos]``, decoded as Spark decodes it, and its
+    end offset; None when no string literal starts there."""
+    m = _TOKEN_RE.match(text, pos)
+    if m is None or m.lastgroup not in ("str", "qid") or text[pos] == "`":
+        return None
+    lit = m.group()
+    if lit[0] in "rR":
+        return lit[2:-1], m.end()
+    quote, body, out, i = lit[0], lit[1:-1], [], 0
+    while i < len(body):
+        c = body[i]
+        if c != "\\":
+            out.append(c)
+            i += 2 if c == quote else 1  # a quote here comes doubled
+            continue
+        esc = body[i + 1]
+        width = {"u": 4, "U": 8}.get(esc, 0)  # \uXXXX, \UXXXXXXXX
+        code, octal = body[i + 2 : i + 2 + width], body[i + 1 : i + 4]
+        if width and len(code) == width and all(d in hexdigits for d in code):
+            out.append(chr(int(code, 16)))
+            i += 2 + width
+        elif esc in "01" and len(octal) == 3 and all(d in octdigits for d in octal):
+            out.append(chr(int(octal, 8)))  # \000 to \177
+            i += 4
+        else:
+            out.append(_ESCAPES.get(esc, esc))
+            i += 2
+    return "".join(out), m.end()
+
+
+def split_commas(toks: list[Token]) -> list[list[Token]]:
+    """``toks`` split at the commas outside parens and brackets."""
+    parts: list[list[Token]] = [[]]
+    depth = 0
+    for t in toks:
+        if t.text == "," and depth == 0:
+            parts.append([])
+            continue
+        depth += (t.text in ("(", "[")) - (t.text in (")", "]"))
+        parts[-1].append(t)
+    return parts
+
+
+def _paren_pairs(toks: list[Token]) -> dict[int, int]:
+    """The token index of each balanced paren's partner, both ways."""
+    pairs: dict[int, int] = {}
+    opened: list[int] = []
+    for i, t in enumerate(toks):
+        if t.text == "(":
+            opened.append(i)
+        elif t.text == ")" and opened:
+            j = opened.pop()
+            pairs[i], pairs[j] = j, i
+    return pairs
+
+
+def _unquote(tok: Token) -> str:
     if tok.kind == "qid":
         q = tok.text[0]
         return tok.text[1:-1].replace(q + q, q)
@@ -109,7 +242,7 @@ class _Match:
         self.alias_tok, self.start, self.end = alias_tok, start, end
 
 
-def _parse_literal(toks: list[_Tok], i: int, sql: str) -> tuple[str, int]:
+def _parse_literal(toks: list[Token], i: int, sql: str) -> tuple[str, int]:
     """[TIMESTAMP|DATE] '<literal>' → (sql fragment, next index)."""
     marker = "TIMESTAMP"
     if i < len(toks) and toks[i].word() in ("TIMESTAMP", "DATE"):
@@ -124,7 +257,7 @@ def _parse_literal(toks: list[_Tok], i: int, sql: str) -> tuple[str, int]:
     return f"{marker} {toks[i].text}", i + 1
 
 
-def _parse_clause(toks: list[_Tok], i: int, sql: str) -> tuple[str | None, int]:
+def _parse_clause(toks: list[Token], i: int, sql: str) -> tuple[str | None, int]:
     """After `FOR <axis>`: parse one clause body, return (predicate or
     None for ALL, next index)."""
     axis = toks[i - 1].word()
@@ -157,7 +290,7 @@ def _parse_clause(toks: list[_Tok], i: int, sql: str) -> tuple[str | None, int]:
 
 
 def _find_matches(sql: str) -> list[_Match]:
-    toks = _tokens(sql)
+    toks = tokens(sql)
     matches = []
     i = 0
     while i < len(toks):
@@ -218,78 +351,28 @@ def _rewrite_overlaps(sql: str) -> str:
     the same algebra as ``functions.periods.overlaps``.  Operates on
     the token stream, so OVERLAPS inside strings/identifiers is left
     alone; operands are arbitrary balanced expressions."""
-    toks = _tokens(sql)
-
-    def group_before(idx: int) -> tuple[int, list[list[_Tok]]] | None:
-        """Parse the balanced paren group ENDING at toks[idx]; return
-        (start index, top-level comma-split operand token lists)."""
-        if toks[idx].text != ")":
-            return None
-        depth, i = 0, idx
-        while i >= 0:
-            if toks[i].text == ")":
-                depth += 1
-            elif toks[i].text == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
-        if i < 0:
-            return None
-        return i, _split_group(toks[i + 1 : idx])
-
-    def group_after(idx: int) -> tuple[int, list[list[_Tok]]] | None:
-        if idx >= len(toks) or toks[idx].text != "(":
-            return None
-        depth, i = 0, idx
-        while i < len(toks):
-            if toks[i].text == "(":
-                depth += 1
-            elif toks[i].text == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if i >= len(toks):
-            return None
-        return i, _split_group(toks[idx + 1 : i])
-
-    def _split_group(inner: list[_Tok]) -> list[list[_Tok]]:
-        parts, cur, depth = [], [], 0
-        for t in inner:
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-            if t.text == "," and depth == 0:
-                parts.append(cur)
-                cur = []
-            else:
-                cur.append(t)
-        parts.append(cur)
-        return parts
-
+    if "overlaps" not in sql.lower():  # zero overhead otherwise
+        return sql
+    toks = tokens(sql)
+    pairs = _paren_pairs(toks)
     out, pos = [], 0
     for k, t in enumerate(toks):
-        if t.word() != "OVERLAPS" or k == 0:
+        if (
+            t.word() != "OVERLAPS"
+            or not 0 < k < len(toks) - 1
+            or toks[k - 1].text != ")"
+            or toks[k + 1].text != "("
+            or k - 1 not in pairs
+            or k + 1 not in pairs
+        ):
             continue
-        left = group_before(k - 1)
-        right = group_after(k + 1)
-        if not left or not right or len(left[1]) != 2 or len(right[1]) != 2:
-            continue
-        lstart, rend_idx = left[0], right[0]
-        if toks[lstart].start < pos:  # overlapping earlier rewrite
-            continue
-
-        def text_of(part: list[_Tok]) -> str:
-            return sql[part[0].start : part[-1].end]
-
-        (s1, e1), (s2, e2) = left[1], right[1]
-        out.append(sql[pos : toks[lstart].start])
-        out.append(
-            f"({text_of(s1)} < {text_of(e2)} AND {text_of(s2)} < {text_of(e1)})"
-        )
-        pos = toks[rend_idx].end
+        lo, hi = pairs[k - 1], pairs[k + 1]
+        left, right = split_commas(toks[lo + 1 : k - 1]), split_commas(toks[k + 2 : hi])
+        if len(left) != 2 or len(right) != 2 or not all(left + right) or toks[lo].start < pos:
+            continue  # not two periods, or inside an earlier rewrite
+        s1, e1, s2, e2 = (sql[p[0].start : p[-1].end] for p in left + right)
+        out += [sql[pos : toks[lo].start], f"({s1} < {e2} AND {s2} < {e1})"]
+        pos = toks[hi].end
     out.append(sql[pos:])
     return "".join(out)
 
@@ -348,7 +431,7 @@ def rename_bare_tables(
     fold, and Spark resolves case-insensitively by default — so
     ``FROM MVIEW_REV`` must find the ``mview_rev`` mapping instead of
     slipping through unrenamed and failing resolution."""
-    toks = _tokens(sql)
+    toks = tokens(sql)
     folded_keys = {k.lower(): k for k in name_map}
 
     # CTE definitions: `name AS (` — those names shadow real tables.
@@ -467,7 +550,7 @@ _DNF_CAP = 24  # max disjuncts an expansion may produce
 _NOT_OPERATORS = {"BETWEEN", "IN", "LIKE", "RLIKE", "ILIKE", "SIMILAR"}
 
 
-def _parse_bool(toks: list[_Tok], lo: int, hi: int, sql: str):
+def _parse_bool(toks: list[Token], lo: int, hi: int, sql: str):
     """Parse toks[lo:hi] as a boolean predicate into an AST of
     ``("or"|"and", [children])`` / ``("not", child)`` /
     ``("atom", text)`` nodes.  Atoms are balanced source spans: parens
@@ -491,17 +574,12 @@ def _parse_bool(toks: list[_Tok], lo: int, hi: int, sql: str):
             children.append(node)
         return (("and", children) if len(children) > 1 else children[0]), i
 
+    pairs = _paren_pairs(toks)
+
     def matching_close(i):
-        d = 0
-        while i < hi:
-            if toks[i].text == "(":
-                d += 1
-            elif toks[i].text == ")":
-                d -= 1
-                if d == 0:
-                    return i
-            i += 1
-        raise ValueError("unbalanced parens in predicate")
+        if pairs.get(i, hi) >= hi:
+            raise ValueError("unbalanced parens in predicate")
+        return pairs[i]
 
     def parse_factor(i):
         if i >= hi:
@@ -615,7 +693,8 @@ def _to_dnf(node, cap: int = _DNF_CAP) -> list[list[str]] | None:
 
 
 def _split_exists_once(sql: str) -> str:
-    toks = _tokens(sql)
+    toks = tokens(sql)
+    pairs = _paren_pairs(toks)
     out: list[str] = []
     pos = 0
     i = 0
@@ -625,19 +704,9 @@ def _split_exists_once(sql: str) -> str:
             i += 1
             continue
         negated = i > 0 and toks[i - 1].word() == "NOT"
-        # balanced subquery group
-        depth, j = 0, i + 1
-        while j < len(toks):
-            if toks[j].text == "(":
-                depth += 1
-            elif toks[j].text == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= len(toks):
+        open_idx, close_idx = i + 1, pairs.get(i + 1)  # balanced subquery group
+        if close_idx is None:
             break
-        open_idx, close_idx = i + 1, j
         # top-level WHERE inside the group (depth 1 relative to sql)
         where_idx = None
         d = 0
@@ -737,7 +806,7 @@ def pin_now(sql: str, at) -> str:
     optional empty argument list (``NOW()``) is consumed."""
     ts = at.isoformat(sep=" ", timespec="microseconds")
     out, pos = [], 0
-    toks = _tokens(sql)
+    toks = tokens(sql)
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -780,7 +849,7 @@ def _split_union_terms(body: str) -> tuple[list[str], list[str], bool]:
     mixed combinators or other set ops are legal depends on whether
     the CTE turns out to be RECURSIVE — a plain CTE's body runs
     verbatim and may combine freely (the caller decides)."""
-    toks = _tokens(body)  # significant tokens only; no ws to skip
+    toks = tokens(body)  # significant tokens only; no ws to skip
     depth = 0
     cuts: list[tuple[int, int, str]] = []  # (start, end, combinator)
     has_other = False
@@ -837,11 +906,12 @@ def expand_recursive_ctes(sql, run_sql, fresh_name):
     rewritten main query with CTE references renamed to the computed
     views, or None when the statement has no ``WITH RECURSIVE`` head.
     """
-    toks = _tokens(sql)  # significant tokens only (ws already dropped)
+    toks = tokens(sql)  # significant tokens only (ws already dropped)
     if len(toks) < 2 or toks[0].word() != "WITH" or toks[1].word() != "RECURSIVE":
         return None
     from core2_spark.operators.recursion import fixpoint
 
+    pairs = _paren_pairs(toks)
     n = len(toks)
     i = 2
     ctes: list[tuple[str, list[str] | None, str]] = []
@@ -864,18 +934,11 @@ def expand_recursive_ctes(sql, run_sql, fresh_name):
         i += 1
         if i >= n or toks[i].text != "(":
             raise ValueError(f"WITH RECURSIVE {name}: expected ( after AS")
-        depth, j = 1, i + 1
-        while j < n and depth:
-            if toks[j].text == "(":
-                depth += 1
-            elif toks[j].text == ")":
-                depth -= 1
-            j += 1
-        if depth:
+        close = pairs.get(i)
+        if close is None:
             raise ValueError(f"WITH RECURSIVE {name}: unbalanced parentheses")
-        body = sql[toks[i].end : toks[j - 1].start]
-        ctes.append((name, cols, body))
-        i = j
+        ctes.append((name, cols, sql[toks[i].end : toks[close].start]))
+        i = close + 1
         if i < n and toks[i].text == ",":
             i += 1
             continue
@@ -1025,7 +1088,7 @@ def rewrite_asof_joins(sql: str) -> str:
 
 
 def _rewrite_one_asof(sql: str) -> str | None:
-    toks = _tokens(sql)
+    toks = tokens(sql)
     n = len(toks)
     pos = None
     for i, t in enumerate(toks):
@@ -1120,14 +1183,14 @@ def _rewrite_one_asof(sql: str) -> str | None:
     on_toks = toks[after_r + 1 : end_i]
 
     # split at AND; each conjunct must be  qual.col OP qual.col
-    conjuncts: list[list[_Tok]] = [[]]
+    conjuncts: list[list[Token]] = [[]]
     for t in on_toks:
         if t.word() == "AND":
             conjuncts.append([])
         else:
             conjuncts[-1].append(t)
 
-    def _qualified(ts: list[_Tok], i: int):
+    def _qualified(ts: list[Token], i: int):
         if (
             i + 2 < len(ts)
             and ts[i].kind in ("word", "qid")
@@ -1308,15 +1371,6 @@ def _rewrite_one_asof(sql: str) -> str | None:
 
 # -- SETTING DEFAULT <axis> prefix -------------------------------------
 
-_SETTING_HEAD = re.compile(r"^\s*SETTING\s+", re.IGNORECASE)
-_SETTING_CLAUSE = re.compile(
-    r"DEFAULT\s+(?P<axis>VALID_TIME|APPLICATION_TIME|SYSTEM_TIME)\s+"
-    r"(?:AS\s+OF\s+(?:TIMESTAMP\s+)?'(?P<ts>[^']+)'|(?P<all>ALL))"
-    r"\s*(?P<sep>,\s*)?",
-    re.IGNORECASE,
-)
-
-
 def strip_setting_prefix(sql: str) -> tuple[str, dict]:
     """The reference's ``SETTING DEFAULT VALID_TIME AS OF '...'[,
     DEFAULT SYSTEM_TIME AS OF '...']`` query prefix: statement-scoped
@@ -1331,42 +1385,50 @@ def strip_setting_prefix(sql: str) -> tuple[str, dict]:
     ALL`` — a statement-wide ALL changes row multiplicity of every
     reference, which silently breaks joins written for current
     state)."""
-    m = _SETTING_HEAD.match(sql)
-    if not m:
+    toks = tokens(sql)
+    if not toks or toks[0].word() != "SETTING":
         return sql, {}
-    pos = m.end()
-    out: dict = {}
+
+    def word(k: int) -> str:
+        return toks[k].word() if k < len(toks) else ""
+
     axis_kw = {
         "VALID_TIME": "app_time",
         "APPLICATION_TIME": "app_time",
         "SYSTEM_TIME": "system_time",
     }
+    out: dict = {}
+    i = 1
     while True:
-        cm = _SETTING_CLAUSE.match(sql, pos)
-        if cm is None:
+        axis = word(i + 1) if word(i) == "DEFAULT" else ""
+        if word(i + 2) == "ALL" and axis in axis_kw:
+            raise ValueError(
+                f"SETTING DEFAULT {axis} ALL is not "
+                "supported — spell it per table reference (FROM t FOR "
+                f"{axis} ALL); a statement-wide ALL "
+                "changes the row multiplicity of every reference"
+            )
+        j = i + 5 if word(i + 4) == "TIMESTAMP" else i + 4
+        if not (
+            axis in axis_kw
+            and (word(i + 2), word(i + 3)) == ("AS", "OF")
+            and j < len(toks)
+            and toks[j].kind == "str"
+        ):
             if not out:
                 raise ValueError(
                     "SETTING must be followed by DEFAULT "
                     "VALID_TIME/SYSTEM_TIME AS OF '...' clauses"
                 )
             break
-        if cm["all"]:
-            raise ValueError(
-                f"SETTING DEFAULT {cm['axis'].upper()} ALL is not "
-                "supported — spell it per table reference (FROM t FOR "
-                f"{cm['axis'].upper()} ALL); a statement-wide ALL "
-                "changes the row multiplicity of every reference"
-            )
-        kw = axis_kw[cm["axis"].upper()]
-        if kw in out:
-            raise ValueError(
-                f"SETTING sets {cm['axis'].upper()} twice"
-            )
-        out[kw] = cm["ts"]
-        pos = cm.end()
-        if not cm["sep"]:
+        if axis_kw[axis] in out:
+            raise ValueError(f"SETTING sets {axis} twice")
+        out[axis_kw[axis]] = string_at(sql, toks[j].start)[0]
+        i = j + 1
+        if i >= len(toks) or toks[i].text != ",":
             break
-    return sql[pos:], out
+        i += 1
+    return (sql[toks[i].start :] if i < len(toks) else ""), out
 
 
 # -- NEST_MANY / NEST_ONE nested-result subqueries ---------------------
@@ -1409,22 +1471,14 @@ def rewrite_nest_subqueries(sql: str) -> str:
 
 
 def _rewrite_one_nest(sql: str) -> str | None:
-    toks = _tokens(sql)
+    toks = tokens(sql)
     for idx, t in enumerate(toks):
         fn = t.word()
         if fn not in ("NEST_MANY", "NEST_ONE"):
             continue
         if idx + 1 >= len(toks) or toks[idx + 1].text != "(":
             raise ValueError(f"{fn} must be followed by (SELECT ...)")
-        depth, close = 0, None
-        for j in range(idx + 1, len(toks)):
-            if toks[j].text == "(":
-                depth += 1
-            elif toks[j].text == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
+        close = _paren_pairs(toks).get(idx + 1)
         if close is None:
             raise ValueError(f"{fn}: unbalanced parentheses")
         inner = toks[idx + 2 : close]

@@ -58,8 +58,15 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from core2_spark.sql_dialect import blank, split_commas, string_at, tokens
+
+# Statement shapes.  Each is matched on the statement with its comments
+# and literal bodies blanked (sql_dialect.blank, see _match), so a group
+# ends at a non-blank: a lazy group is `.*?\S`, a trailing one `.*\S`
+# (also what keeps a long blanked literal from backtracking
+# quadratically).
 _ASSERT_STMT = re.compile(
-    r"^\s*ASSERT\s+(?P<body>.+)$", re.IGNORECASE | re.DOTALL
+    r"^\s*ASSERT\s+(?P<body>.*\S)\s*$", re.IGNORECASE | re.DOTALL
 )
 _RECORDS_STMT = re.compile(
     r"^\s*(?P<verb>INSERT|PATCH)\s+INTO\s+(?P<table>\w+)"
@@ -67,30 +74,30 @@ _RECORDS_STMT = re.compile(
     # spelling and our SQL:2011 FOR PORTION OF spelling
     r"(?:\s+FOR\s+(?:PORTION\s+OF\s+)?(?:APPLICATION_TIME|VALID_TIME)"
     r"\s+FROM\s+'(?P<app_from>[^']+)'\s+TO\s+'(?P<app_to>[^']+)')?"
-    r"\s+RECORDS\s+(?P<records>\{.+)$",
+    r"\s+RECORDS\s+(?P<records>\{.*\S)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _INSERT_VALUES = re.compile(
     r"^\s*INSERT\s+INTO\s+(?P<table>\w+)\s*\((?P<cols>[^)]*)\)\s*"
-    r"VALUES\s*(?P<values>.+)$",
+    r"VALUES\s*(?P<values>.*\S)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _INSERT_SELECT = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<table>\w+)\s+(?P<select>SELECT\b.+)$",
+    r"^\s*INSERT\s+INTO\s+(?P<table>\w+)\s+(?P<select>SELECT\b.*\S)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _UPDATE = re.compile(
     r"^\s*UPDATE\s+(?P<table>\w+)"
     r"(?:\s+FOR\s+PORTION\s+OF\s+(?:APPLICATION_TIME|VALID_TIME)\s+FROM\s+"
     r"'(?P<app_from>[^']+)'\s+TO\s+'(?P<app_to>[^']+)')?"
-    r"\s+SET\s+(?P<sets>.+?)(?:\s+WHERE\s+(?P<where>.+))?$",
+    r"\s+SET\s+(?P<sets>.*?\S)(?:\s+WHERE\s+(?P<where>.*\S))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _DELETE = re.compile(
     r"^\s*(?P<verb>DELETE|ERASE)\s+FROM\s+(?P<table>\w+)"
     r"(?:\s+FOR\s+PORTION\s+OF\s+(?:APPLICATION_TIME|VALID_TIME)\s+FROM\s+"
     r"'(?P<app_from>[^']+)'\s+TO\s+'(?P<app_to>[^']+)')?"
-    r"(?:\s+WHERE\s+(?P<where>.+))?$",
+    r"(?:\s+WHERE\s+(?P<where>.*\S))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -101,8 +108,8 @@ _DELETE = re.compile(
 
 def parse_records(text: str) -> list[dict]:
     """Parse a comma-separated list of ``{key: value, ...}`` record
-    literals into Python dicts.  Values: numbers, ``'strings'`` (with
-    ``''`` escaping), TRUE/FALSE/NULL, DATE/TIMESTAMP 'iso',
+    literals into Python dicts.  Values: numbers, ``'strings'``
+    (decoded as Spark decodes them), TRUE/FALSE/NULL, DATE/TIMESTAMP 'iso',
     ``[...]`` arrays, and ``{...}`` nested records (stored as struct
     columns — SURVEY §1.2 dynamic/nested types; PATCH replaces a
     nested value wholesale, top-level shallow merge as upstream)."""
@@ -121,24 +128,11 @@ def parse_records(text: str) -> list[dict]:
 
     def parse_string() -> str:
         nonlocal i
-        assert text[i] == "'"
-        i += 1
-        out = []
-        while i < n:
-            if text[i] == "'":
-                if i + 1 < n and text[i + 1] == "'":  # '' escape
-                    out.append("'")
-                    i += 2
-                    continue
-                i += 1
-                return "".join(out)
-            if text[i] == "\\" and i + 1 < n and text[i + 1] in "'\\":
-                out.append(text[i + 1])  # \' and \\ escapes (Literal.sql)
-                i += 2
-                continue
-            out.append(text[i])
-            i += 1
-        raise err("unterminated string")
+        lit = string_at(text, i)  # decoded as Spark decodes it
+        if lit is None:
+            raise err("unterminated string")
+        value, i = lit
+        return value
 
     def parse_value():
         nonlocal i
@@ -402,96 +396,73 @@ def records_to_df(spark, records: list[dict], mask_col: str | None = None):
 
 
 def _split_set_clauses(sets: str) -> list[tuple[str, str]]:
-    """Split `a = expr, b = expr` on top-level commas."""
+    """Split `a = expr, b = expr` on top-level commas, each clause at
+    its first `=` token."""
     out = []
     for part in _split_top_level(sets):
-        col, expr = part.split("=", 1)
-        out.append((col.strip(), expr.strip()))
+        toks = tokens(part)
+        eq = next((k for k, t in enumerate(toks) if t.text == "="), None)
+        if not eq:  # no `=`, or no column before it
+            raise ValueError(f"SET clause needs `column = expression`: {part!r}")
+        out.append(("".join(t.text for t in toks[:eq]), part[toks[eq].end :].strip()))
     return out
 
 
 _MERGE_HEAD = re.compile(
     r"^\s*MERGE\s+INTO\s+(?P<table>\w+)(?:\s+AS)?(?:\s+(?P<talias>(?!USING\b)\w+))?"
     r"\s+USING\s+(?P<source>\w+|\((?:[^()]|\([^()]*\))*\))(?:\s+AS)?"
-    r"\s+(?P<salias>\w+)\s+ON\s+(?P<on>.+?)"
-    r"(?P<whens>\s+WHEN\s+.+)$",
+    r"\s+(?P<salias>\w+)\s+ON\s+(?P<on>.*?\S)"
+    r"(?P<whens>\s+WHEN\s.*\S)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _MERGE_WHEN = re.compile(
-    r"^\s*(?P<notm>NOT\s+)?MATCHED(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-    r"(?P<action>UPDATE\s+SET\s+.+|DELETE|INSERT\s*\([^)]*\)\s*VALUES\s*\(.+\))\s*$",
+    r"^\s*(?P<notm>NOT\s+)?MATCHED(?:\s+AND\s+(?P<cond>.*?\S))?\s+THEN\s+"
+    r"(?:UPDATE\s+SET\s+(?P<sets>.*\S)|(?P<delete>DELETE)"
+    r"|INSERT\s*\((?P<cols>[^)]*)\)\s*VALUES\s*\((?P<vals>.*)\))\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
 
 def _split_whens(whens: str) -> list[str]:
-    """Split the WHEN-clause tail at top-level ``WHEN`` keywords
-    (quote- and paren-aware: a string literal or subquery containing
-    the word WHEN must not split — and CASE..WHEN..END inside a THEN
-    expression stays intact because CASE raises a depth-like guard)."""
-    upper = whens.upper()
-    parts: list[str] = []
-    depth = 0
-    case_depth = 0
-    starts: list[int] = []
-    for i, ch in _unquoted(whens):
-        if ch == "(":
+    """Split the WHEN-clause tail at top-level ``WHEN`` tokens: a WHEN
+    inside a literal, a comment or a subquery does not split it, nor
+    does a CASE..WHEN..END inside a THEN expression."""
+    depth = case_depth = 0
+    heads = []
+    for t in tokens(whens):
+        w = t.word()
+        if t.text == "(":
             depth += 1
-        elif ch == ")":
+        elif t.text == ")":
             depth -= 1
-        elif upper[i : i + 4] == "CASE" and _is_word(upper, i, 4):
+        elif w == "CASE":
             case_depth += 1
-        elif upper[i : i + 3] == "END" and _is_word(upper, i, 3):
+        elif w == "END":
             case_depth = max(0, case_depth - 1)
-        elif (
-            depth == 0
-            and case_depth == 0
-            and upper[i : i + 4] == "WHEN"
-            and _is_word(upper, i, 4)
-        ):
-            starts.append(i)
-    for j, s in enumerate(starts):
-        e = starts[j + 1] if j + 1 < len(starts) else len(whens)
-        parts.append(whens[s + 4 : e])  # drop the WHEN keyword itself
-    return parts
-
-
-def _is_word(upper: str, i: int, ln: int) -> bool:
-    before_ok = i == 0 or not (upper[i - 1].isalnum() or upper[i - 1] == "_")
-    j = i + ln
-    after_ok = j >= len(upper) or not (upper[j].isalnum() or upper[j] == "_")
-    return before_ok and after_ok
+        elif w == "WHEN" and depth == case_depth == 0:
+            heads.append(t)
+    ends = [t.start for t in heads[1:]] + [len(whens)]
+    return [whens[t.end : e] for t, e in zip(heads, ends)]
 
 
 def parse_merge(statement: str) -> "_ParsedDml | None":
-    m = _MERGE_HEAD.match(statement)
+    m = _match(_MERGE_HEAD, statement)
     if not m:
         return None
     clauses = []
     for w in _split_whens(m["whens"]):
-        cm = _MERGE_WHEN.match(w)
+        cm = _match(_MERGE_WHEN, w)
         if not cm:
             raise ValueError(f"unsupported MERGE WHEN clause: WHEN {w[:80]}")
-        action = cm["action"].strip()
-        au = action.upper()
-        if au.startswith("UPDATE"):
-            kind, detail = "update", {
-                "sets": _split_set_clauses(re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.IGNORECASE))
-            }
-        elif au == "DELETE":
+        if cm["sets"] is not None:
+            kind, detail = "update", {"sets": _split_set_clauses(cm["sets"])}
+        elif cm["delete"] is not None:
             kind, detail = "delete", {}
         else:
-            im = re.match(
-                r"^INSERT\s*\((?P<cols>[^)]*)\)\s*VALUES\s*\((?P<vals>.+)\)\s*$",
-                action,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not im:
-                raise ValueError(f"unsupported MERGE INSERT action: {action[:80]}")
             kind = "insert"
             detail = {
-                "cols": [c.strip() for c in im["cols"].split(",")],
-                "vals": _split_top_level(im["vals"]),
+                "cols": _split_top_level(cm["cols"]),
+                "vals": _split_top_level(cm["vals"]),
             }
             if len(detail["cols"]) != len(detail["vals"]):
                 raise ValueError(
@@ -515,7 +486,7 @@ def parse_merge(statement: str) -> "_ParsedDml | None":
             "talias": m["talias"] or m["table"],
             "source": m["source"],
             "salias": m["salias"],
-            "on": m["on"].strip(),
+            "on": m["on"],
             "clauses": clauses,
         },
     )
@@ -532,7 +503,7 @@ def parse_dml(statement: str) -> _ParsedDml:
     merged = parse_merge(statement)
     if merged is not None:
         return merged
-    m = _RECORDS_STMT.match(statement)
+    m = _match(_RECORDS_STMT, statement)
     if m:
         if m["verb"].upper() == "INSERT" and m["app_from"]:
             raise ValueError(
@@ -548,37 +519,30 @@ def parse_dml(statement: str) -> _ParsedDml:
                 "app_to": m["app_to"],
             },
         )
-    m = _ASSERT_STMT.match(statement)
+    m = _match(_ASSERT_STMT, statement)
     if m:
         # ASSERT <predicate>[, 'message'] — the message splits at a
         # TOP-LEVEL comma (the predicate may contain commas inside
         # parens or strings)
-        parts = _split_top_level(m["body"])
-        msg = None
-        if len(parts) == 2 and re.fullmatch(
-            r"'(?:[^']|'')*'", parts[1].strip()
-        ):
-            msg = parts[1].strip()[1:-1].replace("''", "'")
-            pred = parts[0].strip()
-        elif len(parts) == 1:
-            pred = parts[0].strip()
-        else:
+        pred, *rest = _split_top_level(m["body"])
+        msg = string_at(rest[0], 0) if len(rest) == 1 else None
+        if rest and (msg is None or msg[1] != len(rest[0])):
             raise ValueError(
                 "ASSERT takes one predicate and an optional trailing "
                 "'message' string"
             )
-        return _ParsedDml("assert", "", {"pred": pred, "msg": msg})
-    m = _INSERT_VALUES.match(statement)
+        return _ParsedDml("assert", "", {"pred": pred, "msg": msg[0] if msg else None})
+    m = _match(_INSERT_VALUES, statement)
     if m:
         return _ParsedDml(
             "insert_values",
             m["table"],
-            {"cols": [c.strip() for c in m["cols"].split(",")], "values": m["values"]},
+            {"cols": _split_top_level(m["cols"]), "values": m["values"]},
         )
-    m = _INSERT_SELECT.match(statement)
+    m = _match(_INSERT_SELECT, statement)
     if m:
         return _ParsedDml("insert_select", m["table"], {"select": m["select"]})
-    m = _match_unquoted(_UPDATE, statement)
+    m = _match(_UPDATE, statement)
     if m:
         return _ParsedDml(
             "update",
@@ -590,7 +554,7 @@ def parse_dml(statement: str) -> _ParsedDml:
                 "app_to": m["app_to"],
             },
         )
-    m = _match_unquoted(_DELETE, statement)
+    m = _match(_DELETE, statement)
     if m:
         if m["verb"].upper() == "ERASE" and m["app_from"]:
             raise ValueError(
@@ -995,7 +959,7 @@ def patch_to_ops(engine, snap, table: str, records: list[dict],
 
 _CREATE_MVIEW = re.compile(
     r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?P<name>\w+)\s+AS\s+"
-    r"(?P<select>SELECT\b.+)$",
+    r"(?P<select>SELECT\b.*\S)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _REFRESH_MVIEW = re.compile(
@@ -1015,7 +979,7 @@ _OPTIMIZE = re.compile(
     re.IGNORECASE,
 )
 _MVIEW_SELECT = re.compile(
-    r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>\w+)\s+"
+    r"^\s*SELECT\s+(?P<items>.*?\S)\s+FROM\s+(?P<table>\w+)\s+"
     r"GROUP\s+BY\s+(?P<keys>[\w\s,]+?)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
@@ -1026,20 +990,14 @@ _MVIEW_AGG = re.compile(
 )
 
 
-_STRING = re.compile(r"'(?:[^'\\]|\\.|'')*'", re.DOTALL)
+_MAINTENANCE = (_CREATE_MVIEW, _REFRESH_MVIEW, _DROP_MVIEW, _VACUUM, _OPTIMIZE)
 
 
-def blank_literals(text: str) -> str:
-    """``text`` with every string literal's body blanked to spaces,
-    quotes kept: the same length, so a pattern matched on it finds no
-    keyword inside a literal and its spans index ``text`` itself."""
-    return _STRING.sub(lambda m: "'" + " " * (len(m.group()) - 2) + "'", text)
-
-
-def _match_unquoted(pattern: re.Pattern, statement: str) -> dict | None:
-    """``pattern.match`` on the literal-blanked statement, each group
-    sliced from the original text by span (None when unmatched)."""
-    m = pattern.match(blank_literals(statement))
+def _match(pattern: re.Pattern, statement: str) -> dict | None:
+    """``pattern.match`` on ``blank(statement)``, each group sliced from
+    ``statement`` by span (None when unmatched): a keyword inside a
+    literal or a comment is no keyword, and a group keeps its text."""
+    m = pattern.match(blank(statement))
     if m is None:
         return None
     return {
@@ -1048,32 +1006,17 @@ def _match_unquoted(pattern: re.Pattern, statement: str) -> dict | None:
     }
 
 
-def _unquoted(text: str):
-    """``(index, char)`` of every char outside string literals, which
-    end as Spark lexes them ('' and backslash escapes stay inside)."""
-    i = 0
-    while i < len(text):
-        m = _STRING.match(text, i) if text[i] == "'" else None
-        if m:
-            i = m.end()
-            continue
-        yield i, text[i]
-        i += 1
-
-
 def _split_top_level(text: str) -> list[str]:
-    """Split on top-level commas (not inside parens or strings)."""
-    parts, depth, start = [], 0, 0
-    for i, ch in _unquoted(text):
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i].strip())
-            start = i + 1
-    parts.append(text[start:].strip())
-    return parts
+    """Split on top-level comma tokens (not inside parens, brackets,
+    literals or comments); each part runs from its first token to its
+    last."""
+    return [text[p[0].start : p[-1].end] if p else "" for p in split_commas(tokens(text))]
+
+
+def is_maintenance(statement: str) -> bool:
+    """A materialized-view or table maintenance statement: it runs
+    immediately and is no log op."""
+    return any(_match(p, statement) for p in _MAINTENANCE)
 
 
 def parse_mview_select(select: str) -> tuple[str, list[str], dict]:
@@ -1081,18 +1024,18 @@ def parse_mview_select(select: str) -> tuple[str, list[str], dict]:
     (table, keys, aggs) triple mviews.create takes.  Restricted by
     design to the incrementally-maintainable shape; anything else
     (expressions over keys, WHERE, joins, HAVING) errors loudly."""
-    m = _MVIEW_SELECT.match(select)
+    m = _match(_MVIEW_SELECT, select)
     if not m:
         raise ValueError(
             "CREATE MATERIALIZED VIEW supports exactly "
             "'SELECT <keys and aggregates> FROM <table> GROUP BY <keys>': "
             f"{select[:120]}"
         )
-    keys = [k.strip() for k in m["keys"].split(",")]
+    keys = _split_top_level(m["keys"])
     aggs: dict[str, tuple[str, str]] = {}
     seen_keys: list[str] = []
     for item in _split_top_level(m["items"]):
-        a = _MVIEW_AGG.match(item)
+        a = _match(_MVIEW_AGG, item)
         if a:
             fn = a["fn"].lower()
             if a["distinct"]:
@@ -1124,33 +1067,31 @@ def maintenance_result(engine, statement: str) -> dict | None:
 
     from core2_spark import mviews
 
-    m = _CREATE_MVIEW.match(statement)
+    m = _match(_CREATE_MVIEW, statement)
     if m:
         table, keys, aggs = parse_mview_select(m["select"])
         mviews.create(engine, m["name"], table, keys, aggs)
         return {"statement": "create_materialized_view", "name": m["name"]}
-    m = _REFRESH_MVIEW.match(statement)
+    m = _match(_REFRESH_MVIEW, statement)
     if m:
         stats = mviews.refresh(engine, m["name"])
         return {"statement": "refresh_materialized_view", "name": m["name"], **stats}
-    m = _DROP_MVIEW.match(statement)
+    m = _match(_DROP_MVIEW, statement)
     if m:
         base = mviews._base(engine, m["name"])
         mviews._load_meta(engine, m["name"])  # clear error if absent
         shutil.rmtree(base)
         return {"statement": "drop_materialized_view", "name": m["name"]}
-    m = _VACUUM.match(statement)
+    m = _match(_VACUUM, statement)
     if m:
         # round 6: retention as a statement (VACUUM t OLDER THAN
         # TIMESTAMP '...') — partition-wise on day layouts
         engine.vacuum(m["table"], older_than=m["horizon"])
         return {"statement": "vacuum", "table": m["table"],
                 "older_than": m["horizon"]}
-    m = _OPTIMIZE.match(statement)
+    m = _match(_OPTIMIZE, statement)
     if m:
-        cols = tuple(
-            c.strip() for c in (m["cols"] or "").split(",") if c.strip()
-        )
+        cols = tuple(c for c in _split_top_level(m["cols"] or "") if c)
         n = engine.optimize(m["table"], zorder_by=cols or None)
         return {"statement": "optimize", "table": m["table"],
                 "target_files": n, "zorder_by": list(cols)}

@@ -16,7 +16,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -38,7 +39,7 @@ def main(seed: int = 9006) -> None:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    base = "/root/repo/_data/fuzz_failover_dbg4"
+    base = os.path.join(REPO, "_data", "fuzz_failover_dbg4")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)
     root = os.path.join(base, f"seed{seed}")

@@ -61,7 +61,7 @@ def main() -> None:
     from core2_spark.session import get_spark
 
     spark = get_spark(app_name="engine-overhead-probe", shuffle_partitions=8)
-    root = "/root/repo/_data/engine_overhead_probe"
+    root = os.path.join(REPO, "_data", "engine_overhead_probe")
     shutil.rmtree(root, ignore_errors=True)
 
     lineitem = load_table(spark, SF_DIR, "lineitem")

@@ -193,7 +193,7 @@ def main() -> None:
 
     depths = [int(a) for a in sys.argv[1:]] or [12, 1200]
     spark = get_spark(app_name="history-depth-probe", shuffle_partitions=8)
-    base = "/root/repo/_data/depth_probe"
+    base = os.path.join(REPO, "_data", "depth_probe")
     results = {}
     for days in depths:
         root = f"{base}_{days}"

@@ -18,7 +18,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +28,7 @@ from core2_spark import mviews
 from core2_spark.engine import Engine, Put
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-ROOT = "/root/repo/_data/probe_mview"
+ROOT = os.path.join(REPO, "_data", "probe_mview")
 
 
 def main() -> None:

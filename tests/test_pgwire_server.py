@@ -583,6 +583,33 @@ def test_pgwire_update_binds_value_holding_where(spark, engine):
         server.shutdown()
 
 
+def test_pgwire_comment_led_write(spark, engine):
+    """A comment ahead of the verb does not hide a write: the statement
+    runs through Engine.sql_dml, on the simple and extended paths."""
+    from core2_spark.pgwire_server import PgWireServer
+    from core2_spark.service import classify
+
+    assert classify("-- note\nDELETE FROM t WHERE id = 1") == "DELETE 0"
+    assert classify("/* a /* b */ */ SELECT 1") is None
+    v1 = spark.createDataFrame(
+        [(1, "AAPL", 100.0), (2, "MSFT", 200.0), (3, "GOOG", 300.0)],
+        "id long, sym string, px double",
+    )
+    engine.submit_tx([Put("trades", v1)], tx_time="2024-01-01 00:00:01")
+    server = PgWireServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        client = ExtendedPgClient(server.port)
+        _, rows, err = client.query("-- note\nDELETE FROM trades WHERE id = 1")
+        assert err is None and rows == []
+        rows, err = _bound(client, "/* it's */ DELETE FROM trades WHERE sym = $1", ["MSFT"])
+        assert err is None and rows == []
+        _, rows, _ = client.query("SELECT id FROM trades ORDER BY id")
+        assert rows == [["3"]]
+        client.close()
+    finally:
+        server.shutdown()
+
+
 def test_unknown_table_sqlstate_agrees_on_pgwire_and_http(spark, engine):
     """Errors come back classified: the SQLSTATE Spark attaches, the
     same on both wires (not a hard-coded XX000 or a repr)."""

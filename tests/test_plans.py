@@ -21,14 +21,6 @@ from tests.conftest import SF_DIR
 QUERIES = all_queries()
 
 
-@pytest.fixture(autouse=True)
-def _no_table_cache(monkeypatch):
-    """Plan audits inspect the Parquet scan (PushedFilters/ReadSchema);
-    the catalog's opt-in table cache would replace it with an
-    InMemoryTableScan, so force it off here."""
-    monkeypatch.delenv("SPARK_GRAFT_CACHE", raising=False)
-
-
 def plan_of(df: DataFrame) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):

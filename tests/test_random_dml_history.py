@@ -15,12 +15,10 @@ from hypothesis import strategies as st
 
 import pytest
 
-# Randomized/fuzz/soak tier (VERDICT r11 task 2): excluded from the
-# default run so the driver's verify finishes; run with -m slow /
-# --runslow / SPARK_GRAFT_RUN_SLOW=1.  Deterministic gate coverage of
-# the same machinery stays in the default tier (oracle parity, unit
-# and plan-shape tests).
-pytestmark = pytest.mark.slow
+# The hypothesis run is the randomized tier (VERDICT r11 task 2):
+# excluded from the default run to keep it short; run with -m slow /
+# --runslow / SPARK_GRAFT_RUN_SLOW=1.  Its default-tier smoke sibling
+# checks one fixed example through the same body.
 
 
 ops = st.lists(
@@ -34,6 +32,7 @@ ops = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=10,
     deadline=None,
@@ -41,6 +40,16 @@ ops = st.lists(
 )
 @given(steps=ops)
 def test_random_dml_history_matches_model(spark, steps):
+    _history_matches_model(spark, steps)
+
+
+def test_random_dml_history_smoke(spark):
+    _history_matches_model(
+        spark, [("insert", 1, 2), ("update", 1, 3), ("merge", 2, -1), ("delete", 0, 1)]
+    )
+
+
+def _history_matches_model(spark, steps):
     from core2_spark.engine import Engine, Put
 
     eng = Engine(spark, tempfile.mkdtemp(prefix="dml_hist_"))

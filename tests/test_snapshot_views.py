@@ -229,11 +229,29 @@ def test_information_schema_and_shell_sugar(eng):
         "ORDER BY ordinal_position"
     )
     assert [r[0] for r in got.collect()] == ["id", "name"]
-    assert [tuple(r) for r in db.sql("SHOW TABLES").collect()] == [
-        ("customer", "BASE TABLE"),
-        ("orders", "BASE TABLE"),
-    ]
-    assert [tuple(r) for r in db.sql("DESCRIBE customer").collect()] == [
-        ("id", "bigint", "YES"),
-        ("name", "string", "YES"),
-    ]
+    # a comment names nothing; the dotted name may be spaced
+    got = db.sql(
+        "SELECT table_name FROM information_schema . tables -- information_schema.columns\n"
+        "ORDER BY table_name"
+    )
+    assert [r[0] for r in got.collect()] == ["customer", "orders"]
+    for head in ("", "-- list\n", "/* a /* nested */ comment */ "):
+        assert [tuple(r) for r in db.sql(head + "SHOW TABLES").collect()] == [
+            ("customer", "BASE TABLE"),
+            ("orders", "BASE TABLE"),
+        ]
+        assert [tuple(r) for r in db.sql(head + "DESCRIBE customer").collect()] == [
+            ("id", "bigint", "YES"),
+            ("name", "string", "YES"),
+        ]
+
+
+def test_literal_ends_where_spark_ends_it(spark, eng, built):
+    """A backslash-escaped quote stays inside its "..." literal: the FOR
+    clause in it is text, so the value comes back as plain spark.sql
+    reads it and no history view is built."""
+    sql = 'SELECT "x\\" FROM orders FOR SYSTEM_TIME AS OF TIMESTAMP \'2030-01-01\' y" AS s'
+    want = spark.sql(sql).collect()[0][0]
+    assert want == "x\" FROM orders FOR SYSTEM_TIME AS OF TIMESTAMP '2030-01-01' y"
+    assert eng.db().sql(sql).collect()[0][0] == want
+    assert built == {"table": [], "history": [], "mview": []}

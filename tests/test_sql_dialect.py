@@ -48,6 +48,12 @@ def test_rewriter_is_tokenizer_aware():
     s = "SELECT 'x\\' FROM t FOR SYSTEM_TIME ALL --' AS c FROM u"
     assert rewrite_temporal_sql(s) == s
     assert find_temporal_tables(s) == set()
+    s = 'SELECT "x\\" FROM t FOR SYSTEM_TIME AS OF TIMESTAMP \'2030-01-01\' y" AS s'
+    assert rewrite_temporal_sql(s) == s
+    assert find_temporal_tables(s) == set()
+    # nor does a quote inside a comment start one
+    s = "SELECT 1 -- it's\nFROM t FOR SYSTEM_TIME ALL"
+    assert find_temporal_tables(s) == {"t"}
 
     # name NOT in table position: untouched
     s2 = "SELECT a FOR FROM t"  # nonsense, but 'a' isn't after FROM/JOIN
@@ -111,6 +117,42 @@ def test_rewriter_is_tokenizer_aware():
     )
     assert "app_time_start <= TIMESTAMP '2024-06-01 00:00:00'" in mixed
     assert "system_time_start" not in mixed
+
+
+# each literal as Spark 4.1 decodes it (checked against spark.sql below)
+_LITERALS = [
+    ("'it\\'s'", "it's"),
+    ("'it''s'", "it's"),
+    ("'a\\\\b'", "a\\b"),
+    ('"a\\"b"', 'a"b'),
+    ('"it\'s"', "it's"),
+    ('"a""b"', 'a"b'),
+    ("'\\n\\101\\u00e9\\%'", "\nA\u00e9\\%"),
+    ("r'a\\'", "a\\"),
+]
+
+
+def test_lexer_reads_literals_and_comments_as_spark(spark):
+    """One token per literal, ending where Spark's lexer ends it, and
+    decoded to the value ``spark.sql`` returns; comments (a quote
+    inside one included, nested ones too) are no tokens, and ``blank``
+    keeps every offset."""
+    from core2_spark.sql_dialect import blank, string_at, tokens
+
+    for lit, value in _LITERALS:
+        sql = f"SELECT {lit} AS v -- it's\n/* a /* b */ ' */"
+        toks = tokens(sql)
+        assert [t.text for t in toks] == ["SELECT", lit, "AS", "v"], lit
+        assert string_at(sql, toks[1].start) == (value, toks[1].end), lit
+        assert spark.sql(sql).collect()[0][0] == value, lit
+        blanked = blank(sql)
+        assert len(blanked) == len(sql)
+        assert blanked[toks[1].end :].strip() == "AS v"
+    assert string_at("x 'a'", 0) is None
+    # a backslash at the end of a `--` line continues the comment
+    sql = "SELECT 1 AS a -- it's \\\n, 2 AS b"
+    assert [t.text for t in tokens(sql)] == ["SELECT", "1", "AS", "a"]
+    assert spark.sql(sql).columns == ["a"]
 
 
 def test_sql_with_temporal_end_to_end(spark):

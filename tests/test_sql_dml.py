@@ -360,7 +360,8 @@ def test_merge_parse_errors(spark):
 
 def test_update_literal_holding_where(eng):
     """A ` WHERE ` inside a string literal is not the statement's WHERE:
-    the SET list and the predicate split where the literals end."""
+    the SET list and the predicate split where the literals end, and
+    literals and comments end where Spark's lexer ends them."""
     from core2_spark.sql_dml import parse_dml
 
     p = parse_dml("UPDATE t SET note = 'a WHERE b', n = 1 WHERE id = 1 AND s = ' WHERE '")
@@ -376,13 +377,45 @@ def test_update_literal_holding_where(eng):
     )
     p = parse_dml("DELETE FROM t WHERE note = ' WHERE id = 1'")
     assert p.detail["where"] == "note = ' WHERE id = 1'"
+    # "..." is a string literal, and a comment is no statement text
+    p = parse_dml('UPDATE t SET note = "a, b" WHERE id = 1')
+    assert p.detail["sets"] == [("note", '"a, b"')]
+    p = parse_dml("UPDATE t SET a = 1, -- a, b\n b = 2 WHERE id = 1")
+    assert (p.detail["sets"], p.detail["where"]) == ([("a", "1"), ("b", "2")], "id = 1")
+    p = parse_dml("""UPDATE t SET note = "it's" WHERE id = 1 OR note = 'x'""")
+    assert p.detail["sets"] == [("note", '"it\'s"')]
+    assert p.detail["where"] == "id = 1 OR note = 'x'"
+    p = parse_dml("DELETE FROM t -- don't\nWHERE name = 'x'")
+    assert (p.verb, p.detail["where"]) == ("delete", "name = 'x'")
+    p = parse_dml("ASSERT 1 > 0, 'it\\'s bad'")
+    assert p.detail == {"pred": "1 > 0", "msg": "it's bad"}
 
+    eng.sql_dml(
+        'UPDATE accounts SET owner = "a, b" WHERE id = 1 -- it\'s\n'
+        "OR owner = 'eve'"
+    )
     eng.sql_dml("UPDATE accounts SET owner = 'a WHERE b' WHERE id = 1")
     assert rows(eng.db().table("accounts")) == {
         (1, "a WHERE b", 100.0),
         (2, "bob", 50.0),
-        (3, "eve", 75.0),
+        (3, "a, b", 75.0),
     }
+
+
+def test_long_literal_or_comment_parses_in_linear_time():
+    """A long literal or comment blanks to one run of spaces that the
+    statement shapes cross once, not once per character."""
+    import time
+
+    from core2_spark.sql_dml import parse_dml
+
+    body = "x" * 64_000
+    t0 = time.perf_counter()
+    p = parse_dml(f"UPDATE t SET note = '{body}' WHERE id = 1")
+    assert p.detail["where"] == "id = 1"
+    p = parse_dml(f"DELETE FROM t /* {body} */ WHERE id = 2 -- {body}")
+    assert p.detail["where"] == "id = 2"
+    assert time.perf_counter() - t0 < 5
 
 
 def test_merge_insert_duplicate_source_ids_raise(spark, tmp_path):

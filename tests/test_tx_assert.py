@@ -76,6 +76,10 @@ def test_assert_scalar_comparison_form(eng):
 def test_assert_message_with_top_level_comma_in_predicate(eng):
     with pytest.raises(TxAssertionError, match="bad coalesce"):
         eng.sql_dml("ASSERT COALESCE(FALSE, FALSE), 'bad coalesce'")
+    # the message decodes as Spark decodes the literal: a backslash
+    # escape is how a bound message holding a quote renders
+    with pytest.raises(TxAssertionError, match="it's bad"):
+        eng.sql_dml("ASSERT 1 > 2, 'it\\'s bad'")
 
 
 def test_assert_programmatic_op(spark, eng):
