@@ -29,12 +29,14 @@ Semantics carried from the reference:
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
 import uuid
 import warnings
-from dataclasses import dataclass
+from contextlib import contextmanager
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -209,6 +211,41 @@ class Call:
     fn: object  # Callable[[Snapshot], list[Put | Delete | Erase]]
 
 
+def _version_rows(op: Put | Delete, t: datetime, seq: int) -> DataFrame:
+    """The version rows a Put or Delete adds at tx time ``t`` — the one
+    stamping rule every writer shares (commit, replay, what-if).  All
+    ops of a transaction share ``t``; ``seq``, the op's position in the
+    transaction, orders them (later write wins).  Duplicate ids WITHIN
+    one Put tie on (sys_start, _tx_seq); the stamped row id freezes an
+    arbitrary winner so every read of every basis agrees (see
+    temporal.ROW_SEQ)."""
+    if isinstance(op, Put):
+        return (
+            bt.put(op.rows, tx_time=t, app_start=op.app_start, app_end=op.app_end)
+            .withColumn(bt.TOMBSTONE, F.lit(False))
+            .withColumn(bt.TX_SEQ, F.lit(seq))
+            .withColumn(bt.ROW_SEQ, F.monotonically_increasing_id())
+        )
+    if isinstance(op, Delete):
+        return bt.delete_tombstone(
+            op.ids, op.id_col, t, op.app_start, op.app_end
+        ).withColumn(bt.TX_SEQ, F.lit(seq))
+    raise TypeError(f"unsupported transaction op {op!r}")
+
+
+@dataclass
+class _Tx:
+    """What one manifested commit has done so far — exactly what its
+    rollback undoes (see ``Engine._manifested``)."""
+
+    pending: str  # this transaction's _pending/tx_<txid>.json
+    pre_tables: set[str]
+    t: datetime | None = None
+    written: list[str] = field(default_factory=list)
+    paths: set[str] = field(default_factory=set)
+    deferred_old: list[tuple[str, str]] = field(default_factory=list)
+
+
 class Engine:
     def __init__(
         self,
@@ -370,7 +407,6 @@ class Engine:
         writes (save/restore around each write) so opening an Engine
         does not silently change parquet encoding for unrelated writes
         elsewhere in the shared SparkSession."""
-        from contextlib import contextmanager
 
         @contextmanager
         def scope():
@@ -691,7 +727,6 @@ class Engine:
         """Exclusive _log.json critical-section lock (see
         ``_persist_clock``)."""
         import time
-        from contextlib import contextmanager
 
         lock = os.path.join(self.root, "_log.lock")
 
@@ -763,46 +798,65 @@ class Engine:
                     "new head)"
                 )
 
-    def _append_rows(self, path: str, rows: DataFrame) -> list[str]:
-        """Append version rows via write-to-private-staging + publish-
-        by-rename, instead of ``mode("append")`` directly on the table
-        directory.  Two reasons, both about concurrency and scale:
-        concurrent appends to ONE directory share the Hadoop
-        committer's ``_temporary/0`` staging, so a second writer's
-        job commit can delete the first's in-flight task files; and on
-        object stores the same pattern (write-audit-publish) is what
-        makes a multi-writer table safe.  Each transaction writes to a
-        fresh ``_tmp_stage_<n>`` dir (no committer sharing), then
-        publishes by renaming the part files into the day-partition
-        dirs — same filesystem, so renames are metadata ops; part
-        names carry task UUIDs, so writers never collide.  A crash
-        mid-publish leaves some files visible without a log entry —
-        the same exposure as a crashed direct append — and stray
-        ``_tmp_stage_`` dirs are dropped by ``_recover_rewrites``.
+    @contextmanager
+    def _manifested(self):
+        """The one commit path: every writer (``submit_tx``,
+        ``apply_changes``) runs its writes inside this scope.  Inside,
+        the writer advances the clock and sets ``tx.t``; each append
+        stages its rows, lists them in the transaction's pending
+        manifest and publishes them under the log lock (``_append``).
+        On exit the clock is persisted with the manifest's txid — the
+        commit point.  A failure anywhere, the persist-time
+        concurrent-writer check included, rolls back every file the
+        transaction published and restores the clock and log metadata,
+        so a failed transaction leaves zero visible rows; a crash
+        leaves the manifest for the next open to roll back
+        (``_recover_pending``)."""
+        tx = _Tx(self._pending_path(), set(self._all_tables()))
+        saved = (
+            self._tx_counter,
+            self._last_tx_time,
+            dict(self._table_schemas),
+            set(self._app_bounded),
+            dict(self._rewrites),
+        )
+        try:
+            yield tx
+            self._persist_clock(
+                commit_txid=os.path.basename(tx.pending)[3:-5]
+            )
+        except BaseException:
+            self._rollback(tx)
+            (
+                self._tx_counter,
+                self._last_tx_time,
+                self._table_schemas,
+                self._app_bounded,
+                self._rewrites,
+            ) = saved
+            self._remove_pending(tx.pending)
+            raise
+        self._remove_pending(tx.pending)  # tx durable: manifest retires
+        for _path, old in tx.deferred_old:
+            shutil.rmtree(old, ignore_errors=True)
 
-        Returns the published file paths — the transaction's explicit
-        ownership list, which is what rollback deletes (a directory
-        diff would claim a concurrent winner's files too)."""
-        staging, moves = self._stage_rows(path, rows)
-        with self._log_lock():  # serialize with maintenance swap checks
-            return self._publish_staged(path, staging, moves)
-
-    def _append_manifested(
-        self, path, rows, pending, t, written_files, deferred_old
-    ) -> None:
-        """Stage, record the planned destinations in the pending
-        manifest, then publish — so every file is listed before it
-        becomes visible and a crash at ANY point rolls back cleanly
-        at the next open."""
+    def _append(self, tx: _Tx, table: str, rows: DataFrame) -> None:
+        """Append version rows to ``table`` within ``tx``: stage, record
+        the planned destinations in the pending manifest, then publish
+        — so every file is listed before it becomes visible and a crash
+        at ANY point rolls back cleanly at the next open."""
+        path = self._table_path(table)
+        tx.paths.add(path)
+        self._merge_schema_cache(table, rows.drop(bt.SYS_DAY).schema)
         staging, moves = self._stage_rows(path, rows)
         planned = [dst for _src, dst in moves]
         self._write_pending(
-            pending, t, list(written_files) + planned, deferred_old
+            tx.pending, tx.t, tx.written + planned, tx.deferred_old
         )
-        # publish appends into written_files IN PLACE: if rename #k
-        # fails, files 1..k-1 are already recorded and _rollback
-        # deletes them (returning the list only on success would leave
-        # them visible forever once the manifest retires).
+        # publish appends into tx.written IN PLACE: if rename #k fails,
+        # files 1..k-1 are already recorded and _rollback deletes them
+        # (returning the list only on success would leave them visible
+        # forever once the manifest retires).
         # UNDER THE LOG LOCK: maintenance swaps/drops validate the
         # table's file listing under the same lock right before they
         # destroy the pre-swap image — publishes serialized with that
@@ -810,16 +864,30 @@ class Engine:
         # the maintenance op is about to replace (the 4-writer soak's
         # vacuum-drop data loss, generalized to every guarded swap).
         with self._log_lock():
-            self._publish_staged(path, staging, moves, out=written_files)
+            self._publish_staged(path, staging, moves, out=tx.written)
 
     def _stage_rows(self, path: str, rows: DataFrame):
-        """Write ``rows`` to a private staging dir; return
-        ``(staging_dir, [(src, dst), ...])`` — the planned publish
-        moves, known BEFORE anything becomes visible (so the pending-
-        transaction manifest can list them first; see _write_pending)."""
+        """Write ``rows`` to a private staging dir, partitioned by the
+        system-time day (the only place ``_sys_day`` is stamped: as-of
+        reads prune whole files by it, see temporal.sys_day_predicate);
+        return ``(staging_dir, [(src, dst), ...])`` — the planned
+        publish moves, known BEFORE anything becomes visible (so the
+        pending-transaction manifest can list them first; see
+        _write_pending).
+
+        Staging, then publishing by rename, instead of
+        ``mode("append")`` on the table directory: concurrent appends
+        to ONE directory share the Hadoop committer's ``_temporary/0``
+        staging, so a second writer's job commit can delete the
+        first's in-flight task files.  Each append writes a fresh
+        ``_tmp_stage_<n>`` dir (no committer sharing); the renames are
+        metadata ops on one filesystem, and part names carry task
+        UUIDs, so writers never collide.  Stray ``_tmp_stage_`` dirs
+        are dropped by ``_recover_rewrites``."""
         import uuid as _uuid
 
         staging = os.path.join(self.root, f"_tmp_stage_{_uuid.uuid4().hex}")
+        rows = rows.withColumn(bt.SYS_DAY, F.to_date(F.col(bt.SYS_START)))
         with self._micros_timestamps():
             self._writer(rows).partitionBy(bt.SYS_DAY).parquet(staging)
         # stamp stage time: the scavenger's live-peer age gate must
@@ -1341,195 +1409,25 @@ class Engine:
         tx_time: str | datetime | None = None,
     ) -> Basis:
         self._check_sole_writer()  # abort BEFORE any rows are written
-        prev_counter, prev_time = self._tx_counter, self._last_tx_time
-        t = self._next_tx_time(tx_time)
-        # The op-expansion phase (Assert predicates, Call fns, Patch
-        # lookups) can raise BEFORE the write loop's rollback handler
-        # below runs — the clock restore there only covers the write
-        # loop, so without this guard an aborted Assert leaves
-        # _last_tx_time advanced: re-submitting with the same explicit
-        # tx_time is then spuriously rejected as "at or before the
-        # head" even though nothing committed, and the in-memory clock
-        # drifts from the persisted one.
-        try:
-            expanded: list[Put | Delete | Erase] = []
-            pre_snapshot = None
-            for op in ops:
-                if isinstance(op, (Call, Patch, Assert)):
-                    if pre_snapshot is None:
-                        # basis clock pinned to tx time, never the wall
-                        # clock — tx-fns must replay identically
-                        pre_snapshot = Snapshot(self, acquire_basis(self._all_tables(), t, self._basis_schemas()))
-                    if isinstance(op, Assert):
-                        row = pre_snapshot.sql(
-                            f"SELECT ({op.predicate}) AS ok"
-                        ).head()
-                        if row is None or row["ok"] is not True:
-                            raise TxAssertionError(
-                                op.message
-                                or f"transaction assertion failed: "
-                                   f"{op.predicate}"
-                            )
-                    elif isinstance(op, Call):
-                        expanded.extend(op.fn(pre_snapshot))
-                    else:
-                        from core2_spark.sql_dml import patch_to_ops
-
-                        expanded.extend(
-                            patch_to_ops(
-                                self, pre_snapshot, op.table,
-                                list(op.docs), op.id_col,
-                                app_start=op.app_start, app_end=op.app_end,
-                            )
-                        )
-                else:
-                    expanded.append(op)
-        except BaseException:
-            self._tx_counter, self._last_tx_time = prev_counter, prev_time
-            raise
-        ops = expanded
-        # Rollback bookkeeping: pre-write file sets per touched path,
-        # tables that existed before, and deferred Erase rewrites.  A
-        # failure ANYWHERE below — including the persist-time
-        # concurrent-writer check — undoes every file this transaction
-        # wrote, so a failed transaction leaves zero visible rows (the
-        # same guarantee the pre-write check gives) instead of a
-        # phantom partially-committed transaction.
-        pre_tables = set(self._all_tables())
-        written_files: list[str] = []
-        touched_paths: set[str] = set()
-        deferred_old: list[tuple[str, str]] = []
-        pending = self._pending_path()
         touched: set[str] = set()
-        prev_schemas = dict(self._table_schemas)
-        prev_app_bounded = set(self._app_bounded)
-        prev_rewrites = dict(self._rewrites)
-        try:
+        with self._manifested() as tx:
+            t = tx.t = self._next_tx_time(tx_time)
+            if any(isinstance(op, (Assert, Call, Patch)) for op in ops):
+                # basis clock pinned to tx time, never the wall clock —
+                # tx-fns must replay identically
+                ops = Snapshot(
+                    self,
+                    acquire_basis(self._all_tables(), t, self._basis_schemas()),
+                )._expand(ops)
             for seq, op in enumerate(ops):
-                path = self._table_path(op.table)
-                touched_paths.add(path)
-                # All ops share one tx_time; the op's position in the
-                # transaction is the within-tx order (later write wins).
-                # Appends are partitioned by the system-time day so as-of
-                # reads prune whole files (PartitionFilters, see
-                # temporal.sys_day_predicate) — the 100 TB requirement that
-                # a current-state read not scan years of history.
-                if isinstance(op, Erase) and not os.path.isdir(path):
-                    # Erase must read the table it rewrites — on a
-                    # table that never existed, fail cleanly (and roll
-                    # back) instead of surfacing a raw
-                    # AnalysisException.  Delete is different: deleting
-                    # ids that were never put is a valid no-op-shaped
-                    # op (the tombstones simply hide nothing), exactly
-                    # as in the reference's model.
-                    raise ValueError(
-                        f"unknown table {op.table!r}: nothing to erase from"
-                    )
-                if isinstance(op, (Put, Delete)) and (
-                    op.app_start is not None or op.app_end is not None
-                ):
-                    self._app_bounded.add(op.table)
-                if isinstance(op, Put):
-                    rows = (
-                        bt.put(
-                            op.rows, tx_time=t, app_start=op.app_start, app_end=op.app_end
-                        )
-                        .withColumn(bt.TOMBSTONE, F.lit(False))
-                        .withColumn(bt.TX_SEQ, F.lit(seq))
-                        # duplicate ids WITHIN one Put tie on
-                        # (sys_start, _tx_seq); the stamped row id
-                        # freezes an arbitrary winner in the file so
-                        # every read of every basis agrees (see
-                        # temporal.ROW_SEQ)
-                        .withColumn(bt.ROW_SEQ, F.monotonically_increasing_id())
-                        .withColumn(bt.SYS_DAY, F.to_date(F.col(bt.SYS_START)))
-                    )
-                    self._merge_schema_cache(
-                        op.table, rows.drop(bt.SYS_DAY).schema
-                    )
-                    self._append_manifested(
-                        path, rows, pending, t, written_files, deferred_old
-                    )
-                elif isinstance(op, Delete):
-                    rows = (
-                        bt.delete_tombstone(
-                            op.ids, op.id_col, t, op.app_start, op.app_end
-                        )
-                        .withColumn(bt.TX_SEQ, F.lit(seq))
-                        .withColumn(bt.SYS_DAY, F.to_date(F.col(bt.SYS_START)))
-                    )
-                    self._merge_schema_cache(
-                        op.table, rows.drop(bt.SYS_DAY).schema
-                    )
-                    self._append_manifested(
-                        path, rows, pending, t, written_files, deferred_old
-                    )
-                elif isinstance(op, Erase):
-                    # mergeSchema: tombstone files carry a narrow schema;
-                    # a plain read could silently drop data columns that
-                    # only appear in a subset of files before the rewrite.
-                    remaining = bt.erase(
-                        self.spark.read.option("mergeSchema", "true").parquet(path),
-                        op.ids,
-                        op.id_col,
-                    )
-                    # manifest the swap BEFORE it happens: a crash
-                    # leaves the _old_ dir for recovery to restore
-                    parent, tname = os.path.split(path.rstrip("/"))
-                    prior_old = next(
-                        (o for p, o in deferred_old if p == path), None
-                    )
-                    if prior_old is not None:
-                        # second Erase on this table within one tx:
-                        # the rollback image stays the FIRST erase's
-                        # _old_ dir (pre-tx state) — rewrite without
-                        # creating (or clobbering) a deferred dir
-                        self._write_pending(
-                            pending, t, written_files, deferred_old
-                        )
-                        self._rewrite_atomic(
-                            path, remaining, preserve_old=prior_old
-                        )
-                    else:
-                        self._write_pending(
-                            pending, t, written_files,
-                            deferred_old + [(path, os.path.join(parent, f"_old_{tname}"))],
-                        )
-                        old = self._rewrite_atomic(
-                            path, remaining, defer_cleanup=True
-                        )
-                        if old is not None:
-                            deferred_old.append((path, old))
-                    # an erase removes history WITHOUT leaving a version
-                    # marker, so a stale compact can no longer be
-                    # delta-merged — invalidate it (conservative under
-                    # rollback: losing a compact only costs a re-compact)
-                    meta = os.path.join(
-                        self.root, "_current", f"{op.table}.json"
-                    )
-                    if os.path.exists(meta):
-                        os.remove(meta)
-                    # an erase leaves no CDC trace either — stamp the
-                    # history-rewrite clock so incremental view
-                    # refreshes older than this tx recompute fully
-                    self._rewrites[op.table] = t.isoformat()
+                if isinstance(op, Erase):
+                    self._erase(tx, op)
+                else:
+                    rows = _version_rows(op, t, seq)
+                    if op.app_start is not None or op.app_end is not None:
+                        self._app_bounded.add(op.table)
+                    self._append(tx, op.table, rows)
                 touched.add(op.table)
-            self._persist_clock(
-                commit_txid=os.path.basename(pending)[3:-5]
-            )
-        except BaseException:
-            self._rollback(
-                pre_tables, written_files, touched_paths, deferred_old
-            )
-            self._tx_counter, self._last_tx_time = prev_counter, prev_time
-            self._table_schemas = prev_schemas
-            self._app_bounded = prev_app_bounded
-            self._rewrites = prev_rewrites
-            self._remove_pending(pending)
-            raise
-        self._remove_pending(pending)  # tx durable: manifest retires
-        for _path, old in deferred_old:
-            shutil.rmtree(old, ignore_errors=True)
         try:
             self._maybe_auto_compact(touched)
         except Exception as exc:
@@ -1596,13 +1494,60 @@ class Engine:
                             )
         return acquire_basis(self._all_tables(), t, self._basis_schemas())
 
-    def _rollback(
-        self,
-        pre_tables: set[str],
-        written_files: list[str],
-        touched_paths: set[str],
-        deferred_old: list[tuple[str, str]],
-    ) -> None:
+    def _erase(self, tx: _Tx, op: Erase) -> None:
+        """Rewrite ``op.table`` without ``op.ids`` within ``tx``: the
+        swap is listed in the pending manifest before it happens and
+        its ``_old_`` image is kept until the commit, so a failure or
+        a crash restores the pre-transaction table."""
+        path = self._table_path(op.table)
+        tx.paths.add(path)
+        if not os.path.isdir(path):
+            # Erase must read the table it rewrites — on a table that
+            # never existed, fail cleanly (and roll back) instead of
+            # surfacing a raw AnalysisException.  Delete is different:
+            # deleting ids that were never put is a valid no-op-shaped
+            # op (the tombstones simply hide nothing), exactly as in
+            # the reference's model.
+            raise ValueError(
+                f"unknown table {op.table!r}: nothing to erase from"
+            )
+        # mergeSchema: tombstone files carry a narrow schema; a plain
+        # read could silently drop data columns that only appear in a
+        # subset of files before the rewrite.
+        remaining = bt.erase(
+            self.spark.read.option("mergeSchema", "true").parquet(path),
+            op.ids,
+            op.id_col,
+        )
+        parent, tname = os.path.split(path.rstrip("/"))
+        prior_old = next((o for p, o in tx.deferred_old if p == path), None)
+        if prior_old is not None:
+            # second Erase on this table within one tx: the rollback
+            # image stays the FIRST erase's _old_ dir (pre-tx state) —
+            # rewrite without creating (or clobbering) a deferred dir
+            self._write_pending(tx.pending, tx.t, tx.written, tx.deferred_old)
+            self._rewrite_atomic(path, remaining, preserve_old=prior_old)
+        else:
+            self._write_pending(
+                tx.pending, tx.t, tx.written,
+                tx.deferred_old + [(path, os.path.join(parent, f"_old_{tname}"))],
+            )
+            old = self._rewrite_atomic(path, remaining, defer_cleanup=True)
+            if old is not None:
+                tx.deferred_old.append((path, old))
+        # an erase removes history WITHOUT leaving a version marker, so
+        # a stale compact can no longer be delta-merged — invalidate it
+        # (conservative under rollback: losing a compact only costs a
+        # re-compact)
+        meta = os.path.join(self.root, "_current", f"{op.table}.json")
+        if os.path.exists(meta):
+            os.remove(meta)
+        # an erase leaves no CDC trace either — stamp the history-
+        # rewrite clock so incremental view refreshes older than this
+        # tx recompute fully
+        self._rewrites[op.table] = tx.t.isoformat()
+
+    def _rollback(self, tx: _Tx) -> None:
         """Undo every file a failed transaction wrote.  Erase rewrites
         roll back first (newest-first: rename the kept ``_old_`` dir
         back over the rewritten one — it contains the pre-erase state,
@@ -1612,28 +1557,26 @@ class Engine:
         winner's freshly committed files are untouched — and emptied
         partition dirs pruned.  A table this transaction created is
         removed only if nothing else wrote to it in the meantime."""
-        for path, old in reversed(deferred_old):
+        for path, old in reversed(tx.deferred_old):
             # the existence check guards the rewritten table: if the
             # old dir is gone (already restored, or never created),
             # blowing away `path` would destroy the only copy
             if os.path.exists(old):
                 shutil.rmtree(path, ignore_errors=True)
                 os.rename(old, path)
-        for f in written_files:
+        for f in tx.written:
             try:
                 os.remove(f)
             except OSError:
                 pass
-        for path in touched_paths:
-            if os.path.exists(path):
-                _prune_empty_dirs(path)
-        for name in self._all_tables():
-            if name not in pre_tables:
-                p = self._table_path(name)
-                if not any(
-                    f.endswith(".parquet") for f in _walk_all_files(p)
-                ):
-                    shutil.rmtree(p, ignore_errors=True)
+        for path in tx.paths:
+            if not os.path.exists(path):
+                continue
+            _prune_empty_dirs(path)
+            if os.path.basename(path) not in tx.pre_tables and not any(
+                f.endswith(".parquet") for f in _walk_all_files(path)
+            ):
+                shutil.rmtree(path, ignore_errors=True)
 
     def _maybe_auto_compact(self, touched: set[str]) -> None:
         """Post-commit small-file policy: every transaction appends at
@@ -1808,29 +1751,28 @@ class Engine:
         version rows (version resolution tolerates exact duplicates
         for current-state reads but history() would show them) — tail
         with disjoint ``(since, until]`` windows, which is what
-        ``changes``' half-open interval is for."""
-        rows = (
-            changes.withColumn(
-                bt.TOMBSTONE, F.col("_change") == F.lit("delete")
-            )
-            .drop("_change")
-            .withColumn(bt.SYS_DAY, F.to_date(F.col(bt.SYS_START)))
-        )
-        path = self._table_path(table)
-        self._check_sole_writer()
-        # a feed may carry app-bounded rectangles the replica cannot
-        # cheaply detect — conservatively disable merge-on-read
-        self._app_bounded.add(table)
-        self._merge_schema_cache(table, rows.drop(bt.SYS_DAY).schema)
-        self._append_rows(path, rows)
+        ``changes``' half-open interval is for.
+
+        The slice commits like a transaction (``_manifested``): a
+        failure or crash before the clock persists leaves the replica
+        as it was.  An empty slice changes nothing."""
+        rows = changes.withColumn(
+            bt.TOMBSTONE, F.col("_change") == F.lit("delete")
+        ).drop("_change")
         newest = rows.agg(F.max(bt.SYS_START)).collect()[0][0]
-        if newest is not None:
-            if newest.tzinfo is not None:
-                newest = newest.astimezone(timezone.utc).replace(tzinfo=None)
+        if newest is None:
+            return
+        if newest.tzinfo is not None:
+            newest = newest.astimezone(timezone.utc).replace(tzinfo=None)
+        self._check_sole_writer()
+        with self._manifested() as tx:
             if self._last_tx_time is None or newest > self._last_tx_time:
                 self._last_tx_time = newest
-        if self._last_tx_time is not None:
-            self._persist_clock()
+            tx.t = self._last_tx_time
+            # a feed may carry app-bounded rectangles the replica cannot
+            # cheaply detect — conservatively disable merge-on-read
+            self._app_bounded.add(table)
+            self._append(tx, table, rows)
 
     def vacuum(self, table: str, older_than: str | datetime) -> None:
         try:
@@ -2275,6 +2217,9 @@ class Engine:
 class Snapshot:
     """Read view at a basis — core2's 'database value'."""
 
+    _use_compacts = True
+    _through = None  # read no version row with system start past this
+
     def __init__(self, engine: Engine, basis: Basis):
         self.engine = engine
         self.basis = basis
@@ -2283,9 +2228,43 @@ class Snapshot:
         """Raw version rows of ``table`` visible at this basis — the
         single read funnel every Snapshot surface goes through, so a
         speculative overlay (``with_tx``) only has to extend it."""
-        return self.basis.read(
+        df = self.basis.read(
             self.engine.spark, table, day_lo=day_lo, day_hi=day_hi
         )
+        if self._through is not None:
+            df = df.filter(F.col(bt.SYS_START) <= bt._ts(self._through))
+        return df
+
+    def _expand(self, ops: list) -> list[Put | Delete | Erase]:
+        """Lower a transaction's ops against this (pre-transaction)
+        snapshot — the same rules for a commit, a replay and a what-if:
+        Assert evaluates its predicate here (false or NULL aborts with
+        TxAssertionError), Call runs its fn on this snapshot and Patch
+        merges into the versions visible here; Put, Delete and Erase
+        pass through."""
+        out: list[Put | Delete | Erase] = []
+        for op in ops:
+            if isinstance(op, Assert):
+                row = self.sql(f"SELECT ({op.predicate}) AS ok").head()
+                if row is None or row["ok"] is not True:
+                    raise TxAssertionError(
+                        op.message
+                        or f"transaction assertion failed: {op.predicate}"
+                    )
+            elif isinstance(op, Call):
+                out.extend(self._expand(op.fn(self)))
+            elif isinstance(op, Patch):
+                from core2_spark.sql_dml import patch_to_ops
+
+                out.extend(
+                    patch_to_ops(
+                        self.engine, self, op.table, list(op.docs), op.id_col,
+                        app_start=op.app_start, app_end=op.app_end,
+                    )
+                )
+            else:
+                out.append(op)
+        return out
 
     def with_tx(
         self,
@@ -2301,9 +2280,12 @@ class Snapshot:
         dialect, Datalog, changes() — and the underlying engine state
         is untouched; speculative snapshots stack (``.with_tx(...)``
         on a speculative snapshot layers another transaction).
-        Speculative Erase hides the id's whole history, like the real
-        op (without the rewrite).  Call ops expand against THIS
-        snapshot."""
+
+        Ops are those ``submit_tx`` takes, lowered by the same rules:
+        Assert, Call and Patch expand against this snapshot at the
+        speculative clock, and Put and Delete stamp the version rows a
+        commit would write.  Speculative Erase hides the id's whole
+        history, like the real op (without the rewrite)."""
         t = (
             _to_datetime(tx_time)
             if tx_time is not None
@@ -2314,43 +2296,18 @@ class Snapshot:
                 f"speculative tx_time {t} is not after the basis clock "
                 f"({self.basis.current_time})"
             )
-        expanded = []
-        for op in ops:
-            if isinstance(op, Call):
-                expanded.extend(op.fn(self))
-            else:
-                expanded.append(op)
+        pre = self._at(t)
         overlays: dict[str, DataFrame] = {}
         erased: dict[str, DataFrame] = {}
-        for seq, op in enumerate(expanded):
-            if isinstance(op, Put):
-                rows = (
-                    bt.put(
-                        op.rows,
-                        tx_time=t,
-                        app_start=op.app_start,
-                        app_end=op.app_end,
-                    )
-                    .withColumn(bt.TOMBSTONE, F.lit(False))
-                    .withColumn(bt.TX_SEQ, F.lit(seq))
-                )
-            elif isinstance(op, Delete):
-                rows = bt.delete_tombstone(
-                    op.ids, op.id_col, t, op.app_start, op.app_end
-                ).withColumn(bt.TX_SEQ, F.lit(seq))
-            elif isinstance(op, Erase):
-                ids = op.ids.select(F.col(op.id_col).alias("id")).distinct()
-                erased[op.table] = (
-                    erased[op.table].unionByName(ids)
-                    if op.table in erased
-                    else ids
-                )
-                continue
+        for seq, op in enumerate(pre._expand(ops)):
+            if isinstance(op, Erase):
+                into = erased
+                rows = op.ids.select(F.col(op.id_col).alias("id")).distinct()
             else:
-                raise TypeError(f"unsupported speculative op {op!r}")
-            overlays[op.table] = (
-                overlays[op.table].unionByName(rows, allowMissingColumns=True)
-                if op.table in overlays
+                into, rows = overlays, _version_rows(op, t, seq)
+            into[op.table] = (
+                into[op.table].unionByName(rows, allowMissingColumns=True)
+                if op.table in into
                 else rows
             )
         manifests = dict(self.basis.manifests)
@@ -2358,13 +2315,20 @@ class Snapshot:
             # a speculative Put may create a brand-new table: an empty
             # manifest entry makes sql() register its view too
             manifests.setdefault(tname, ())
-        basis = Basis(
-            current_time=t,
-            manifests=manifests,
-            roots=dict(self.basis.roots),
-            schemas=dict(self.basis.schemas),
-        )
-        return _SpeculativeSnapshot(self, basis, overlays, erased)
+        basis = replace(pre.basis, manifests=manifests)
+        return _SpeculativeSnapshot(pre, basis, overlays, erased)
+
+    def _at(self, t: datetime) -> "Snapshot":
+        """The versions this snapshot reads, read at the later clock
+        ``t``: no compact (one taken after this basis holds later
+        commits) and no version row past this basis' clock (the
+        pinned manifests can hold a concurrent writer's published but
+        unlogged files)."""
+        s = copy.copy(self)
+        s.basis = replace(self.basis, current_time=t)
+        s._use_compacts = False
+        s._through = self.basis.current_time
+        return s
 
     def history(self, table: str) -> DataFrame:
         """FOR ALL SYSTEM_TIME — every version visible at the basis."""
@@ -2403,9 +2367,7 @@ class Snapshot:
         version covering the app instant wins, tombstones hide ids —
         partial retroactive corrections never shadow periods they
         don't cover."""
-        if system_time is None and app_time is None and getattr(
-            self, "_use_compacts", True
-        ):
+        if system_time is None and app_time is None and self._use_compacts:
             # default read at the basis clock: a fresh compact (if the
             # engine materialized one at exactly this clock) is a plain
             # scan — no window, no shuffle
@@ -2509,6 +2471,7 @@ class Snapshot:
         coming from the maintenance tier."""
         import uuid
 
+        from core2_spark import sql_dialect
         from core2_spark.sql_dialect import (
             find_temporal_tables,
             pin_now,
@@ -2611,48 +2574,15 @@ class Snapshot:
                 )
                 df.createOrReplaceTempView(bare_map[name])
                 registered.append(bare_map[name])
-            if "asof" in rewritten.lower():  # zero overhead otherwise
-                from core2_spark.sql_dialect import rewrite_asof_joins
-
-                rewritten = rewrite_asof_joins(rewritten)
-            if "nest_" in rewritten.lower():  # zero overhead otherwise
-                from core2_spark.sql_dialect import rewrite_nest_subqueries
-
-                rewritten = rewrite_nest_subqueries(rewritten)
-
-            def _run(s: str) -> DataFrame:
-                # spark.sql analyzes eagerly, so the views are
-                # resolvable garbage once this returns
-                try:
-                    return spark.sql(s)
-                except Exception:
-                    # Catalyst cannot decorrelate EXISTS with
-                    # correlation inside a disjunction; distributing
-                    # EXISTS over the OR (an exact identity) makes
-                    # each branch conjunctive.  Retry-only so
-                    # decorrelatable queries keep their single
-                    # semi-join plan.
-                    from core2_spark.sql_dialect import (
-                        split_exists_disjunctions,
-                    )
-
-                    split = split_exists_disjunctions(s)
-                    if split == s:
-                        raise
-                    return spark.sql(split)
-
-            # WITH RECURSIVE compiles to the fixpoint operator over
-            # the already-rewritten references (temporal clauses and
-            # basis views resolve inside CTE bodies too)
-            from core2_spark.sql_dialect import expand_recursive_ctes
 
             def _fresh(tag: str) -> str:
                 v = f"{tag}_{uid}"
                 registered.append(v)
                 return v
 
-            expanded = expand_recursive_ctes(rewritten, _run, _fresh)
-            return _run(rewritten if expanded is None else expanded)
+            # spark.sql analyzes eagerly, so the views are resolvable
+            # garbage once this returns
+            return sql_dialect.run_dialect(spark, rewritten, _fresh)
         finally:
             for v in registered:
                 spark.catalog.dropTempView(v)
@@ -2828,9 +2758,10 @@ class Snapshot:
 
 class _SpeculativeSnapshot(Snapshot):
     """Snapshot layering uncommitted version rows over a parent
-    snapshot (``Snapshot.with_tx``).  All read surfaces inherit; only
-    the version funnel changes, and compact fast paths are bypassed
-    (they materialize COMMITTED state only)."""
+    snapshot (``Snapshot.with_tx``; the parent is read through
+    ``Snapshot._at``, so its rows end at its own clock).  All read
+    surfaces inherit; only the version funnel changes, and compact
+    fast paths are bypassed (they materialize COMMITTED state only)."""
 
     def __init__(self, parent: Snapshot, basis: Basis, overlays, erased):
         super().__init__(parent.engine, basis)
@@ -2845,12 +2776,10 @@ class _SpeculativeSnapshot(Snapshot):
         if self.basis.manifests.get(table):
             base = self._parent._versions(table, day_lo=day_lo, day_hi=day_hi)
         if ov is not None:
-            if base is not None and bt.SYS_DAY in base.columns:
-                ov = ov.withColumn(
-                    bt.SYS_DAY, F.to_date(F.col(bt.SYS_START))
-                )
+            # overlay rows carry no _sys_day (that is a file-layout
+            # column); the parent's files were already pruned by day
             base = (
-                base.unionByName(ov, allowMissingColumns=True)
+                base.drop(bt.SYS_DAY).unionByName(ov, allowMissingColumns=True)
                 if base is not None
                 else ov
             )

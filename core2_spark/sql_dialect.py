@@ -1518,6 +1518,37 @@ def _rewrite_one_nest(sql: str) -> str | None:
     return None
 
 
+def run_dialect(spark: SparkSession, sql: str, fresh_name) -> DataFrame:
+    """Run SQL whose table references are already rewritten through the
+    rest of the dialect chain, in order: ASOF joins, NEST_ONE/NEST_MANY
+    subqueries, WITH RECURSIVE (compiled to the fixpoint operator over
+    the rewritten references, so temporal clauses and views resolve
+    inside CTE bodies too), then ``spark.sql`` — retried once with
+    EXISTS distributed over OR when Spark cannot plan the original.
+    ``fresh_name(tag)`` names the recursion's scratch views; the caller
+    drops them."""
+    if "asof" in sql.lower():  # zero overhead otherwise
+        sql = rewrite_asof_joins(sql)
+    if "nest_" in sql.lower():  # zero overhead otherwise
+        sql = rewrite_nest_subqueries(sql)
+
+    def run(s: str) -> DataFrame:
+        try:
+            return spark.sql(s)
+        except Exception:
+            # Catalyst cannot decorrelate EXISTS with correlation inside
+            # a disjunction; distributing EXISTS over the OR (an exact
+            # identity) makes each branch conjunctive.  Retry-only so
+            # decorrelatable queries keep their single semi-join plan.
+            split = split_exists_disjunctions(s)
+            if split == s:
+                raise
+            return spark.sql(split)
+
+    expanded = expand_recursive_ctes(sql, run, fresh_name)
+    return run(sql if expanded is None else expanded)
+
+
 def sql_with_temporal(
     spark: SparkSession,
     sql: str,
@@ -1525,16 +1556,13 @@ def sql_with_temporal(
 ) -> DataFrame:
     """Run SQL with the temporal dialect enabled.  ``version_views``
     registers version tables (with the four temporal columns and
-    system_time_end already derived) as temp views first.  The
-    ``WITH RECURSIVE`` frontend is available here too."""
+    system_time_end already derived) as temp views first.  The rest of
+    the dialect (``run_dialect``) is available here too."""
     import uuid as _uuid
 
     if version_views:
         for name, df in version_views.items():
             df.createOrReplaceTempView(name)
-    rewritten = rewrite_temporal_sql(sql)
-    if "asof" in rewritten.lower():  # zero overhead otherwise
-        rewritten = rewrite_asof_joins(rewritten)
     scratch: list[str] = []
 
     def _fresh(tag: str) -> str:
@@ -1543,8 +1571,7 @@ def sql_with_temporal(
         return v
 
     try:
-        expanded = expand_recursive_ctes(rewritten, spark.sql, _fresh)
-        return spark.sql(rewritten if expanded is None else expanded)
+        return run_dialect(spark, rewrite_temporal_sql(sql), _fresh)
     finally:
         for v in scratch:
             spark.catalog.dropTempView(v)

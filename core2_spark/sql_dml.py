@@ -573,6 +573,24 @@ def parse_dml(statement: str) -> _ParsedDml:
     raise ValueError(f"unsupported DML statement: {statement[:120]}")
 
 
+def _column_types(df) -> dict[str, str]:
+    """Column name → Spark SQL type of a target table's current state:
+    the types DML casts new values to.  A bare literal (``4`` is INT,
+    ``0.0`` DECIMAL(1,1)) would otherwise fork the parquet schema of a
+    BIGINT/DOUBLE version table (merge error on the next read)."""
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+
+def _cast_to(rows, types: dict[str, str]):
+    """``rows`` with each column ``types`` names cast to that type."""
+    return rows.select(
+        *[
+            rows[c].cast(types[c]).alias(c) if c in types else rows[c]
+            for c in rows.columns
+        ]
+    )
+
+
 def dml_to_ops(engine, statement: str, id_col: str = "id") -> list:
     """Compile one DML statement to engine ops against the CURRENT
     pre-transaction snapshot (core2: DML runs deterministically at
@@ -606,16 +624,7 @@ def dml_to_ops(engine, statement: str, id_col: str = "id") -> list:
                 f"the id key {id_col!r}"
             )
         if p.table in snap.basis.manifests:
-            types = {
-                f.name: f.dataType.simpleString()
-                for f in snap.table(p.table).schema.fields
-            }
-            rows = rows.select(
-                *[
-                    rows[c].cast(types[c]).alias(c) if c in types else rows[c]
-                    for c in rows.columns
-                ]
-            )
+            rows = _cast_to(rows, _column_types(snap.table(p.table)))
         return [Put(p.table, rows)]
 
     if p.verb == "patch":
@@ -630,21 +639,8 @@ def dml_to_ops(engine, statement: str, id_col: str = "id") -> list:
         rows = spark.sql(
             f"SELECT * FROM (VALUES {p.detail['values']}) AS _ins({cols})"
         )
-        # align literal types with the existing table schema: a bare
-        # `4` is INT and `4.0` DECIMAL(2,1), which would fork the
-        # parquet schema of a BIGINT/DOUBLE version table (merge error
-        # on the next read) — cast by column name like UPDATE does
         if p.table in snap.basis.manifests:
-            types = {
-                f.name: f.dataType.simpleString()
-                for f in snap.table(p.table).schema.fields
-            }
-            rows = rows.select(
-                *[
-                    rows[c].cast(types[c]).alias(c) if c in types else rows[c]
-                    for c in rows.columns
-                ]
-            )
+            rows = _cast_to(rows, _column_types(snap.table(p.table)))
         return [Put(p.table, rows)]
 
     if p.verb == "insert_select":
@@ -671,14 +667,9 @@ def dml_to_ops(engine, statement: str, id_col: str = "id") -> list:
         if p.verb == "update":
             projections = []
             set_map = dict(p.detail["sets"])
-            types = {
-                f.name: f.dataType.simpleString() for f in matched.schema.fields
-            }
+            types = _column_types(matched)
             for name in matched.columns:
                 if name in set_map:
-                    # cast to the column's existing type: a bare literal
-                    # (0.0 → DECIMAL(1,1)) would otherwise fork the
-                    # parquet schema of the version table
                     projections.append(
                         f"CAST(({set_map[name]}) AS {types[name]}) AS {name}"
                     )
@@ -773,7 +764,7 @@ def _merge_to_ops(engine, snap, p: _ParsedDml, id_col: str) -> list:
                 "matched by more than one source row"
             )
 
-        types = {f.name: f.dataType.simpleString() for f in cur.schema.fields}
+        types = _column_types(cur)
         ops: list = []
         matched_clauses = [c for c in d["clauses"] if c["matched"]]
         unmatched_clauses = [c for c in d["clauses"] if not c["matched"]]
@@ -906,14 +897,9 @@ def patch_to_ops(engine, snap, table: str, records: list[dict],
     # row reads NULL either way); never let it force a column type
     records = _drop_allnull_new_keys(records, set(cur.columns))
     pdf = records_to_df(spark, records, mask_col=mask)
-    types = {f.name: f.dataType.simpleString() for f in cur.schema.fields}
-    pdf = pdf.select(
-        *[
-            pdf[c].cast(types[c]).alias(c) if c in types and c != mask
-            else pdf[c]
-            for c in pdf.columns
-        ]
-    )
+    types = _column_types(cur)
+    types.pop(mask, None)
+    pdf = _cast_to(pdf, types)
     patch_cols = [c for c in pdf.columns if c != mask]
     if len(ids) <= 256:
         # small lists push down into the parquet scan (row-group

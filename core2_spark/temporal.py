@@ -162,11 +162,6 @@ def scan_between(
     )
 
 
-def scan_all_time(versions: DataFrame) -> DataFrame:
-    """``FOR ALL SYSTEM_TIME`` — the full version history, unfiltered."""
-    return versions
-
-
 def latest_versions(
     versions: DataFrame,
     id_col: str = "id",
@@ -260,40 +255,6 @@ def without_tombstones(versions: DataFrame) -> DataFrame:
     if TOMBSTONE in versions.columns:
         return versions.filter(~F.coalesce(F.col(TOMBSTONE), F.lit(False)))
     return versions
-
-
-def materialize_current(
-    versions: DataFrame, path: str, id_col: str = "id"
-) -> DataFrame:
-    """Precompute the "current state" view to Parquet (SURVEY.md §4's
-    optional optimization): the latest-version window dedup runs once
-    at write time, so every subsequent current-state query is a plain
-    scan with pushdown — no window, no shuffle.  As-of-history queries
-    keep using the full version table; refresh after each ingest batch
-    (cheap: one key-partitioned shuffle).
-    """
-    current = without_tombstones(
-        latest_versions(close_system_versions(versions, id_col), id_col)
-    )
-    current.write.mode("overwrite").parquet(path)
-    return current
-
-
-def delete(
-    versions_now: DataFrame,
-    ids: DataFrame,
-    id_col: str,
-    tx_time: str | datetime,
-) -> DataFrame:
-    """core2 `:delete`: append rows closing the app-time period at
-    tx_time for matching ids.  Returns the tombstone rows to append."""
-    current = latest_versions(versions_now, id_col)
-    return (
-        current.join(F.broadcast(ids), id_col, "left_semi")
-        .withColumn(APP_END, _ts(tx_time))
-        .withColumn(SYS_START, _ts(tx_time))
-        .withColumn(SYS_END, _ts(END_OF_TIME))
-    )
 
 
 def erase(versions: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:

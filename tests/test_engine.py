@@ -955,10 +955,9 @@ def test_merge_on_read_ignores_inflight_future_rows(spark):
         .withColumn(bt.ROW_SEQ, F.monotonically_increasing_id())
         .withColumn(bt.SYS_DAY, F.to_date(F.col(bt.SYS_START)))
     )
-    pending = eng._pending_path()
-    eng._append_manifested(
-        eng._table_path("t"), rows, pending, future, [], []
-    )
+    from core2_spark.engine import _Tx
+
+    eng._append(_Tx(eng._pending_path(), set(), t=future), "t", rows)
     reader = Engine(spark, root)
     merged = reader.db().table("t")
     assert any("_current" in f for f in merged.inputFiles())
@@ -1287,6 +1286,206 @@ def test_speculative_with_tx(spark, engine):
     )
     assert {r["id"] for r in spec4.table("trades").collect()} == {1, 2, 3, 9}
 
+
+def _rows(r) -> tuple:
+    return tuple(sorted(r.asDict().items()))
+
+
+def _answers(snap, since) -> dict:
+    """Everything a snapshot answers about table t, order-free."""
+    return {
+        "table": sorted(map(_rows, snap.table("t").collect()), key=repr),
+        "history": sorted(map(_rows, snap.history("t").collect()), key=repr),
+        "changes": sorted(
+            map(_rows, snap.changes("t", since=since).collect()), key=repr
+        ),
+    }
+
+
+def _differential_ops(spark, case):
+    from pyspark.sql import functions as F
+
+    from core2_spark.engine import Assert, Call, Patch
+
+    mk = lambda rows: spark.createDataFrame(rows, "id long, v string, n long")
+    ids = lambda *xs: spark.createDataFrame([(x,) for x in xs], "id long")
+    return {
+        "put_duplicate_ids": [
+            Put("t", mk([(1, "x", 10), (1, "y", 11), (1, "z", 12), (5, "e", 5)]))
+        ],
+        "bounded_delete": [
+            Delete(
+                "t", ids(2, 9),
+                app_start="2024-01-01 12:00:00", app_end="2024-03-01 00:00:00",
+            ),
+            Put("t", mk([(3, "c2", 30)])),
+        ],
+        "patch": [Patch("t", ({"id": 3, "v": "p"}, {"id": 6, "n": 60}))],
+        "assert_true": [
+            Assert("(SELECT COUNT(*) FROM t) = 4"),
+            Put("t", mk([(7, "g", 7)])),
+        ],
+        "assert_false": [
+            Assert("(SELECT COUNT(*) FROM t) = 5", "not five"),
+            Put("t", mk([(8, "h", 8)])),
+        ],
+        "call": [
+            Call(lambda snap: [
+                Put("t", snap.table("t").filter("id > 2")
+                    .withColumn("n", F.col("n") * 10)),
+                Delete("t", ids(1)),
+            ])
+        ],
+    }[case]
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["put_duplicate_ids", "bounded_delete", "patch", "assert_true",
+     "assert_false", "call"],
+)
+def test_with_tx_answers_as_submit_tx(spark, tmp_path, case):
+    """One lowering for a what-if and a commit: ``db.with_tx(ops, t)``
+    answers table(), history() and changes() exactly as the engine
+    does after ``submit_tx(ops, t)`` — duplicate ids within a Put pick
+    the same winner, and an Assert aborts both the same way."""
+    from core2_spark.engine import TxAssertionError
+
+    eng = Engine(spark, str(tmp_path / "diff"))
+    eng.submit_tx(
+        [Put("t", spark.createDataFrame(
+            [(1, "a", 1), (2, "b", 2), (3, "c", 3), (4, "d", 4)],
+            "id long, v string, n long"))],
+        tx_time="2024-01-01 00:00:01",
+    )
+    since, t = "2024-01-01 00:00:01", "2024-01-02 00:00:01"
+    ops = _differential_ops(spark, case)
+    if case == "assert_false":
+        with pytest.raises(TxAssertionError, match="not five"):
+            eng.db().with_tx(ops, t)
+        with pytest.raises(TxAssertionError, match="not five"):
+            eng.submit_tx(ops, t)
+        assert eng.db().table("t").count() == 4
+        return
+    what_if = _answers(eng.db().with_tx(ops, t), since)
+    eng.submit_tx(ops, t)
+    assert what_if == _answers(eng.db(), since)
+
+
+@pytest.mark.parametrize("later", ["commit_and_compact", "inflight"])
+def test_with_tx_expands_over_the_pinned_rows(spark, tmp_path, later):
+    """A what-if at a clock past a later commit expands its Assert and
+    Call over the snapshot's own rows: neither a compact taken after
+    the basis nor a concurrent writer's published but unlogged rows
+    reach the expansion or the speculative reads."""
+    from datetime import datetime
+
+    from core2_spark.engine import Assert, Call, _Tx, _version_rows
+
+    eng = Engine(spark, str(tmp_path / "pin"))
+    mk = lambda ids: spark.createDataFrame([(i, "a") for i in ids], "id long, v string")
+    eng.submit_tx([Put("t", mk([1, 2, 3, 4]))], tx_time="2024-01-01 00:00:01")
+    t2 = datetime(2024, 1, 2, 0, 0, 1)
+    if later == "commit_and_compact":
+        db = eng.db()
+        eng.submit_tx([Put("t", mk([5]))], tx_time=t2)
+        eng.compact("t")
+    else:
+        # a peer mid-commit: its rows are published, the log is not
+        put = Put("t", mk([5]))
+        eng._append(_Tx(eng._pending_path(), set(), t=t2), "t", _version_rows(put, t2, 0))
+        db = Engine(spark, eng.root).db()
+    seen = []
+
+    def count(snap):
+        seen.append(snap.table("t").count())
+        return [Put("t", mk([6]))]
+
+    spec = db.with_tx(
+        [Assert("(SELECT COUNT(*) FROM t) = 4"), Call(count)],
+        "2024-01-03 00:00:01",
+    )
+    assert seen == [4]
+    assert sorted(r["id"] for r in spec.table("t").collect()) == [1, 2, 3, 4, 6]
+
+
+def _replica(spark, tmp_path):
+    """A replica holding id 1 from a source's feed, and the feed's
+    tail (ids 10 and 11) still to apply."""
+    src = Engine(spark, str(tmp_path / "src"))
+    dst = Engine(spark, str(tmp_path / "dst"))
+    mk = lambda ids: spark.createDataFrame([(i, "v") for i in ids], "id long, v string")
+    src.submit_tx([Put("t", mk([1]))], tx_time="2024-01-01 00:00:01")
+    src.submit_tx([Put("t", mk([10, 11]))], tx_time="2024-01-02 00:00:01")
+    feed = src.db()
+    dst.apply_changes(
+        "t", feed.changes("t", since="2024-01-01", until="2024-01-01 00:00:01")
+    )
+    return dst, feed.changes("t", since="2024-01-01 00:00:01")
+
+
+def _ids(eng) -> list:
+    return sorted(r["id"] for r in eng.db().table("t").collect())
+
+
+@pytest.mark.parametrize("writer", ["submit_tx", "apply_changes"])
+def test_failed_commit_leaves_no_rows(spark, tmp_path, monkeypatch, writer):
+    """A commit whose clock persist fails rolls back everything it
+    published, on every write path: after reopen the replica still
+    reads only id 1, and the same slice then applies cleanly."""
+    dst, tail = _replica(spark, tmp_path)
+    rows = spark.createDataFrame([(10, "v"), (11, "v")], "id long, v string")
+    write = {
+        "submit_tx": lambda: dst.submit_tx([Put("t", rows)]),
+        "apply_changes": lambda: dst.apply_changes("t", tail),
+    }[writer]
+
+    def fail(*_a, **_k):
+        raise OSError("injected persist failure")
+
+    monkeypatch.setattr(dst, "_persist_clock", fail)
+    with pytest.raises(OSError, match="injected"):
+        write()
+    monkeypatch.undo()
+    assert _ids(Engine(spark, dst.root)) == [1]
+    assert not os.listdir(os.path.join(dst.root, "_pending"))
+    write()
+    assert _ids(dst) == _ids(Engine(spark, dst.root)) == [1, 10, 11]
+
+
+@pytest.mark.parametrize("writer", ["submit_tx", "apply_changes"])
+def test_crash_between_publish_and_persist_rolls_back_at_open(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A process that dies after publishing and before persisting the
+    clock leaves its pending manifest; the next open rolls the
+    published rows back, whichever path wrote them."""
+    dst, tail = _replica(spark, tmp_path)
+    rows = spark.createDataFrame([(10, "v"), (11, "v")], "id long, v string")
+    write = {
+        "submit_tx": lambda: dst.submit_tx([Put("t", rows)]),
+        "apply_changes": lambda: dst.apply_changes("t", tail),
+    }[writer]
+
+    class Crash(BaseException):
+        pass
+
+    def crash(*_a, **_k):
+        raise Crash()
+
+    # the process dies at the persist: nothing after it runs
+    monkeypatch.setattr(dst, "_persist_clock", crash)
+    monkeypatch.setattr(dst, "_rollback", lambda *_a: None)
+    monkeypatch.setattr(dst, "_remove_pending", lambda *_a: None)
+    with pytest.raises(Crash):
+        write()
+    # the published rows are on disk (history shows them) until recovery
+    assert Engine(spark, dst.root).db().history("t").count() == 3
+    assert os.listdir(os.path.join(dst.root, "_pending"))
+    reopened = Engine(spark, dst.root, reclaim_after_s=0)
+    assert _ids(reopened) == [1]
+    assert reopened.db().history("t").count() == 1
+    assert not os.listdir(os.path.join(dst.root, "_pending"))
 
 def test_duplicate_ids_within_one_put_read_repeatably(spark, engine):
     """Within-op duplicate ids have no defined winner (DataFrames are

@@ -45,14 +45,14 @@ def test_bitemporal_put_delete_erase_roundtrip(spark):
     feb = bt.scan_as_of(versions, system_time="2024-02-15")
     assert {(r["id"], r["bal"]) for r in feb.collect()} == {(1, 150.0), (2, 200.0)}
 
-    # delete id=2 at 2024-03-01: appended tombstone closes app-time.
+    # delete id=2 at 2024-03-01: an appended tombstone hides it from then on.
     ids = spark.createDataFrame([(2,)], "id long")
-    bt.delete(versions, ids, "id", "2024-03-01").write.mode("append").parquet(path)
-    versions2 = bt.close_system_versions(spark.read.parquet(path), "id")
-    mar = bt.scan_as_of(versions2, system_time="2024-03-15", app_time="2024-03-15")
+    bt.delete_tombstone(ids, "id", "2024-03-01").write.mode("append").parquet(path)
+    versions2 = spark.read.option("mergeSchema", "true").parquet(path)
+    mar = bt.resolve_as_of(versions2, "2024-03-15", "2024-03-15")
     assert {r["id"] for r in mar.collect()} == {1}
     # history still answers as-of-February correctly (immutability).
-    feb2 = bt.scan_as_of(versions2, system_time="2024-02-15", app_time="2024-02-15")
+    feb2 = bt.resolve_as_of(versions2, "2024-02-15", "2024-02-15")
     assert {r["id"] for r in feb2.collect()} == {1, 2}
 
     # erase physically removes every version of id=1.
@@ -244,20 +244,6 @@ def test_streaming_dedup_within_watermark(spark):
     sink = run_stream_to_memory(dedup_within_watermark(stream), mode="append")
     n = spark.table(sink).count()
     assert n == 1000  # event_ids are unique; dedup must not drop or dup
-
-
-def test_materialize_current_view(spark):
-    from core2_spark import temporal as bt2
-
-    path = f"{DATA_DIR}/current_view"
-    v1 = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0)], "id long, s string, v double"
-    )
-    v2 = spark.createDataFrame([(1, "a2", 1.5)], "id long, s string, v double")
-    versions = bt2.put(v1, "2024-01-01").unionByName(bt2.put(v2, "2024-02-01"))
-    bt2.materialize_current(versions, path)
-    cur = {(r["id"], r["s"]) for r in spark.read.parquet(path).collect()}
-    assert cur == {(1, "a2"), (2, "b")}
 
 
 def test_merge_schema_parquet_evolution(spark):

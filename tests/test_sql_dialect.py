@@ -202,6 +202,30 @@ def test_sql_with_temporal_end_to_end(spark):
         (2, "keep", "beta"),
     ]
 
+
+def test_sql_with_temporal_runs_the_whole_dialect(spark):
+    """sql_with_temporal runs the same chain as Snapshot.sql after the
+    table rewrite: NEST_MANY, and the EXISTS-over-OR retry."""
+    c = spark.createDataFrame([(1,), (2,)], "id long")
+    o = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "cid long, v string")
+    got = sql_with_temporal(
+        spark,
+        "SELECT c.id, NEST_MANY(SELECT o.v AS v FROM o WHERE o.cid = c.id) "
+        "AS vs FROM c ORDER BY c.id",
+        version_views={"c": c, "o": o},
+    ).collect()
+    assert [(r["id"], [x["v"] for x in r["vs"]]) for r in got] == [
+        (1, ["a", "b"]),
+        (2, ["c"]),
+    ]
+    n = sql_with_temporal(
+        spark,
+        "SELECT COUNT(*) AS n FROM c WHERE EXISTS (SELECT 1 FROM o "
+        "WHERE o.cid = c.id AND o.v = 'c' OR o.cid = c.id - 1)",
+        version_views={"c": c, "o": o},
+    ).collect()[0]["n"]
+    assert n == 1
+
 def test_overlaps_rewrite():
     out = rewrite_temporal_sql(
         "SELECT * FROM t WHERE (a_start, a_end) OVERLAPS (b_start, b_end)"
