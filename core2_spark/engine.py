@@ -441,9 +441,6 @@ class Engine:
                 vd = os.path.join(mviews_root, d)
                 if os.path.isdir(vd):
                     bases.append(vd)
-                    if os.path.isdir(os.path.join(vd, "idkeys")):
-                        # sidecar base swaps happen one level deeper
-                        bases.append(os.path.join(vd, "idkeys"))
         # table dirs themselves: partition-wise vacuum swaps individual
         # _sys_day= dirs, leaving _old_/_tmp_ siblings INSIDE the table
         bases.extend(
@@ -2181,10 +2178,12 @@ class Engine:
         return mviews.list_views(self)
 
     def refresh_materialized_view(self, name: str) -> dict:
-        """Bring the view to the current clock; cost tracks the change
-        volume, not the table size.  Returns ``{"mode": "noop"|
-        "incremental"|"full", ...}`` — full recomputes happen only for
-        app-time-bounded tables and post-view Erase/vacuum rewrites."""
+        """Bring the view to the current clock by re-aggregating only
+        the groups the changes since the view's clock touched (a read
+        of the current state filtered to those groups).  Returns
+        ``{"mode": "noop"|"incremental"|"full", ...}`` — full
+        recomputes happen only for app-time-bounded tables and
+        post-view Erase/vacuum rewrites."""
         from core2_spark import mviews
 
         try:

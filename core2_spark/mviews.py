@@ -2,44 +2,42 @@
 
 A materialized view here is a keyed aggregate of one table's CURRENT
 state (`SELECT keys..., agg(...) FROM t GROUP BY keys`) stored under
-the engine root with the basis clock it reflects.  That restriction is
-deliberate: keyed aggregates are the shape whose maintenance cost can
-be bounded by the CHANGE volume instead of the table size — the only
-kind of "incremental" that means anything at 100 TB.
+the engine root with the basis clock it reflects.  Keyed aggregates
+are the shape where a refresh can re-aggregate only the groups a
+change touched.
 
 Refresh algebra::
 
     changed_ids   = changes(table, since = view.as_of)        -- CDC feed
-    affected_keys = keys of ANY version of a changed id       -- history
+    affected_keys = keys of the changed ids AT as_of          -- as-of read
+                  ∪ keys of the feed's put rows               -- now keys
     new_view      = (old_view  ANTI-JOIN  affected_keys)
                   ∪ groupBy(current_state ⋉ affected_keys)
 
-Why the history-based key discovery is exact: a stored group G is
-stale iff some id counted under G at ``as_of`` changed, or some
-changed id now lands in G.  The version current at ``as_of`` and the
-version current now are both in the id's history, so both group
-values are discovered.  Vacuum interactions are guarded by the
-engine's persisted per-table rewrite clock: any Erase or vacuum
-committed AFTER ``as_of`` forces a full recompute (their rewrites can
-remove exactly the versions the discovery step needs); a vacuum at
-the view's own clock is provably safe — every version needed later
-closes after ``as_of`` and is therefore above any admissible horizon.
+Why the discovery is exact: a stored group G is stale iff some id
+counted under G at ``as_of`` changed, or some changed id now lands in
+G.  The first set is the changed ids' rows in the table's state at
+``as_of`` — read through ``Snapshot.table`` on a snapshot whose clock
+is ``as_of``, so a compact at that clock or before it serves the read
+(fresh-compact scan or merge-on-read) like any other.  The second is
+the feed's put rows.  Vacuum interactions are guarded by the engine's
+persisted per-table rewrite clock: any Erase or vacuum committed
+AFTER ``as_of`` forces a full recompute (their rewrites can remove
+exactly the versions the as-of read needs); a vacuum at the view's
+own clock is provably safe — every version current at ``as_of`` is
+either still current or closes after ``as_of``, above any admissible
+horizon.
 
-Scale shape: the changed-id set comes from the manifest-pruned CDC
-tail (O(files since as_of) planning, not O(history)); the
-affected-key set is tiny and broadcast into the maintenance joins;
-when it is small enough to collect (≤ ``_INLIST_CAP`` groups) the
-re-aggregation filter becomes an IN-list PUSHED INTO the parquet scan
-(row-group stat pruning on the key columns), so the recompute reads
-only affected groups' row groups; the view rewrite is small because
-views are aggregates.  Group DISCOVERY (which keys did changed ids
-have at the view's clock?) takes the compact fast path when one
-exists at clock c ≤ as_of: the as-of key lives either in the compact
-(a NARROW id+keys scan, row-group-prunable when clustered) or in the
-manifest-pruned version slice of (c, as_of]; now-keys ride the feed
-rows.  Without a compact, discovery falls back to a column-pruned
-(id, keys) pass over history that id-bloom filters and runtime
-bloom-filter join pushdown cut to the matching row groups.
+Cost: the changed-id set comes from the manifest-pruned CDC tail.
+The as-of read is restricted to the changed ids by a literal IN-list
+(pushed into the parquet scan) up to ``_INLIST_CAP`` ids, else by a
+broadcast semi join.  The affected-key set is small and, up to
+``_INLIST_CAP`` groups, becomes an IN-list pushed into the recompute
+scan (row-group stat pruning on the key columns); above that it is
+broadcast into the maintenance joins.  The recompute reads the
+affected groups' rows of the current state, which is a pass over the
+table unless a compact serves it; the view rewrite is small because
+views are aggregates.
 
 Two situations refuse incrementality and recompute fully (reported in
 the returned stats): app-time-BOUNDED tables (a bounded period can
@@ -55,6 +53,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import replace
 from datetime import datetime
 from functools import reduce
 
@@ -100,9 +99,6 @@ def _validate(name: str, keys: list[str], aggs: dict[str, tuple[str, str]]):
             raise ValueError(f"'*' only valid with count (got {fn!r})")
         if alias in keys:
             raise ValueError(f"aggregate alias {alias!r} collides with a key")
-    for k in keys:
-        if k in ("_mv_seq", "_mv_alive"):
-            raise ValueError(f"key {k!r} is reserved for view maintenance")
 
 
 def _id_and_keys(keys: list[str]) -> list[str]:
@@ -165,297 +161,31 @@ def _inlist_condition(key_rows, keys: list[str]):
     )
 
 
-def _affected_keys(engine, snap, table, keys, as_of, feed, changed):
+def _affected_keys(snap, table, keys, as_of, feed, changed, changed_ids):
     """Distinct group keys whose stored view rows may be stale: every
     key a changed id had AT ``as_of`` (what the view counted) plus
     every key it has NOW.
 
-    Fast path — when a compact exists at clock c ≤ as_of, the as-of
-    key of a changed id lives either in the compact (state at c, a
-    NARROW id+keys column scan, row-group-prunable when the compact is
-    clustered) or in the manifest-pruned version files of (c, as_of]
-    (the id changed in between); the NOW keys ride the feed rows
-    themselves.  Discovery then costs delta + one narrow compact scan
-    instead of a pass over the full version history.
-
-    Fallback — no usable compact: scan (id, keys) over all history
-    semi-joined to the changed ids (column-pruned; id-bloom filters
-    and runtime bloom-filter pushdown cut the row groups read)."""
-    spark = engine.spark
-    # atomic (dir, clock) pointer: the versioned-compact sidecar
-    # (Engine._compact_pointer) — never read the clock and the dir in
-    # two separate steps, a concurrent compact could land in between
-    compact_path = compact_clock = None
-    if table not in engine._app_bounded:
-        ptr = engine._compact_pointer(table)
-        if ptr is not None and ptr[1] <= as_of:
-            compact_path, compact_clock = ptr
-    from core2_spark import temporal as bt
-
-    if compact_clock is None:
-        return (
-            bt.without_tombstones(snap.history(table))
-            .select(*_id_and_keys(keys))
-            .join(F.broadcast(changed), "id", "left_semi")
-            .select(*keys)
-            .distinct()
-        )
-
-    compact_keys = (
-        spark.read.parquet(compact_path)
-        .select(*_id_and_keys(keys))
-        .join(F.broadcast(changed), "id", "left_semi")
-        .select(*keys)
-    )
-    between = (
-        bt.without_tombstones(
-            snap._versions(table, day_lo=compact_clock.date(), day_hi=as_of.date())
-        )
-        .filter(
-            (F.col(bt.SYS_START) > bt._ts(compact_clock))
-            & (F.col(bt.SYS_START) <= bt._ts(as_of))
-        )
-        .select(*_id_and_keys(keys))
-        .join(F.broadcast(changed), "id", "left_semi")
-        .select(*keys)
-    )
-    # Only put rows contribute now-keys: a delete tombstone's key
-    # columns are NULL, so including them would mark the NULL group
-    # affected on every delete (spurious refresh work); the deleted
-    # row's as-of key is already found by the discovery step above.
+    The as-of keys are the changed ids' rows of ``Snapshot.table`` at
+    a snapshot of the same basis whose clock is ``as_of``, restricted
+    by the ``id IN (...)`` literal when ``changed_ids`` is given (it
+    pushes into the parquet scan) and by a broadcast semi join of
+    ``changed`` otherwise.  Only put rows contribute now-keys: a
+    delete tombstone's key columns are NULL, so including them would
+    mark the NULL group affected on every delete (spurious refresh
+    work); the deleted row's as-of key is already found above."""
+    at = snap.engine.db(replace(snap.basis, current_time=as_of))
+    rows = at.table(table).select(*_id_and_keys(keys))
+    if changed_ids is not None:
+        rows = rows.filter(F.col("id").isin(changed_ids))
+    else:
+        rows = rows.join(F.broadcast(changed), "id", "left_semi")
     now_keys = feed.filter(F.col("_change") == "put").select(*keys)
-    return compact_keys.unionByName(between).unionByName(now_keys).distinct()
+    return rows.select(*keys).unionByName(now_keys).distinct()
 
 
 def _base(engine, name: str) -> str:
     return os.path.join(engine.root, "_mviews", name)
-
-
-# -- persistent id→keys sidecar (round 6) -----------------------------
-#
-# Group DISCOVERY previously needed the table: keys-at-as_of for a
-# changed id came from a fresh compact or, failing that, an O(table)
-# narrow (id, keys) history scan.  The sidecar removes that last
-# O(table) term: each view maintains its OWN narrow record of "which
-# keys did each live id have at my clock" as a base snapshot plus
-# per-refresh delta files, so discovery reads sidecar-base row groups
-# (id-prunable) + the deltas + the CDC tail — never table history.
-#
-#   _mviews/<name>/idkeys/base           (id, keys…, _mv_alive, _mv_seq)
-#   _mviews/<name>/idkeys/delta/_mv_seq=<n>/   net per-id change of
-#                                              refresh n (partition-dir
-#                                              encoded seq)
-#
-# Crash discipline: the delta for refresh n is written BEFORE meta
-# advances, into its own _mv_seq=n dir (any half-written dir from a
-# crashed refresh is truncated away by seq ≤ meta.idkeys_seq at read
-# time and rewritten wholesale on retry); base swaps go through
-# _rewrite_atomic and are repaired at engine open.  Folding deltas
-# into the base is idempotent (latest-_mv_seq-per-id), so a crash
-# between the base swap and the delta cleanup only costs re-reading
-# already-folded rows.
-
-_IDKEYS_COMPACT_AT = 16  # fold deltas into the base past this many
-
-
-def _idkeys_dir(engine, name: str) -> str:
-    return os.path.join(_base(engine, name), "idkeys")
-
-
-def _idkeys_delta_dirs(engine, name: str, up_to: int) -> list[str]:
-    delta_root = os.path.join(_idkeys_dir(engine, name), "delta")
-    if not os.path.isdir(delta_root):
-        return []
-    out = []
-    for e in sorted(os.listdir(delta_root)):
-        if e.startswith("_mv_seq="):
-            try:
-                seq = int(e.split("=", 1)[1])
-            except ValueError:
-                continue
-            # require the committer's _SUCCESS marker: a legacy
-            # (pre-staging) crashed write can leave a partial dir,
-            # and the refresh that wrote it never advanced the view
-            # meta, so skipping it loses nothing — the seq rewrites
-            # on the retry
-            if seq <= up_to and os.path.exists(
-                os.path.join(delta_root, e, "_SUCCESS")
-            ):
-                out.append(os.path.join(delta_root, e))
-    return out
-
-
-def _idkeys_base_seq(engine, name: str) -> int:
-    """The seq whose state the base REFLECTS (marker file written just
-    before every base swap).  -1 = no marker (pre-marker sidecar or no
-    base)."""
-    marker = os.path.join(_idkeys_dir(engine, name), "base_seq")
-    try:
-        with open(marker) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return -1
-
-
-def _idkeys_stamp_base_seq(engine, name: str, seq: int) -> None:
-    marker = os.path.join(_idkeys_dir(engine, name), "base_seq")
-    with open(marker + ".tmp", "w") as f:
-        f.write(str(seq))
-    os.replace(marker + ".tmp", marker)
-
-
-def _idkeys_write_base(engine, name: str, snap, table, keys, seq: int):
-    """(Re)build the sidecar base from the table's current state at
-    the snapshot's clock — one narrow (id, keys) projection, paid at
-    create / full-refresh / fold time only.  The seq marker is stamped
-    BEFORE the swap: a crash in between makes the marker run ahead of
-    meta.idkeys_seq, which discovery treats as sidecar-invalid (safe:
-    one legacy discovery + rebuild), never as stale-keys-trusted."""
-    import shutil
-
-    df = (
-        snap.table(table)
-        .select(*_id_and_keys(keys))
-        .withColumn("_mv_alive", F.lit(True))
-        .withColumn("_mv_seq", F.lit(seq).cast("long"))
-    )
-    root = _idkeys_dir(engine, name)
-    os.makedirs(root, exist_ok=True)
-    _idkeys_stamp_base_seq(engine, name, seq)
-    engine._rewrite_atomic(os.path.join(root, "base"), df)
-    shutil.rmtree(os.path.join(root, "delta"), ignore_errors=True)
-
-
-def _idkeys_append_delta(engine, name: str, keys, feed, seq: int):
-    """Append refresh ``seq``'s net per-id effect: the latest feed row
-    per changed id — its keys if a put, a dead marker if a delete.
-    O(delta) work; the write lands in a seq-named partition dir so a
-    crashed attempt is fully replaced on retry."""
-    import shutil
-
-    from pyspark.sql import Window
-
-    from core2_spark import temporal as bt
-
-    order = [
-        F.col(c).desc()
-        for c in (bt.SYS_START, bt.TX_SEQ, bt.ROW_SEQ)
-        if c in feed.columns
-    ]
-    w = Window.partitionBy("id").orderBy(*order)
-    latest = (
-        feed.withColumn("_mv_rn", F.row_number().over(w))
-        .filter(F.col("_mv_rn") == 1)
-    )
-    put = F.col("_change") == F.lit("put")
-    delta = latest.select(
-        "id",
-        # "id" stays the un-nulled identity column above even when it
-        # is also a group key: the key value of a delete's dead marker
-        # is recoverable from the id itself
-        *[F.when(put, F.col(k)).alias(k) for k in keys if k != "id"],
-        put.alias("_mv_alive"),
-    )
-    target = os.path.join(
-        _idkeys_dir(engine, name), "delta", f"_mv_seq={seq}"
-    )
-    # Stage + rename: a concurrent refresher lists the delta root while
-    # this write is in flight, and Spark materializes part-files before
-    # the job commits — reading such a dir fails schema inference.  The
-    # staging name does not match the _mv_seq= prefix, so half-written
-    # deltas are never visible to readers; the final publish is one
-    # atomic rename.  A lost rename race means another refresher
-    # published this seq first — drop ours.
-    tmp = os.path.join(
-        _idkeys_dir(engine, name), "delta", f"_tmp_mv_seq={seq}"
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(target, ignore_errors=True)  # crashed prior attempt
-    with engine._micros_timestamps():
-        delta.write.parquet(tmp)
-    try:
-        os.replace(tmp, target)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _idkeys_asof_keys(engine, name: str, keys, seq: int, changed, changed_rows):
-    """Keys each changed id had at the view's clock, from the sidecar
-    alone: base ∪ deltas(≤ seq), restricted to the changed ids FIRST
-    (literal IN pushed into the scan when the set is small — row-group
-    stat + bloom pruning — else a broadcast semi join), then latest
-    record per id.  Returns None when the view predates the sidecar
-    (legacy fallback: table-side discovery)."""
-    from pyspark.sql import Window
-
-    base_dir = os.path.join(_idkeys_dir(engine, name), "base")
-    if not os.path.isdir(base_dir):
-        return None
-    if _idkeys_base_seq(engine, name) > seq:
-        # the base was folded/rebuilt PAST the view's recorded seq (a
-        # crash between a base swap and the meta write): its rows are
-        # post-as_of state — using them would miss moved-away groups.
-        # Invalid ⇒ caller falls back to table-side discovery and the
-        # refresh rebuilds the sidecar wholesale.
-        return None
-    spark = engine.spark
-    parts = [spark.read.parquet(base_dir)]
-    for d in _idkeys_delta_dirs(engine, name, up_to=seq):
-        seq_val = int(d.rsplit("=", 1)[1])
-        parts.append(
-            spark.read.parquet(d).withColumn(
-                "_mv_seq", F.lit(seq_val).cast("long")
-            )
-        )
-    rows = parts[0]
-    for p in parts[1:]:
-        rows = rows.unionByName(p)
-    if changed_rows is not None:
-        ids = [r["id"] for r in changed_rows]
-        rows = rows.filter(F.col("id").isin(ids) if ids else F.lit(False))
-    else:
-        rows = rows.join(F.broadcast(changed), "id", "left_semi")
-    w = Window.partitionBy("id").orderBy(F.col("_mv_seq").desc())
-    latest = (
-        rows.withColumn("_mv_rn", F.row_number().over(w))
-        .filter(F.col("_mv_rn") == 1)
-    )
-    return latest.filter(F.col("_mv_alive")).select(*keys)
-
-
-def _idkeys_maybe_fold(engine, name: str, keys, seq: int):
-    """Fold deltas into the base once enough accumulated — keeps the
-    per-refresh read fan-in bounded; amortized O(sidecar /
-    _IDKEYS_COMPACT_AT) per refresh."""
-    import shutil
-
-    from pyspark.sql import Window
-
-    dirs = _idkeys_delta_dirs(engine, name, up_to=seq)
-    if len(dirs) <= _IDKEYS_COMPACT_AT:
-        return
-    spark = engine.spark
-    base_dir = os.path.join(_idkeys_dir(engine, name), "base")
-    rows = spark.read.parquet(base_dir)
-    for d in dirs:
-        seq_val = int(d.rsplit("=", 1)[1])
-        rows = rows.unionByName(
-            spark.read.parquet(d).withColumn(
-                "_mv_seq", F.lit(seq_val).cast("long")
-            )
-        )
-    w = Window.partitionBy("id").orderBy(F.col("_mv_seq").desc())
-    folded = (
-        rows.withColumn("_mv_rn", F.row_number().over(w))
-        .filter(F.col("_mv_rn") == 1)
-        .filter(F.col("_mv_alive"))
-        .select(*_id_and_keys(keys), "_mv_alive")
-        .withColumn("_mv_seq", F.lit(seq).cast("long"))
-    )
-    _idkeys_stamp_base_seq(engine, name, seq)
-    engine._rewrite_atomic(base_dir, folded)
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _meta_path(engine, name: str) -> str:
@@ -492,7 +222,6 @@ def create(
     snap = engine.db()
     view = _compute(snap.table(table), list(keys), aggs)
     clock = engine._last_tx_time or engine._epoch
-    _idkeys_write_base(engine, name, snap, table, list(keys), seq=0)
     _store(
         engine,
         name,
@@ -502,7 +231,6 @@ def create(
             "keys": list(keys),
             "aggs": {a: list(s) for a, s in aggs.items()},
             "as_of": clock.isoformat(),
-            "idkeys_seq": 0,
         },
     )
     return read(engine, name)
@@ -551,6 +279,11 @@ def _refresh_lock(engine, name: str, timeout_s: float = 60.0,
         try:
             os.mkdir(lock)
             break
+        except FileNotFoundError:
+            # the view directory is gone (dropped): raise the clear
+            # error, or retry if a view of this name came back
+            _load_meta(engine, name)
+            continue
         except FileExistsError:
             try:
                 if _time.time() - os.path.getmtime(lock) > stale_s:
@@ -588,6 +321,31 @@ def refresh(engine, name: str) -> dict:
     _load_meta(engine, name)  # existence check with a clear error
     with _refresh_lock(engine, name):
         return _refresh_locked(engine, name)
+
+
+def drop(engine, name: str) -> None:
+    """Delete the view.  The drop takes the refresh lock, so a refresh
+    already running finishes first and cannot write the view back
+    afterwards; meta goes first, so a refresh queued on the lock finds
+    no view and raises instead of refreshing."""
+    import shutil
+
+    base = _base(engine, name)
+    with _refresh_lock(engine, name):
+        _load_meta(engine, name)  # clear error if absent
+        os.remove(_meta_path(engine, name))
+        for entry in os.listdir(base):
+            path = os.path.join(base, entry)
+            if entry == "_refresh_lock":
+                continue
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
+    try:
+        os.rmdir(base)
+    except OSError:
+        pass  # a refresher queued on the lock re-took it and will raise
 
 
 def _log_rewrite_marker(engine, table: str) -> str | None:
@@ -643,14 +401,9 @@ def _refresh_locked(engine, name: str) -> dict:
     snap = engine.db()
     meta["as_of"] = max(head, as_of).isoformat()
 
-    prev_seq = int(meta.get("idkeys_seq", -1))
-    seq = prev_seq + 1
-
     rewrite = _needs_full(engine, table, as_of, meta)
     if table in engine._app_bounded or rewrite is not None:
         view = _compute(snap.table(table), keys, aggs)
-        _idkeys_write_base(engine, name, snap, table, keys, seq)
-        meta["idkeys_seq"] = seq
         if rewrite is not None:
             meta["handled_rewrite"] = rewrite
         _store(engine, name, view, meta)
@@ -659,42 +412,15 @@ def _refresh_locked(engine, name: str) -> dict:
     feed = snap.changes(table, since=as_of)
     changed = feed.select("id").distinct()
     changed_rows = changed.limit(_INLIST_CAP + 1).collect()
-    small_delta = len(changed_rows) <= _INLIST_CAP
-    # Sidecar discovery is an optimization with an always-correct
-    # table-side fallback, and under concurrent refreshers it can
-    # lose a race (a fold rmtree's delta dirs between our listing and
-    # our read; a rebuild swaps the base mid-scan).  The failure can
-    # surface either eagerly (schema inference in _idkeys_asof_keys)
-    # or lazily at the materializing collect below — so the WHOLE
-    # sidecar path through materialization is one attempt, and any
-    # failure falls back to table-side discovery instead of raising.
-    asof_keys = affected = key_rows = None
-    if prev_seq >= 0:
-        try:
-            asof_keys = _idkeys_asof_keys(
-                engine, name, keys, prev_seq, changed,
-                changed_rows if small_delta else None,
-            )
-            if asof_keys is not None:
-                # delta-bounded discovery: sidecar + feed, no table scan
-                now_keys = feed.filter(
-                    F.col("_change") == "put"
-                ).select(*keys)
-                affected = asof_keys.unionByName(now_keys).distinct()
-                key_rows = affected.limit(_INLIST_CAP + 1).collect()
-                if len(key_rows) > _INLIST_CAP:
-                    affected = affected.localCheckpoint(eager=True)
-                discovery = "sidecar"
-        except Exception:  # noqa: BLE001 — lost sidecar race
-            asof_keys = affected = key_rows = None
-    if affected is None:
-        affected = _affected_keys(
-            engine, snap, table, keys, as_of, feed, changed
-        )
-        discovery = "table"
-        key_rows = affected.limit(_INLIST_CAP + 1).collect()
-        if len(key_rows) > _INLIST_CAP:
-            affected = affected.localCheckpoint(eager=True)
+    changed_ids = (
+        [r["id"] for r in changed_rows]
+        if len(changed_rows) <= _INLIST_CAP
+        else None
+    )
+    affected = _affected_keys(snap, table, keys, as_of, feed, changed, changed_ids)
+    key_rows = affected.limit(_INLIST_CAP + 1).collect()
+    if len(key_rows) > _INLIST_CAP:
+        affected = affected.localCheckpoint(eager=True)
     cur, old = snap.table(table), read(engine, name)
     if len(key_rows) <= _INLIST_CAP:
         # common case: the affected set fits an IN-list, so BOTH
@@ -717,27 +443,6 @@ def _refresh_locked(engine, name: str) -> dict:
         )
         kept = _keyjoin(old, F.broadcast(affected), keys, "left_anti")
         n_groups = affected.count()
-    # maintain the sidecar BEFORE meta advances: a crash in between
-    # leaves an orphan _mv_seq dir that seq ≤ idkeys_seq truncates
-    # away and the retried refresh rewrites wholesale; the reverse
-    # order would leave the sidecar stale behind the stored view
-    if asof_keys is not None:
-        # discovery trusted the sidecar ⇒ safe to extend it by delta.
-        # A lost race here (fold deleted the dirs under us, a rebuild
-        # swapped the base) must NOT be swallowed silently — a missing
-        # delta seq would hand later refreshes stale as-of keys — so
-        # the recovery is a wholesale rebuild at the new head.
-        try:
-            _idkeys_append_delta(engine, name, keys, feed, seq)
-            _idkeys_maybe_fold(engine, name, keys, seq)
-        except Exception:  # noqa: BLE001 — lost sidecar race
-            _idkeys_write_base(engine, name, snap, table, keys, seq)
-    else:
-        # legacy view (pre-sidecar) or sidecar in doubt (crashed fold:
-        # marker ahead of meta): rebuild wholesale at the new head —
-        # one narrow (id, keys) projection
-        _idkeys_write_base(engine, name, snap, table, keys, seq)
-    meta["idkeys_seq"] = seq
     # Destructive-rewrite re-validation: a vacuum may have CLAIMED and
     # swapped while this refresh computed (its marker persists before
     # the swap, but after our engine re-sync above) — in which case
@@ -764,7 +469,6 @@ def _refresh_locked(engine, name: str) -> dict:
         meta["as_of"] = max(head, as_of).isoformat()
         snap = engine.db()
         view = _compute(snap.table(table), keys, aggs)
-        _idkeys_write_base(engine, name, snap, table, keys, seq)
         meta["handled_rewrite"] = engine._rewrites.get(table)
         _store(engine, name, view, meta)
         return {"mode": "full", "as_of": meta["as_of"]}
@@ -773,5 +477,4 @@ def _refresh_locked(engine, name: str) -> dict:
         "mode": "incremental",
         "as_of": meta["as_of"],
         "refreshed_groups": n_groups,
-        "discovery": discovery,
     }

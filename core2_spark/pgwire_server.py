@@ -25,7 +25,8 @@ Extended query protocol: Parse ('P') / Bind ('B') / Describe ('D') /
 Execute ('E') / Close ('C') / Flush ('H') / Sync ('S') — the flow real
 drivers (psycopg, JDBC) send even for plain SELECTs.  Named and
 unnamed statements/portals, text-format results, text-format
-parameters bound to ``$1``..``$n`` at Bind time (``service.bind``),
+parameters bound to ``$1``..``$n`` at Bind time (``service.bind``;
+a binary-format parameter is refused with SQLSTATE 0A000),
 NoData/EmptyQueryResponse where the spec requires.  Describe on a
 statement answers from the analyzed schema; Describe and Execute on a
 portal share one execution.  After an error in extended mode the
@@ -83,6 +84,14 @@ def _spark_type_oid(simple: str) -> int:
 
 def _msg(tag: bytes, payload: bytes) -> bytes:
     return tag + struct.pack("!I", len(payload) + 4) + payload
+
+
+class _Unsupported(ValueError):
+    """A protocol feature this server refuses (SQLSTATE 0A000,
+    feature_not_supported)."""
+
+    def getSqlState(self) -> str:
+        return "0A000"
 
 
 def _cstr(s: str) -> bytes:
@@ -248,9 +257,17 @@ class PgWireServer:
                     if stmt not in self._stmts:
                         raise ValueError(f"unknown prepared statement {stmt!r}")
                     (nfmt,) = struct.unpack_from("!h", body, i)
-                    i += 2 + 2 * nfmt  # param format codes (text assumed)
+                    codes = struct.unpack_from(f"!{nfmt}h", body, i + 2)
+                    i += 2 + 2 * nfmt
                     (nparams,) = struct.unpack_from("!h", body, i)
                     i += 2
+                    # no codes = all text; one code applies to every
+                    # parameter; else one code per parameter (1 = binary)
+                    if nparams and any(codes):
+                        raise _Unsupported(
+                            "binary-format parameters are not supported; "
+                            "send parameters in text format"
+                        )
                     params: list[str | None] = []
                     for _ in range(nparams):
                         (ln,) = struct.unpack_from("!i", body, i)

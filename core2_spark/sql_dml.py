@@ -1049,8 +1049,6 @@ def parse_mview_select(select: str) -> tuple[str, list[str], dict]:
 def maintenance_result(engine, statement: str) -> dict | None:
     """Execute ``statement`` if it is a materialized-view maintenance
     statement; return a result dict, or None when it is ordinary DML."""
-    import shutil
-
     from core2_spark import mviews
 
     m = _match(_CREATE_MVIEW, statement)
@@ -1064,9 +1062,7 @@ def maintenance_result(engine, statement: str) -> dict | None:
         return {"statement": "refresh_materialized_view", "name": m["name"], **stats}
     m = _match(_DROP_MVIEW, statement)
     if m:
-        base = mviews._base(engine, m["name"])
-        mviews._load_meta(engine, m["name"])  # clear error if absent
-        shutil.rmtree(base)
+        mviews.drop(engine, m["name"])
         return {"statement": "drop_materialized_view", "name": m["name"]}
     m = _match(_VACUUM, statement)
     if m:

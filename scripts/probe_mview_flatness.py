@@ -1,20 +1,21 @@
-"""Probe (round 6): is mview refresh FLAT in table size at fixed delta?
+"""Probe: how does mview refresh time grow with table size at a fixed delta?
 
-VERDICT r5 #4's done-criterion for the id→keys sidecar: group
-discovery used to pay an O(table) narrow scan when no fresh compact
-existed; with the per-view sidecar the whole refresh should be bounded
-by the delta (plus affected-group re-aggregation), i.e. near-constant
-as the table grows at a FIXED delta size.
+Group discovery reads the changed ids' rows of the table at the view's
+clock (an id IN-list pushed into the scan), and the recompute reads
+the affected groups' rows of the current state.  Neither is bounded by
+the delta alone: this probe shows how much of the refresh still grows
+with the table.
 
 Method: build engine tables at 1× and 8× row counts from sf0.1
 lineitem (same 10,000-group key space), commit an IDENTICAL 1,000-row
 delta to each, and time `refresh_materialized_view` warm (best of 3,
 recommitting an equivalent delta per repetition).  Report the 8×/1×
-refresh-time ratio — ≈1.0 means flat, ≈8 would mean a table-size term
-survives.
+refresh-time ratio — ≈1.0 means flat, ≈8 would mean the refresh is
+proportional to the table.
 
-Usage: python scripts/probe_mview_flatness.py
-Results recorded in PERF.md (round-6 section).
+Usage: SPARK_GRAFT_CPUS=4 python scripts/probe_mview_flatness.py
+(local[$SPARK_GRAFT_CPUS], the engine's session settings; driver heap
+from $SPARK_DRIVER_MEM, default 8g).  Results recorded in PERF.md.
 """
 
 from __future__ import annotations
@@ -27,10 +28,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from core2_spark.engine import Engine, Put
+from core2_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BASE = os.path.join(REPO, "_data", "probe_mview_flat")
@@ -69,17 +70,12 @@ def timed_refresh(spark, eng: Engine, rep: int) -> float:
     t0 = time.monotonic()
     stats = eng.refresh_materialized_view("rev")
     wall = time.monotonic() - t0
-    assert stats["mode"] == "incremental" and stats["discovery"] == "sidecar", stats
+    assert stats["mode"] == "incremental", stats
     return wall
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="probe-mview-flatness")
     spark.sparkContext.setLogLevel("ERROR")
     results = {}
     for label, factor in (("1x", 1), ("8x", 8)):
@@ -91,7 +87,7 @@ def main() -> None:
               f"best {results[label]:.2f} s")
     ratio = results["8x"] / results["1x"]
     print(f"8x/1x refresh ratio at fixed {DELTA_ROWS}-row delta: {ratio:.2f} "
-          f"(≈1.0 = delta-bounded, ≈8 = table-size term)")
+          f"(≈1.0 = flat, ≈8 = proportional to the table)")
 
 
 if __name__ == "__main__":

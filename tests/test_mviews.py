@@ -7,11 +7,12 @@ recompute (app-bounded tables, post-view Erase/vacuum)."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, given, seed, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from core2_spark.engine import Delete, Engine, Erase, Put
+from tests.smoke import SMOKE
 
 AGGS = {"n": ("count", "*"), "total": ("sum", "v"), "hi": ("max", "v")}
 
@@ -187,7 +188,7 @@ def test_validation_errors(spark, engine):
 def op_sequence(draw):
     """2-4 rounds of random puts/deletes over ids 0..19 and groups
     g0..g3 (N = NULL group), each optionally followed by maintenance
-    (compact — exercises the compact discovery path — or erase /
+    (compact — the as-of discovery read then runs on it — or erase /
     vacuum, which must force a FULL refresh via the rewrite clock)."""
     txs = []
     for _ in range(draw(st.integers(2, 4))):
@@ -262,6 +263,15 @@ def test_refresh_matches_full_recompute_under_random_ops(spark, txs):
     # final convergence regardless of trailing maintenance
     engine.refresh_materialized_view("agg")
     assert _stored(engine) == _expected(engine)
+
+
+@seed(1)
+@SMOKE
+@given(txs=op_sequence())
+def test_refresh_matches_full_recompute_under_random_ops_smoke(spark, txs):
+    test_refresh_matches_full_recompute_under_random_ops.hypothesis.inner_test(
+        spark, txs
+    )
 
 
 @pytest.mark.slow
@@ -365,10 +375,10 @@ def test_auto_refresh_views_tracks_commits(spark, tmp_path):
 
 @pytest.mark.slow
 def test_refresh_with_compact_discovery_path(spark, engine):
-    """When a compact exists at or before the view's clock, affected-
-    key discovery reads the compact + the (c, as_of] version slice
-    instead of full history — same answers, including group moves and
-    ids created after the compact."""
+    """When a compact exists before the view's clock, the as-of
+    discovery read merges the compact with the (c, as_of] version
+    slice — same answers, including group moves and ids created after
+    the compact."""
     engine.submit_tx(
         [Put("t", _rows(spark, [(i, f"g{i % 3}", float(i)) for i in range(30)]))]
     )
@@ -587,52 +597,52 @@ def test_mview_reference_case_insensitive(spark, engine):
     assert [(r["grp"], r["n"]) for r in rows] == [("g0", 2), ("g1", 2)]
 
 
-@pytest.mark.slow
-def test_sidecar_discovery_never_reads_table_history(spark, engine):
-    """Round 6: with the id→keys sidecar, group discovery's as-of-keys
-    plan reads ONLY sidecar files — never table history or compact —
-    so refresh cost is delta-bounded even with no fresh compact."""
-    from core2_spark import mviews
-    from datetime import datetime
+def test_view_written_with_an_idkeys_sidecar_refreshes(spark, engine):
+    """A view directory in the earlier layout — an ``idkeys/``
+    id→keys sidecar beside the data and ``idkeys_seq`` in its meta —
+    refreshes incrementally and exactly: the sidecar is never read
+    (its files here are not even parquet) and the engine opens over
+    it."""
+    import json
+    import os
 
-    for day in (1, 2, 3):  # three history days before the view exists
-        engine.submit_tx(
-            [Put("t", _rows(spark, [(i, f"g{i % 3}", float(i + day)) for i in range(12)]))],
-            tx_time=f"2024-01-0{day} 00:00:01",
-        )
+    from core2_spark import mviews
+
+    engine.submit_tx(
+        [Put("t", _rows(spark, [(i, f"g{i % 3}", float(i)) for i in range(12)]))]
+    )
     engine.create_materialized_view("agg", "t", ["grp"], AGGS)
+    sidecar = os.path.join(engine.root, "_mviews", "agg", "idkeys")
+    for sub in ("base", "delta/_mv_seq=1"):
+        os.makedirs(os.path.join(sidecar, sub))
+        with open(os.path.join(sidecar, sub, "part-0.parquet"), "w") as f:
+            f.write("not parquet")
+    with open(os.path.join(sidecar, "base_seq"), "w") as f:
+        f.write("1")
+    path = mviews._meta_path(engine, "agg")
+    with open(path) as f:
+        meta = json.load(f)
+    meta["idkeys_seq"] = 1
+    with open(path, "w") as f:
+        json.dump(meta, f)
+
+    engine = Engine(spark, engine.root)
     engine.submit_tx(
         [
-            Put("t", _rows(spark, [(0, "gX", 9.0)])),
-            Delete("t", spark.createDataFrame([(5,)], "id long")),
-        ],
-        tx_time="2024-01-04 00:00:01",
+            Put("t", _rows(spark, [(0, "gX", 5.0), (100, "g1", 1.0)])),
+            Delete("t", spark.createDataFrame([(4,)], "id long")),
+        ]
     )
-    meta = mviews._load_meta(engine, "agg")
-    as_of = datetime.fromisoformat(meta["as_of"])
-    snap = engine.db()
-    feed = snap.changes("t", since=as_of)
-    changed = feed.select("id").distinct()
-    changed_rows = changed.collect()
-    asof_keys = mviews._idkeys_asof_keys(
-        engine, "agg", ["grp"], int(meta["idkeys_seq"]), changed, changed_rows
-    )
-    files = asof_keys.inputFiles()
-    assert files, "as-of discovery should read the sidecar"
-    assert all("/_mviews/agg/idkeys/" in f for f in files), files
     stats = engine.refresh_materialized_view("agg")
-    assert stats["mode"] == "incremental" and stats["discovery"] == "sidecar"
+    assert stats["mode"] == "incremental"
+    assert stats["refreshed_groups"] == 3  # g0 (id 0 left), g1, gX
     assert _stored(engine) == _expected(engine)
 
 
 @pytest.mark.slow
-def test_sidecar_fold_and_many_refreshes(spark, engine):
-    """Past _IDKEYS_COMPACT_AT deltas the sidecar folds into its base;
-    view equality holds across 20 refreshes including deletes and
-    group moves, and the delta fan-in stays bounded."""
-    import os
-    from core2_spark import mviews
-
+def test_many_refreshes_stay_incremental(spark, engine):
+    """20 refreshes in a row, with group moves and deletes, each stay
+    incremental and leave the view equal to a full recompute."""
     engine.submit_tx(
         [Put("t", _rows(spark, [(i, f"g{i % 4}", float(i)) for i in range(16)]))]
     )
@@ -642,77 +652,108 @@ def test_sidecar_fold_and_many_refreshes(spark, engine):
         if n % 5 == 4:
             ops.append(Delete("t", spark.createDataFrame([((n * 3) % 16,)], "id long")))
         engine.submit_tx(ops)
-        stats = engine.refresh_materialized_view("agg")
-        assert stats["mode"] == "incremental"
-        assert stats["discovery"] == "sidecar"
+        assert engine.refresh_materialized_view("agg")["mode"] == "incremental"
         assert _stored(engine) == _expected(engine)
-    delta_root = os.path.join(engine.root, "_mviews", "agg", "idkeys", "delta")
-    n_deltas = len(
-        [e for e in os.listdir(delta_root) if e.startswith("_mv_seq=")]
-    ) if os.path.isdir(delta_root) else 0
-    assert n_deltas <= mviews._IDKEYS_COMPACT_AT + 1  # folding engaged
 
 
-@pytest.mark.slow
-def test_sidecar_legacy_view_bootstraps(spark, engine):
-    """A pre-round-6 view (no idkeys dir, no idkeys_seq) falls back to
-    table-side discovery once, bootstraps the sidecar, then goes
-    delta-bounded."""
-    import json
+def _in_thread(name, fn, errors):
+    import threading
+
+    def run():
+        try:
+            fn()
+        except Exception as exc:  # noqa: BLE001 — asserted by the test
+            errors[name] = exc
+
+    t = threading.Thread(target=run, name=name)
+    t.start()
+    return t
+
+
+def test_drop_during_refresh_stays_dropped(spark, engine, monkeypatch):
+    """DROP waits for a running refresh instead of deleting the view
+    under it: the refresh's final write cannot bring the view back."""
     import os
-    import shutil
+    import threading
+    import time
+
     from core2_spark import mviews
 
     engine.submit_tx(
-        [Put("t", _rows(spark, [(i, f"g{i % 2}", float(i)) for i in range(8)]))]
+        [Put("t", _rows(spark, [(i, f"g{i % 2}", float(i)) for i in range(6)]))]
     )
     engine.create_materialized_view("agg", "t", ["grp"], AGGS)
-    # simulate a legacy view: drop the sidecar + meta key
-    shutil.rmtree(os.path.join(engine.root, "_mviews", "agg", "idkeys"))
-    mp = mviews._meta_path(engine, "agg")
-    with open(mp) as f:
-        meta = json.load(f)
-    meta.pop("idkeys_seq")
-    with open(mp, "w") as f:
-        json.dump(meta, f)
+    engine.submit_tx([Erase("t", spark.createDataFrame([(1,)], "id long"))])
+    storing, go = threading.Event(), threading.Event()
+    real_store = mviews._store
 
-    engine.submit_tx([Put("t", _rows(spark, [(0, "gZ", 5.0)]))])
-    stats = engine.refresh_materialized_view("agg")
-    assert stats["mode"] == "incremental" and stats["discovery"] == "table"
-    assert _stored(engine) == _expected(engine)
-    # bootstrapped: subsequent refreshes use the sidecar
-    engine.submit_tx([Put("t", _rows(spark, [(1, "gZ", 6.0)]))])
-    stats = engine.refresh_materialized_view("agg")
-    assert stats["mode"] == "incremental" and stats["discovery"] == "sidecar"
-    assert _stored(engine) == _expected(engine)
+    def held_store(*args):
+        storing.set()
+        go.wait(60)
+        return real_store(*args)
+
+    monkeypatch.setattr(mviews, "_store", held_store)
+    errors: dict = {}
+    refresher = _in_thread(
+        "refresh", lambda: engine.refresh_materialized_view("agg"), errors
+    )
+    assert storing.wait(120)  # the (full) refresh holds the lock
+    dropper = _in_thread(
+        "drop", lambda: engine.sql_dml("DROP MATERIALIZED VIEW agg"), errors
+    )
+    time.sleep(0.5)
+    go.set()
+    refresher.join(120)
+    dropper.join(120)
+    assert errors == {}
+    assert "agg" not in engine.materialized_views()
+    assert not os.path.exists(os.path.join(engine.root, "_mviews", "agg"))
 
 
-@pytest.mark.slow
-def test_sidecar_crashed_fold_invalidates_and_rebuilds(spark, engine):
-    """Self-review r6: a crash between the fold's base swap and the
-    meta write leaves the base seq-marker AHEAD of meta.idkeys_seq —
-    its rows are post-as_of state.  Discovery must refuse the sidecar
-    (else a moved-away group is never refreshed), fall back to
-    table-side discovery, and rebuild the sidecar wholesale."""
+def test_refresh_queued_behind_drop_raises(spark, engine, monkeypatch):
+    """A refresh waiting on the lock of a view being dropped raises
+    'no materialized view' once the drop completes."""
+    import threading
+
     from core2_spark import mviews
 
     engine.submit_tx(
-        [Put("t", _rows(spark, [(i, f"g{i % 2}", float(i)) for i in range(8)]))]
+        [Put("t", _rows(spark, [(i, f"g{i % 2}", float(i)) for i in range(6)]))]
     )
     engine.create_materialized_view("agg", "t", ["grp"], AGGS)
-    # group move that the crashed-ahead base would hide
     engine.submit_tx([Put("t", _rows(spark, [(0, "gZ", 9.0)]))])
-    # simulate the crashed fold: marker ahead of meta
-    mviews._idkeys_stamp_base_seq(engine, "agg", 99)
-    stats = engine.refresh_materialized_view("agg")
-    assert stats["mode"] == "incremental"
-    assert stats["discovery"] == "table"  # sidecar refused
-    assert _stored(engine) == _expected(engine)
-    # rebuilt: the next refresh trusts the sidecar again
-    engine.submit_tx([Put("t", _rows(spark, [(1, "gZ", 5.0)]))])
-    stats = engine.refresh_materialized_view("agg")
-    assert stats["discovery"] == "sidecar"
-    assert _stored(engine) == _expected(engine)
+    dropping, refreshing, go = (threading.Event() for _ in range(3))
+    real_load, real_locked = mviews._load_meta, mviews._refresh_locked
+
+    def held_load(eng, name):
+        if threading.current_thread().name == "drop":
+            dropping.set()
+            go.wait(60)
+        return real_load(eng, name)
+
+    def seen_locked(eng, name):
+        refreshing.set()
+        return real_locked(eng, name)
+
+    monkeypatch.setattr(mviews, "_load_meta", held_load)
+    monkeypatch.setattr(mviews, "_refresh_locked", seen_locked)
+    errors: dict = {}
+    dropper = _in_thread(
+        "drop", lambda: engine.sql_dml("DROP MATERIALIZED VIEW agg"), errors
+    )
+    assert dropping.wait(60)
+    refresher = _in_thread(
+        "refresh", lambda: engine.refresh_materialized_view("agg"), errors
+    )
+    # the refresh must queue on the lock the drop holds, not run
+    assert not refreshing.wait(2)
+    go.set()
+    dropper.join(120)
+    refresher.join(120)
+    assert set(errors) == {"refresh"}, errors
+    assert isinstance(errors["refresh"], ValueError)
+    assert "no materialized view" in str(errors["refresh"])
+    assert "agg" not in engine.materialized_views()
 
 
 @pytest.mark.slow

@@ -157,15 +157,23 @@ class ExtendedPgClient(MiniPgClient):
             b"P", self._cstr(stmt) + self._cstr(sql) + struct.pack("!h", 0)
         )
 
-    def bind(self, portal: str, stmt: str, params: list[str | None] = ()) -> None:
+    def bind(
+        self,
+        portal: str,
+        stmt: str,
+        params: list[str | bytes | None] = (),
+        formats: list[int] = (),
+    ) -> None:
         body = self._cstr(portal) + self._cstr(stmt)
-        body += struct.pack("!h", 0)  # param format codes: default text
+        # param format codes: none = all text
+        body += struct.pack(f"!h{len(formats)}h", len(formats), *formats)
         body += struct.pack("!h", len(params))
         for p in params:
             if p is None:
                 body += struct.pack("!i", -1)
             else:
-                body += struct.pack("!i", len(p.encode())) + p.encode()
+                raw = p if isinstance(p, bytes) else p.encode()
+                body += struct.pack("!i", len(raw)) + raw
         body += struct.pack("!h", 0)  # result format codes: default text
         self._send_msg(b"B", body)
 
@@ -555,6 +563,38 @@ def test_pgwire_bind_is_literal(spark, engine):
         assert err is None
         _, rows, _ = client.query("SELECT id, sym, px FROM trades ORDER BY id")
         assert rows == [["1", "it's", "nan"], ["2", "MSFT", "200.0"], ["3", "GOOG", "300.0"]]
+        client.close()
+    finally:
+        server.shutdown()
+
+
+def test_pgwire_refuses_binary_parameters(spark, engine):
+    """A binary-format parameter (format code 1) is refused with
+    SQLSTATE 0A000, not decoded as text (a binary int8 5 would bind as
+    an 8-character string); text parameters bind as before."""
+    from core2_spark.pgwire_server import PgWireServer
+
+    v1 = spark.createDataFrame(
+        [(1, "AAPL", 100.0), (5, "MSFT", 200.0)], "id long, sym string, px double"
+    )
+    engine.submit_tx([Put("trades", v1)], tx_time="2024-01-01 00:00:01")
+    server = PgWireServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        client = ExtendedPgClient(server.port)
+        q = "SELECT sym FROM trades WHERE id = $1"
+        for formats in ([1], [0, 1]):
+            client.parse("", q + (" AND sym = $2" if len(formats) == 2 else ""))
+            client.bind("", "", [struct.pack("!q", 5)] * len(formats), formats)
+            client.execute("")
+            _tags, _cols, rows, err = client.sync_and_collect()
+            assert err is not None and "binary" in err
+            assert client.sqlstate == "0A000" and rows == []
+        # the session survives; explicit and default text codes bind
+        client.parse("", q)
+        client.bind("", "", ["5"], [0])
+        client.execute("")
+        assert client.sync_and_collect()[2:] == ([["MSFT"]], None)
+        assert _bound(client, q, ["5"]) == ([["MSFT"]], None)
         client.close()
     finally:
         server.shutdown()

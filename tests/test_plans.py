@@ -245,17 +245,21 @@ def test_lateral_topk_decorrelates_to_window(spark):
     assert "Window" in plan
 
 
-def test_sidecar_discovery_pushes_id_inlist(spark, tmp_path):
-    """Round 6: the sidecar as-of-keys plan must push the changed-id
-    IN-list into the sidecar parquet scan (row-group stat + bloom
-    pruning on id) — the delta-boundedness claim, enforced at the
-    plan level."""
+@pytest.mark.parametrize("compact", [False, True])
+def test_asof_discovery_pushes_id_inlist(spark, tmp_path, compact):
+    """The refresh's as-of group-discovery read restricts the table to
+    the changed ids with a literal IN-list pushed into the table scan
+    (row-group stat + bloom pruning on id): into the compact scan when
+    a compact at the view's clock serves the read, into the version
+    files' scan otherwise."""
+    from datetime import datetime
+
     from pyspark.sql import functions as FF
 
     from core2_spark import mviews
     from core2_spark.engine import Engine, Put
 
-    eng = Engine(spark, str(tmp_path / "scplan"))
+    eng = Engine(spark, str(tmp_path / "asofplan"))
     rows = spark.range(2000).select(
         FF.col("id"),
         (FF.col("id") % 50).alias("bucket"),
@@ -265,14 +269,24 @@ def test_sidecar_discovery_pushes_id_inlist(spark, tmp_path):
     eng.create_materialized_view(
         "agg", "t", ["bucket"], {"n": ("count", "*")}
     )
-    changed_rows = [{"id": 3}, {"id": 77}, {"id": 1500}]
-    asof = mviews._idkeys_asof_keys(
-        eng, "agg", ["bucket"], 0, None, changed_rows
+    if compact:
+        eng.compact("t")
+    eng.submit_tx([Put("t", rows.filter("id IN (3, 77)"))])
+    as_of = datetime.fromisoformat(mviews._load_meta(eng, "agg")["as_of"])
+    snap = eng.db()
+    feed = snap.changes("t", since=as_of)
+    affected = mviews._affected_keys(
+        snap, "t", ["bucket"], as_of, feed, None, [3, 77, 1500]
     )
-    plan = plan_of(asof)
-    assert "PushedFilters: [In(id" in plan, plan
-    # and the inputs are sidecar files only, never the table
-    assert all("/_mviews/agg/idkeys/" in f for f in asof.inputFiles())
+    pushed = [
+        line.strip() for line in plan_of(affected).splitlines()
+        if "PushedFilters" in line
+    ]
+    assert any("In(id, [1500,3,77])" in line for line in pushed), pushed
+    if compact:
+        assert any(line.startswith("PushedFilters: [In(id") for line in pushed)
+    # id 1500 is not in the feed but IS in the list: its as-of bucket 0
+    assert sorted(r["bucket"] for r in affected.collect()) == [0, 3, 27]
 
 
 def test_vacuum_decision_scan_is_narrow_and_partition_pruned(spark, tmp_path):
