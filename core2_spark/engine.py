@@ -187,7 +187,8 @@ class Patch:
     schema.  Expanded against the pre-transaction snapshot at submit
     time — like Call, a Patch is deterministic given the log position,
     so replay under optimistic-concurrency retry re-reads the winner's
-    state (last-merger-wins per key, never a lost update)."""
+    state (last-merger-wins per key, never a lost update).  SQL
+    ``PATCH INTO`` lowers to this op, so the same holds for it."""
 
     table: str
     docs: tuple  # tuple[dict, ...] — the documents to merge
@@ -1342,8 +1343,10 @@ class Engine:
     ) -> Basis:
         """Apply ops atomically-enough for a single writer (the
         reference's single totally-ordered log) and return the basis
-        at which the transaction is visible.  Call ops expand against
-        the pre-transaction snapshot before anything is written.
+        at which the transaction is visible.  Assert, Call and Patch
+        ops (SQL DML arrives as Call ops) expand before anything is
+        written, against the pre-transaction snapshot a what-if uses:
+        the head's rows read at the tx clock (``Snapshot._at``).
 
         Optimistic concurrency (``retries`` overrides the engine's
         ``writer_retries``): when another writer advanced the log, the
@@ -1407,15 +1410,16 @@ class Engine:
     ) -> Basis:
         self._check_sole_writer()  # abort BEFORE any rows are written
         touched: set[str] = set()
+        expand = any(isinstance(op, (Assert, Call, Patch)) for op in ops)
         with self._manifested() as tx:
+            head = self.db() if expand else None  # before the clock moves
             t = tx.t = self._next_tx_time(tx_time)
-            if any(isinstance(op, (Assert, Call, Patch)) for op in ops):
-                # basis clock pinned to tx time, never the wall clock —
-                # tx-fns must replay identically
-                ops = Snapshot(
-                    self,
-                    acquire_basis(self._all_tables(), t, self._basis_schemas()),
-                )._expand(ops)
+            if head is not None:
+                # the head's rows read at the tx clock, the snapshot a
+                # what-if expands against: tx-fns replay identically,
+                # and a peer's published but unlogged rows never reach
+                # the expansion
+                ops = head._at(t)._expand(ops)
             for seq, op in enumerate(ops):
                 if isinstance(op, Erase):
                     self._erase(tx, op)
@@ -1631,24 +1635,33 @@ class Engine:
         id_col: str = "id",
     ) -> Basis:
         """Execute several DML statements as ONE transaction (core2's
-        submit-tx takes a vector of ops): all statements compile
-        against the same pre-transaction snapshot, share one tx_time,
-        and later statements win on id conflicts via the within-tx
-        sequence — atomic multi-statement DML."""
-        from core2_spark.sql_dml import dml_to_ops, is_maintenance, maintenance_result
+        submit-tx takes a vector of ops).  Each statement becomes a
+        Call op that lowers it inside ``submit_tx``, against the same
+        pre-transaction snapshot Assert, Call and Patch expand against:
+        the head's rows read at the transaction clock.  All statements
+        share one tx_time, and later statements win on id conflicts via
+        the within-tx sequence — atomic multi-statement DML.  A replay
+        after a concurrent writer's commit lowers them again against
+        the winner's state, so ``UPDATE t SET n = n + 1`` loses no
+        update."""
+        from core2_spark import sql_dml
 
-        if len(statements) == 1 and maintenance_result(self, statements[0]):
+        if len(statements) == 1 and sql_dml.maintenance_result(self, statements[0]):
             return self.db().basis
-        ops = []
-        for stmt in statements:
-            if is_maintenance(stmt):
-                raise ValueError(
-                    "maintenance statements are not log "
-                    "ops and cannot join a multi-statement transaction — "
-                    "run them alone"
-                )
-            ops.extend(dml_to_ops(self, stmt, id_col))
-        return self.submit_tx(ops, tx_time)
+        if any(sql_dml.is_maintenance(stmt) for stmt in statements):
+            raise ValueError(
+                "maintenance statements are not log "
+                "ops and cannot join a multi-statement transaction — "
+                "run them alone"
+            )
+        # the module attribute, looked up per call: a tracer may wrap it
+        return self.submit_tx(
+            [
+                Call(lambda snap, stmt=stmt: sql_dml.dml_to_ops(snap, stmt, id_col))
+                for stmt in statements
+            ],
+            tx_time,
+        )
 
     def _all_tables(self) -> dict[str, str]:
         return {
@@ -2257,7 +2270,7 @@ class Snapshot:
 
                 out.extend(
                     patch_to_ops(
-                        self.engine, self, op.table, list(op.docs), op.id_col,
+                        self, op.table, list(op.docs), op.id_col,
                         app_start=op.app_start, app_end=op.app_end,
                     )
                 )

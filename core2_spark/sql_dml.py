@@ -9,10 +9,10 @@ This frontend keeps the same split the engine already has: statements
 are parsed here (a small regex skeleton over the research dialect —
 the statement *shapes*, not a full SQL grammar), while every value,
 predicate, and SET expression is delegated verbatim to Spark SQL
-against the pre-transaction snapshot.  The result is a list of
-`engine.Put/Delete/Erase` ops executed through `Engine.submit_tx`, so
-SQL DML and programmatic ops share one log, one clock, and one
-visibility rule.
+through ``Snapshot.sql`` on the pre-transaction snapshot.  The
+statements lower inside `Engine.submit_tx` (``dml_to_ops`` runs as a
+Call op) to `engine` ops, so SQL DML and programmatic ops share one
+log, one clock, one pre-transaction snapshot and one visibility rule.
 
 Supported statements::
 
@@ -591,125 +591,81 @@ def _cast_to(rows, types: dict[str, str]):
     )
 
 
-def dml_to_ops(engine, statement: str, id_col: str = "id") -> list:
-    """Compile one DML statement to engine ops against the CURRENT
+def dml_to_ops(snap, statement: str, id_col: str = "id") -> list:
+    """Lower one DML statement to engine ops against ``snap``, the
     pre-transaction snapshot (core2: DML runs deterministically at
-    index time against the database value as of the tx)."""
-    from core2_spark.engine import Delete, Erase, Put
+    index time against the database value as of the tx).  Every read
+    the statement makes, its WHERE and SET subqueries included, goes
+    through ``snap.sql``.  ``Engine.sql_dml_many`` runs this inside
+    ``submit_tx`` as a Call op, so a replay after a conflict lowers
+    the statement again against the winner's state."""
+    from core2_spark.engine import Assert, Delete, Erase, Patch, Put
 
-    spark = engine.spark
     p = parse_dml(statement)
-    snap = engine.db()
+    d = p.detail
 
     if p.verb == "merge":
-        return _merge_to_ops(engine, snap, p, id_col)
+        return _merge_to_ops(snap, p, id_col)
 
     if p.verb == "assert":
-        from core2_spark.engine import Assert
-
-        return [Assert(p.detail["pred"], p.detail["msg"])]
-
-    if p.verb == "insert_records":
-        existing = (
-            set(snap.table(p.table).columns)
-            if p.table in snap.basis.manifests
-            else set()
-        )
-        rows = records_to_df(
-            spark, _drop_allnull_new_keys(p.detail["records"], existing)
-        )
-        if id_col not in rows.columns:
-            raise ValueError(
-                f"INSERT RECORDS into {p.table!r}: every record needs "
-                f"the id key {id_col!r}"
-            )
-        if p.table in snap.basis.manifests:
-            rows = _cast_to(rows, _column_types(snap.table(p.table)))
-        return [Put(p.table, rows)]
+        return [Assert(d["pred"], d["msg"])]
 
     if p.verb == "patch":
-        return patch_to_ops(
-            engine, snap, p.table, p.detail["records"], id_col,
-            app_start=p.detail.get("app_from"),
-            app_end=p.detail.get("app_to"),
-        )
+        return [Patch(p.table, tuple(d["records"]), id_col,
+                      app_start=d["app_from"], app_end=d["app_to"])]
 
-    if p.verb == "insert_values":
-        cols = ", ".join(p.detail["cols"])
-        rows = spark.sql(
-            f"SELECT * FROM (VALUES {p.detail['values']}) AS _ins({cols})"
-        )
-        if p.table in snap.basis.manifests:
-            rows = _cast_to(rows, _column_types(snap.table(p.table)))
+    if p.verb.startswith("insert"):
+        known = p.table in snap.basis.manifests
+        types = _column_types(snap.table(p.table)) if known else {}
+        if p.verb == "insert_records":
+            rows = records_to_df(
+                snap.engine.spark, _drop_allnull_new_keys(d["records"], set(types))
+            )
+            if id_col not in rows.columns:
+                raise ValueError(
+                    f"INSERT RECORDS into {p.table!r}: every record needs "
+                    f"the id key {id_col!r}"
+                )
+        elif p.verb == "insert_values":
+            rows = snap.sql(
+                f"SELECT * FROM (VALUES {d['values']}) AS _ins({', '.join(d['cols'])})"
+            )
+        else:
+            rows = snap.sql(d["select"])
+        rows = _cast_to(rows, types)
+        if p.verb == "insert_select":
+            # materialize before the write: the SELECT may read the
+            # very table the Put appends to
+            rows = rows.localCheckpoint(eager=True)
         return [Put(p.table, rows)]
 
-    if p.verb == "insert_select":
-        # materialize before the write: the SELECT may read the very
-        # table the Put appends to
-        return [Put(p.table, snap.sql(p.detail["select"]).localCheckpoint(eager=True))]
-
-    # uid-suffixed working views, dropped on exit: fixed names would
-    # let two concurrent DML statements in one SparkSession clobber
-    # each other's target between registration and execution (the same
-    # race class the MERGE path guards against)
-    import uuid as _uuid
-
-    uid = _uuid.uuid4().hex[:8]
-    tgt_view, matched_view = f"_dml_target_{uid}", f"_dml_matched_{uid}"
-    cur = snap.table(p.table)
-    try:
-        cur.createOrReplaceTempView(tgt_view)
-        where = p.detail.get("where")
-        matched = spark.sql(
-            f"SELECT * FROM {tgt_view}" + (f" WHERE {where}" if where else "")
-        )
-
-        if p.verb == "update":
-            projections = []
-            set_map = dict(p.detail["sets"])
-            types = _column_types(matched)
-            for name in matched.columns:
-                if name in set_map:
-                    projections.append(
-                        f"CAST(({set_map[name]}) AS {types[name]}) AS {name}"
-                    )
-                else:
-                    projections.append(name)
-            matched.createOrReplaceTempView(matched_view)
-            updated = spark.sql(
-                f"SELECT {', '.join(projections)} FROM {matched_view}"
-            ).localCheckpoint(eager=True)  # reads the table the Put appends to
-            return [
-                Put(
-                    p.table,
-                    updated,
-                    app_start=p.detail["app_from"],
-                    app_end=p.detail["app_to"],
-                )
+    where = f" WHERE {d['where']}" if d["where"] else ""
+    if p.verb == "update":
+        # each SET value rides the one read as an extra column, then
+        # replaces its column cast to that column's type: a second
+        # snap.table just for the types would build the table's file
+        # index twice
+        sets = {c: (e, f"__set_{i}") for i, (c, e) in enumerate(d["sets"])}
+        extra = "".join(f", ({e}) AS {alias}" for e, alias in sets.values())
+        matched = snap.sql(f"SELECT *{extra} FROM {p.table}{where}")
+        cols = matched.columns[: len(matched.columns) - len(sets)]
+        updated = matched.select(
+            *[
+                matched[sets[c][1]].cast(matched.schema[c].dataType).alias(c)
+                if c in sets else matched[c]
+                for c in cols
             ]
+        ).localCheckpoint(eager=True)  # reads the table the Put appends to
+        return [Put(p.table, updated, app_start=d["app_from"], app_end=d["app_to"])]
 
-        ids = matched.select(id_col).localCheckpoint(eager=True)
-    finally:
-        for v in (tgt_view, matched_view):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
+    ids = snap.sql(f"SELECT {id_col} FROM {p.table}{where}").localCheckpoint(eager=True)
     if p.verb == "delete":
-        return [
-            Delete(
-                p.table,
-                ids,
-                id_col,
-                app_start=p.detail.get("app_from"),
-                app_end=p.detail.get("app_to"),
-            )
-        ]
+        return [Delete(p.table, ids, id_col, app_start=d["app_from"], app_end=d["app_to"])]
     return [Erase(p.table, ids, id_col)]
 
 
-def _merge_to_ops(engine, snap, p: _ParsedDml, id_col: str) -> list:
-    """Compile MERGE INTO to engine ops against the pre-tx snapshot.
+def _merge_to_ops(snap, p: _ParsedDml, id_col: str) -> list:
+    """Lower MERGE INTO to engine ops against the pre-tx snapshot.
 
     Semantics follow SQL:2003 MERGE (core2 exposes the same
     upsert-shaped writes through put-with-valid-time; the SQL spelling
@@ -723,10 +679,13 @@ def _merge_to_ops(engine, snap, p: _ParsedDml, id_col: str) -> list:
     are refused for the same reason: a single Put freezes an arbitrary
     within-partition winner, which a deterministic engine must not do.
 
-    Temp views are uid-suffixed and dropped on exit so concurrent
-    MERGEs in one SparkSession (a supported configuration — see
-    engine_concurrent_writers) can never read each other's
-    registrations.
+    The target is read through ``snap.sql`` like any other table.  The
+    source is materialized once into a uid-suffixed temp view, dropped
+    on exit, which the cardinality check and every clause read:
+    ``Snapshot.sql`` leaves a name it does not know to the session
+    catalog, and the suffix keeps concurrent MERGEs in one
+    SparkSession (see engine_concurrent_writers) from reading each
+    other's source.
 
     Scale: one equi-shaped join source⋈target for the matched set, one
     anti-join for the not-matched set, one count-per-id aggregation per
@@ -738,25 +697,19 @@ def _merge_to_ops(engine, snap, p: _ParsedDml, id_col: str) -> list:
 
     from core2_spark.engine import Delete, Put
 
-    spark = engine.spark
+    spark = snap.engine.spark
     d = p.detail
-    tal, sal, on = d["talias"], d["salias"], d["on"]
-    uid = _uuid.uuid4().hex[:8]
-    tv, sv = f"_merge_t_{uid}", f"_merge_s_{uid}"
-    cur = snap.table(p.table)
+    table, tal, sal, on = p.table, d["talias"], d["salias"], d["on"]
+    sv = f"_merge_s_{_uuid.uuid4().hex[:8]}"
     src = d["source"]
+    src_df = snap.sql(src[1:-1]) if src.startswith("(") else snap.table(src)
+    src_df.localCheckpoint(eager=True).createOrReplaceTempView(sv)
     try:
-        cur.createOrReplaceTempView(tv)
-        if src.startswith("("):
-            src_df = snap.sql(src[1:-1])
-        else:
-            src_df = snap.table(src)
-        src_df.localCheckpoint(eager=True).createOrReplaceTempView(sv)
-
+        joined = f"FROM {table} {tal} JOIN {sv} {sal} ON {on}"
         # cardinality violation: >1 source rows matching one target row
-        dup = spark.sql(
-            f"SELECT {tal}.{id_col} FROM {tv} {tal} JOIN {sv} {sal} "
-            f"ON {on} GROUP BY {tal}.{id_col} HAVING COUNT(*) > 1 LIMIT 1"
+        dup = snap.sql(
+            f"SELECT {tal}.{id_col} {joined} "
+            f"GROUP BY {tal}.{id_col} HAVING COUNT(*) > 1 LIMIT 1"
         ).take(1)
         if dup:
             raise ValueError(
@@ -764,7 +717,7 @@ def _merge_to_ops(engine, snap, p: _ParsedDml, id_col: str) -> list:
                 "matched by more than one source row"
             )
 
-        types = _column_types(cur)
+        types = _column_types(snap.table(table))
         ops: list = []
         matched_clauses = [c for c in d["clauses"] if c["matched"]]
         unmatched_clauses = [c for c in d["clauses"] if not c["matched"]]
@@ -783,37 +736,31 @@ def _merge_to_ops(engine, snap, p: _ParsedDml, id_col: str) -> list:
             flt = _clause_filter(matched_clauses, i)
             if c["kind"] == "update":
                 set_map = dict(c["sets"])
-                proj = []
-                for name in cur.columns:
-                    if name in set_map:
-                        proj.append(
-                            f"CAST(({set_map[name]}) AS {types[name]}) AS {name}"
-                        )
-                    else:
-                        proj.append(f"{tal}.{name}")
-                updated = spark.sql(
-                    f"SELECT {', '.join(proj)} FROM {tv} {tal} "
-                    f"JOIN {sv} {sal} ON {on} WHERE {flt}"
+                proj = ", ".join(
+                    f"CAST(({set_map[name]}) AS {t}) AS {name}"
+                    if name in set_map else f"{tal}.{name}"
+                    for name, t in types.items()
+                )
+                updated = snap.sql(
+                    f"SELECT {proj} {joined} WHERE {flt}"
                 ).localCheckpoint(eager=True)
-                ops.append(Put(p.table, updated))
+                ops.append(Put(table, updated))
             else:  # delete
-                ids = spark.sql(
-                    f"SELECT {tal}.{id_col} AS {id_col} FROM {tv} {tal} "
-                    f"JOIN {sv} {sal} ON {on} WHERE {flt}"
+                ids = snap.sql(
+                    f"SELECT {tal}.{id_col} AS {id_col} {joined} WHERE {flt}"
                 ).localCheckpoint(eager=True)
-                ops.append(Delete(p.table, ids, id_col))
+                ops.append(Delete(table, ids, id_col))
 
         for i, c in enumerate(unmatched_clauses):
             flt = _clause_filter(unmatched_clauses, i)
-            proj = []
-            for col, val in zip(c["cols"], c["vals"]):
-                cast = f" AS {types[col]}" if col in types else ""
-                proj.append(
-                    f"CAST(({val}){cast}) AS {col}" if cast else f"({val}) AS {col}"
-                )
-            inserted = spark.sql(
-                f"SELECT {', '.join(proj)} FROM {sv} {sal} "
-                f"WHERE NOT EXISTS (SELECT 1 FROM {tv} {tal} WHERE {on}) "
+            proj = ", ".join(
+                f"CAST(({val}) AS {types[col]}) AS {col}" if col in types
+                else f"({val}) AS {col}"
+                for col, val in zip(c["cols"], c["vals"])
+            )
+            inserted = snap.sql(
+                f"SELECT {proj} FROM {sv} {sal} "
+                f"WHERE NOT EXISTS (SELECT 1 FROM {table} {tal} WHERE {on}) "
                 f"AND ({flt})"
             ).localCheckpoint(eager=True)
             if id_col in inserted.columns:
@@ -831,17 +778,13 @@ def _merge_to_ops(engine, snap, p: _ParsedDml, id_col: str) -> list:
                         "MERGE cardinality violation: source inserts id "
                         f"{idup[0][0]!r} more than once"
                     )
-            ops.append(Put(p.table, inserted))
+            ops.append(Put(table, inserted))
         return ops
     finally:
-        for v in (tv, sv):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
+        spark.catalog.dropTempView(sv)
 
 
-def patch_to_ops(engine, snap, table: str, records: list[dict],
+def patch_to_ops(snap, table: str, records: list[dict],
                  id_col: str = "id", app_start: str | None = None,
                  app_end: str | None = None) -> list:
     """Compile PATCH (XTDB v2 ``patchDocs`` / ``PATCH INTO t RECORDS``)
@@ -864,7 +807,7 @@ def patch_to_ops(engine, snap, table: str, records: list[dict],
 
     from core2_spark.engine import Put
 
-    spark = engine.spark
+    spark = snap.engine.spark
     if not records:
         raise ValueError("PATCH: no records")
     ids = []

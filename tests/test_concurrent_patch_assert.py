@@ -111,23 +111,75 @@ def test_assert_guard_not_raceable_threaded(spark, tmp_path):
     assert [r["email"] for r in rows].count("race@x") == 1
 
 
-def test_patch_replay_merges_winner_keys_no_lost_update(spark, tmp_path):
+@pytest.mark.parametrize("spelling", ["op", "sql"])
+def test_patch_replay_merges_winner_keys_no_lost_update(spark, tmp_path, spelling):
     """A patches key b, B (stale) patches key c on the SAME document:
     B's replay re-reads A's committed state, so the final doc carries
     BOTH keys.  A non-re-expanding design would have B overwrite the
-    document as of the pre-A snapshot and silently drop b."""
+    document as of the pre-A snapshot and silently drop b.  The SQL
+    spelling (PATCH INTO .. RECORDS) lowers to the same Patch op."""
     root = str(tmp_path / "occ_patch")
     a = _seed(spark, root)
     b = Engine(spark, root, writer_retries=5)
     b.refresh()
-    a.submit_tx([Patch("users", ({"id": 1, "plan": "pro"},))])
+
+    def patch(eng, key, val):
+        if spelling == "op":
+            eng.submit_tx([Patch("users", ({"id": 1, key: val},))])
+        else:
+            eng.sql_dml(f"PATCH INTO users RECORDS {{id: 1, {key}: '{val}'}}")
+
+    patch(a, "plan", "pro")
     # b's token predates a's commit -> ConcurrentWriterError -> replay
-    b.submit_tx([Patch("users", ({"id": 1, "region": "eu"},))])
+    patch(b, "region", "eu")
     b.refresh()
     row = {r["id"]: r for r in b.db().table("users").collect()}[1]
     assert row["email"] == "ada@x"  # untouched key retained
     assert row["plan"] == "pro"  # the winner's key survived the loser
     assert row["region"] == "eu"
+
+
+def test_sql_update_replay_rereads_winner_no_lost_update(spark, tmp_path):
+    """Two writers run ``UPDATE t SET n = n + 1``; the stale one's
+    replay lowers the statement again over the winner's commit, so
+    both increments land."""
+    root = str(tmp_path / "occ_update")
+    a = Engine(spark, root, writer_retries=5)
+    a.submit_tx([Put("t", spark.createDataFrame([(1, 0)], "id long, n long"))])
+    b = Engine(spark, root, writer_retries=5)
+    a.sql_dml("UPDATE t SET n = n + 1 WHERE id = 1")
+    # b's token predates a's commit -> ConcurrentWriterError -> replay
+    b.sql_dml("UPDATE t SET n = n + 1 WHERE id = 1")
+    b.refresh()
+    assert [tuple(r) for r in b.db().table("t").collect()] == [(1, 2)]
+
+
+def test_sql_update_threaded_increments_all_land(spark, tmp_path):
+    """Three threads each run ``UPDATE t SET n = n + 1`` with retries:
+    every increment lands, because each replay lowers the statement
+    again over the latest commit."""
+    root = str(tmp_path / "occ_update_threads")
+    Engine(spark, root).submit_tx(
+        [Put("t", spark.createDataFrame([(1, 0)], "id long, n long"))]
+    )
+    errors: list[Exception] = []
+
+    def run() -> None:
+        try:
+            eng = Engine(spark, root, writer_retries=10)
+            eng.sql_dml("UPDATE t SET n = n + 1 WHERE id = 1")
+        except Exception as exc:
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run) for _ in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    rows = Engine(spark, root).db().table("t").collect()
+    assert [tuple(r) for r in rows] == [(1, 3)]
 
 
 def test_patch_threaded_disjoint_keys_all_survive(spark, tmp_path):

@@ -1409,6 +1409,43 @@ def test_with_tx_expands_over_the_pinned_rows(spark, tmp_path, later):
     assert sorted(r["id"] for r in spec.table("t").collect()) == [1, 2, 3, 4, 6]
 
 
+@pytest.mark.parametrize("op", ["assert", "call", "patch"])
+def test_submit_tx_expands_over_the_head_rows(spark, tmp_path, op):
+    """The commit twin of the what-if's in-flight case: submit_tx
+    expands Assert, Call and Patch over the head's rows read at the tx
+    clock, so a peer's published but unlogged rows (system start past
+    the head, before the tx clock) reach none of them."""
+    from datetime import datetime
+
+    from core2_spark.engine import Assert, Call, Patch, _Tx, _version_rows
+
+    eng = Engine(spark, str(tmp_path / "head"))
+    mk = lambda ids, v: spark.createDataFrame([(i, v) for i in ids], "id long, v string")
+    eng.submit_tx([Put("t", mk([1, 2, 3, 4], "a"))], tx_time="2024-01-01 00:00:01")
+    # a peer mid-commit: its rows are published, the log is not
+    t2 = datetime(2024, 1, 2, 0, 0, 1)
+    peer = Put("t", mk([4, 5], "peer"))
+    eng._append(_Tx(eng._pending_path(), set(), t=t2), "t", _version_rows(peer, t2, 0))
+    writer = Engine(spark, eng.root)
+    seen = []
+
+    def count(snap):
+        seen.append(snap.table("t").count())
+        return [Put("t", mk([6], "a"))]
+
+    ops = {
+        "assert": [Assert("(SELECT COUNT(*) FROM t) = 4")],
+        "call": [Call(count)],
+        "patch": [Patch("t", ({"id": 4, "w": "x"},))],
+    }[op]
+    writer.submit_tx(ops, tx_time="2024-01-03 00:00:01")
+    if op == "call":
+        assert seen == [4]
+    if op == "patch":
+        rows = writer.db().table("t").filter("id = 4").collect()
+        assert [(r["v"], r["w"]) for r in rows] == [("a", "x")]
+
+
 def _replica(spark, tmp_path):
     """A replica holding id 1 from a source's feed, and the feed's
     tail (ids 10 and 11) still to apply."""

@@ -85,6 +85,72 @@ def test_insert_select_derives_from_snapshot(eng):
     assert len(got) == 6
 
 
+def test_insert_select_casts_to_target_types(spark, tmp_path):
+    """INSERT SELECT casts to the target's column types, like INSERT
+    VALUES: an INT ``0 AS n`` into a BIGINT column must not fork the
+    table's parquet schema (every later read, here and after reopen,
+    would fail to merge it)."""
+    from core2_spark.engine import Put
+
+    eng = Engine(spark, str(tmp_path / "cast"))
+    eng.submit_tx([Put("t", spark.createDataFrame([(1, 5)], "id long, n long"))])
+    eng.sql_dml("INSERT INTO t SELECT id + 10 AS id, 0 AS n FROM t")
+    for e in (eng, Engine(spark, eng.root)):
+        t = e.db().table("t")
+        assert dict(t.dtypes)["n"] == "bigint"
+        assert sorted(tuple(r) for r in t.collect()) == [(1, 5), (11, 0)]
+
+
+def test_subqueries_read_the_pre_transaction_snapshot(spark, tmp_path):
+    """WHERE, SET and MERGE subqueries may name another table or the
+    target itself, and read the pinned pre-transaction state: within
+    one transaction no statement sees another's writes."""
+    from core2_spark.engine import Put
+
+    eng = Engine(spark, str(tmp_path / "subq"))
+    eng.submit_tx([
+        Put("t", spark.createDataFrame([(i, i) for i in (1, 2, 3, 4)], "id long, n long")),
+        Put("u", spark.createDataFrame([(2,), (3,)], "id long")),
+    ])
+    eng.sql_dml_many([
+        "UPDATE t SET n = (SELECT COUNT(*) FROM u) WHERE id = 1",
+        "UPDATE t SET n = 7 WHERE id IN (SELECT id FROM u)",
+        # pre-tx max is 4 (id 4), not the 7 the statement above wrote
+        "DELETE FROM t WHERE n = (SELECT MAX(n) FROM t)",
+        # pre-tx id 3 still has n = 3
+        "DELETE FROM u WHERE id IN (SELECT id FROM t WHERE n = 3)",
+    ])
+    db = eng.db()
+    assert sorted(tuple(r) for r in db.table("t").collect()) == [(1, 2), (2, 7), (3, 7)]
+    assert [r["id"] for r in db.table("u").collect()] == [2]
+    eng.sql_dml_many([
+        "MERGE INTO t USING t s ON t.id = s.id AND t.n >= (SELECT MAX(n) FROM t) "
+        "WHEN MATCHED AND s.id IN (SELECT id FROM u) "
+        "THEN UPDATE SET n = (SELECT SUM(n) FROM t) "
+        "WHEN MATCHED THEN DELETE",
+        "UPDATE t SET n = 0 WHERE id NOT IN (SELECT id FROM t WHERE n = 7)",
+    ])
+    # ON matches ids 2 and 3 (pre-tx max n is 7): id 2 (in u) takes the
+    # pre-tx sum 16 and id 3 is deleted; the UPDATE sets id 1 to 0
+    assert sorted(tuple(r) for r in eng.db().table("t").collect()) == [(1, 0), (2, 16)]
+
+
+def test_current_timestamp_is_the_tx_clock(spark, tmp_path):
+    """CURRENT_TIMESTAMP in a DML statement reads the transaction
+    clock, not the wall clock: a replay writes the same value."""
+    from core2_spark.engine import Put
+
+    eng = Engine(spark, str(tmp_path / "now"))
+    eng.submit_tx(
+        [Put("t", spark.createDataFrame([(1, None)], "id long, ts timestamp"))],
+        tx_time="2024-01-01 00:00:01",
+    )
+    eng.sql_dml("UPDATE t SET ts = CURRENT_TIMESTAMP WHERE id = 1", tx_time="2024-01-02 00:00:01")
+    eng.sql_dml("INSERT INTO t (id, ts) VALUES (2, CURRENT_TIMESTAMP)", tx_time="2024-01-03 00:00:01")
+    got = sorted((r["id"], r["ts"].isoformat()) for r in eng.db().table("t").collect())
+    assert got == [(1, "2024-01-02T00:00:01"), (2, "2024-01-03T00:00:01")]
+
+
 def test_update_for_portion_of_application_time(eng):
     eng.sql_dml(
         "UPDATE accounts FOR PORTION OF APPLICATION_TIME "
