@@ -41,6 +41,7 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from core2_spark import temporal as bt
 from core2_spark.basis import Basis, acquire_basis
@@ -234,6 +235,67 @@ def _version_rows(op: Put | Delete, t: datetime, seq: int) -> DataFrame:
     raise TypeError(f"unsupported transaction op {op!r}")
 
 
+def _conformed_type(have: T.DataType, want: T.DataType) -> T.DataType:
+    """``have`` with each leaf type replaced by the one ``want`` records
+    at the same place.  Struct fields ``want`` lacks keep their type (a
+    write may add them), and field order and nullability stay
+    ``have``'s, so a plain ``cast`` to the result is valid (Spark casts
+    structs by position)."""
+    if isinstance(have, T.StructType) and isinstance(want, T.StructType):
+        known = {f.name: f.dataType for f in want.fields}
+        return T.StructType([
+            T.StructField(
+                f.name,
+                _conformed_type(f.dataType, known.get(f.name, f.dataType)),
+                f.nullable,
+                f.metadata,
+            )
+            for f in have.fields
+        ])
+    if isinstance(have, T.ArrayType) and isinstance(want, T.ArrayType):
+        return T.ArrayType(
+            _conformed_type(have.elementType, want.elementType), have.containsNull
+        )
+    return want
+
+
+def _conform(
+    rows: DataFrame, recorded: T.StructType | None
+) -> tuple[DataFrame, T.StructType]:
+    """``rows`` with each column ``recorded`` names cast to its recorded
+    leaf types, and their schema — the one place a written column's
+    type is decided, for a commit and a what-if alike.  A bare literal
+    (``4`` is INT, ``2.5`` DECIMAL(2,1)) would otherwise fork the
+    parquet schema of a BIGINT/DOUBLE version table, and every later
+    read would fail to merge it.  Rows that need no cast come back as
+    they are."""
+    schema = rows.schema
+    to = schema if recorded is None else _conformed_type(schema, recorded)
+    if to == schema:
+        return rows, schema
+    col = lambda name: F.col("`" + name.replace("`", "``") + "`")  # a dot is no path
+    return rows.select(*[
+        col(f.name).cast(t.dataType).alias(f.name) if t != f else col(f.name)
+        for f, t in zip(schema.fields, to.fields)
+    ]), to
+
+
+def _widened(recorded: T.StructType | None, schema: T.StructType) -> T.StructType | None:
+    """``recorded`` with the fields of a written ``schema`` it lacks
+    appended, all nullable (older files lack them); None when a field
+    it has comes with another type (a struct that gained a field)."""
+    fields = list(recorded.fields) if recorded is not None else []
+    by_name = {f.name: f.dataType for f in fields}
+    for f in schema.fields:
+        if f.name == bt.SYS_DAY:  # the partition column, not a data column
+            continue
+        if f.name not in by_name:
+            fields.append(T.StructField(f.name, f.dataType, True))
+        elif by_name[f.name] != f.dataType:
+            return None
+    return T.StructType(fields)
+
+
 @dataclass
 class _Tx:
     """What one manifested commit has done so far — exactly what its
@@ -301,9 +363,10 @@ class Engine:
         # query.  The engine sees every schema it writes, so it
         # maintains the merged schema per table in _log.json; reads
         # then pass an explicit schema and skip the footer sweep.
-        # A same-name/different-type conflict invalidates the table's
-        # cache permanently (value None → mergeSchema fallback), and
-        # legacy roots the engine didn't write start untracked.
+        # Writes are cast to these types (see _append); a struct that
+        # gains a field invalidates the table's cache permanently
+        # (value None → mergeSchema fallback), and legacy roots the
+        # engine didn't write start untracked.
         self._table_schemas: dict[str, str | None] = {}
         # Per-block bloom filters (SURVEY §4: core2 keeps a bloom per
         # column/block in its metadata files [upstream: bloom.clj];
@@ -359,42 +422,6 @@ class Engine:
             if c in df.columns:
                 w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
         return w
-
-    def _merge_schema_cache(self, table: str, schema) -> None:
-        """Fold a just-written DataFrame schema (minus the partition
-        column) into the table's cached merged schema.  New fields
-        append; a dtype conflict invalidates the cache (None) —
-        conflicts are what mergeSchema exists for.  All cached fields
-        are nullable: older files may lack any of them."""
-        from pyspark.sql import types as T
-
-        cur = self._table_schemas.get(table, "ABSENT")
-        if cur is None:
-            return
-        if cur == "ABSENT":
-            # first sighting: only trust it if the engine is creating
-            # the table now — an existing dir may hold fields this
-            # engine never saw
-            if os.path.isdir(self._table_path(table)) and any(
-                True for _ in _walk_all_files(self._table_path(table))
-            ):
-                self._table_schemas[table] = None
-                return
-            fields: list = []
-        else:
-            fields = list(T.StructType.fromJson(json.loads(cur)).fields)
-        by_name = {f.name: i for i, f in enumerate(fields)}
-        for f in schema.fields:
-            nf = T.StructField(f.name, f.dataType, True)
-            i = by_name.get(f.name)
-            if i is None:
-                fields.append(nf)
-            elif fields[i].dataType != f.dataType:
-                self._table_schemas[table] = None
-                return
-        self._table_schemas[table] = json.dumps(
-            T.StructType(fields).jsonValue()
-        )
 
     def _basis_schemas(self) -> dict[str, str]:
         return {t: s for t, s in self._table_schemas.items() if s}
@@ -547,7 +574,7 @@ class Engine:
             self._last_tx_time = datetime.fromisoformat(meta["last_tx_time"])
             self._tx_counter = int(meta.get("tx_counter", 0))
             # merged-schema cache: {table: schema json string | None};
-            # None = permanently invalidated (type conflict), absent =
+            # None = permanently invalidated (a struct gained a field), absent =
             # never tracked (legacy root) — both fall back to a
             # mergeSchema read
             self._table_schemas = dict(meta.get("schemas", {}))
@@ -842,10 +869,25 @@ class Engine:
         """Append version rows to ``table`` within ``tx``: stage, record
         the planned destinations in the pending manifest, then publish
         — so every file is listed before it becomes visible and a crash
-        at ANY point rolls back cleanly at the next open."""
+        at ANY point rolls back cleanly at the next open.
+
+        Columns the table already has are cast to their recorded types
+        first (``_conform``); new columns widen the recorded schema
+        (``_widened``).  A table whose files this engine did not write
+        stays untracked (None: reads fall back to mergeSchema), since
+        its files may hold fields the engine never saw."""
         path = self._table_path(table)
         tx.paths.add(path)
-        self._merge_schema_cache(table, rows.drop(bt.SYS_DAY).schema)
+        snap = Snapshot(
+            self, acquire_basis({table: path}, self._epoch, self._basis_schemas())
+        )
+        recorded = snap._recorded_schema(table)
+        rows, schema = _conform(rows, recorded)
+        tracked = self._table_schemas.get(table, not snap.basis.manifests[table])
+        merged = _widened(recorded, schema) if tracked else None
+        self._table_schemas[table] = (
+            None if merged is None else json.dumps(merged.jsonValue())
+        )
         staging, moves = self._stage_rows(path, rows)
         planned = [dst for _src, dst in moves]
         self._write_pending(
@@ -2311,12 +2353,20 @@ class Snapshot:
         pre = self._at(t)
         overlays: dict[str, DataFrame] = {}
         erased: dict[str, DataFrame] = {}
+        # each table's types as the commit would record them, op by op
+        # (Engine._append: _conform, then _widened)
+        recorded: dict[str, T.StructType | None] = {}
         for seq, op in enumerate(pre._expand(ops)):
             if isinstance(op, Erase):
                 into = erased
                 rows = op.ids.select(F.col(op.id_col).alias("id")).distinct()
             else:
-                into, rows = overlays, _version_rows(op, t, seq)
+                into = overlays
+                if op.table not in recorded:
+                    recorded[op.table] = pre._recorded_schema(op.table)
+                before = recorded[op.table]
+                rows, schema = _conform(_version_rows(op, t, seq), before)
+                recorded[op.table] = _widened(before, schema) or before
             into[op.table] = (
                 into[op.table].unionByName(rows, allowMissingColumns=True)
                 if op.table in into
@@ -2327,8 +2377,22 @@ class Snapshot:
             # a speculative Put may create a brand-new table: an empty
             # manifest entry makes sql() register its view too
             manifests.setdefault(tname, ())
-        basis = replace(pre.basis, manifests=manifests)
+        schemas = {n: json.dumps(s.jsonValue()) for n, s in recorded.items() if s}
+        basis = replace(
+            pre.basis, manifests=manifests, schemas={**pre.basis.schemas, **schemas}
+        )
         return _SpeculativeSnapshot(pre, basis, overlays, erased)
+
+    def _recorded_schema(self, table: str) -> T.StructType | None:
+        """The types a write to ``table`` at this basis is cast to: the
+        schema the engine records or, for a table it does not track,
+        the types a read resolves; None for a table with no rows yet."""
+        cached = self.basis.schemas.get(table)
+        if cached:
+            return T.StructType.fromJson(json.loads(cached))
+        if not self.basis.manifests.get(table):
+            return None
+        return self._versions(table).drop(bt.SYS_DAY).schema
 
     def _at(self, t: datetime) -> "Snapshot":
         """The versions this snapshot reads, read at the later clock
@@ -2348,6 +2412,14 @@ class Snapshot:
         if bt.SYS_DAY in raw.columns:  # physical-layout detail
             raw = raw.drop(bt.SYS_DAY)
         return bt.close_system_versions(raw, "id")
+
+    def _row_versions(self, table: str) -> DataFrame:
+        """``history`` as a temporal query reads it (a SQL FOR clause,
+        an XTQL range bind): delete markers are visibility metadata,
+        not rows, and the write-order columns are physical details."""
+        return bt.without_tombstones(self.history(table)).drop(
+            bt.TX_SEQ, bt.ROW_SEQ, bt.TOMBSTONE
+        )
 
     def entity_history(
         self, table: str, entity_id, newest_first: bool = True
@@ -2574,9 +2646,7 @@ class Snapshot:
                 rewrite_temporal_sql(query, hist_map), bare_map, used
             )
             for name, view in hist_map.items():
-                bt.without_tombstones(self.history(name)).drop(
-                    bt.TX_SEQ, bt.ROW_SEQ, bt.TOMBSTONE
-                ).createOrReplaceTempView(view)
+                self._row_versions(name).createOrReplaceTempView(view)
                 registered.append(view)
             for name in sorted(used):
                 df = (
@@ -2754,15 +2824,11 @@ class Snapshot:
         def resolve(table: str, history: bool = False, **kw) -> DataFrame:
             if history:
                 # range/all-time temporal binds read the version
-                # history — with the SAME hygiene as the SQL dialect's
-                # FOR-clause view (above): tombstone markers are
-                # visibility metadata, not rows, and the write-order
-                # columns are physical details.  Like SQL:2011
-                # FROM..TO, the axis a range bind does NOT name stays
-                # unfiltered (all overlapping versions return).
-                return bt.without_tombstones(self.history(table)).drop(
-                    bt.TX_SEQ, bt.ROW_SEQ, bt.TOMBSTONE
-                )
+                # history, as the SQL dialect's FOR-clause view does.
+                # Like SQL:2011 FROM..TO, the axis a range bind does
+                # NOT name stays unfiltered (all overlapping versions
+                # return).
+                return self._row_versions(table)
             return self.table(table, **{**asof, **kw})
 
         return _xtql.xtql_with_resolver(resolve, pipeline)

@@ -13,6 +13,9 @@ through ``Snapshot.sql`` on the pre-transaction snapshot.  The
 statements lower inside `Engine.submit_tx` (``dml_to_ops`` runs as a
 Call op) to `engine` ops, so SQL DML and programmatic ops share one
 log, one clock, one pre-transaction snapshot and one visibility rule.
+DML looks up no column types: the commit casts each written value to
+the type its column records (`engine._conform`), as it does for every
+writer.
 
 Supported statements::
 
@@ -316,19 +319,18 @@ def _infer_type(values: list):
     )
 
 
-def _drop_allnull_new_keys(records: list[dict],
-                           existing: set[str]) -> list[dict]:
+def _drop_allnull_new_keys(records: list[dict], columns) -> list[dict]:
     """Remove keys whose value is None in EVERY record and which the
     table does not already have: a null value is not stored (the
     reference's document semantics — reading the key gives NULL either
     way), and keeping it would force a type on a column no value ever
     witnessed (the first all-NULL sighting would otherwise lock the
-    merged parquet schema to STRING and corrupt later typed writes)."""
+    merged parquet schema to STRING and corrupt later typed writes).
+    ``columns()`` gives the table's columns; it is called only when
+    some key is NULL in every record."""
     keys = {k for r in records for k in r}
-    dead = {
-        k for k in keys
-        if k not in existing and all(r.get(k) is None for r in records)
-    }
+    null = {k for k in keys if all(r.get(k) is None for r in records)}
+    dead = null - set(columns()) if null else set()
     if not dead:
         return records
     return [{k: v for k, v in r.items() if k not in dead} for r in records]
@@ -573,21 +575,29 @@ def parse_dml(statement: str) -> _ParsedDml:
     raise ValueError(f"unsupported DML statement: {statement[:120]}")
 
 
-def _column_types(df) -> dict[str, str]:
-    """Column name → Spark SQL type of a target table's current state:
-    the types DML casts new values to.  A bare literal (``4`` is INT,
-    ``0.0`` DECIMAL(1,1)) would otherwise fork the parquet schema of a
-    BIGINT/DOUBLE version table (merge error on the next read)."""
-    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
-
-
-def _cast_to(rows, types: dict[str, str]):
-    """``rows`` with each column ``types`` names cast to that type."""
+def _set_rows(snap, table: str, target: str, sets, rest: str):
+    """``SELECT <target>.*, (e) AS __set_i <rest>`` with each SET column
+    replaced by its value: the new versions an UPDATE or a MERGE
+    WHEN MATCHED UPDATE writes (the commit casts each value to its
+    column's type).  A SET naming a column ``table`` lacks raises."""
+    rows = snap.sql(
+        f"SELECT {target}.*"
+        + "".join(f", ({e}) AS __set_{i}" for i, (_c, e) in enumerate(sets))
+        + f" {rest}"
+    )
+    cols = rows.columns[: len(rows.columns) - len(sets)]
+    folded = {c.lower(): c for c in cols}  # Spark resolves names case-insensitively
+    value = {}
+    for i, (c, _e) in enumerate(sets):
+        parts = [part.strip("`") for part in c.split(".")]
+        if len(parts) == 2 and parts[0].lower() in (table.lower(), target.lower()):
+            parts = parts[1:]  # `SET t.c = …` names column c of the target
+        name = folded.get(".".join(parts).lower())
+        if name is None:
+            raise ValueError(f"SET {c}: table {table!r} has no such column")
+        value[name] = f"__set_{i}"
     return rows.select(
-        *[
-            rows[c].cast(types[c]).alias(c) if c in types else rows[c]
-            for c in rows.columns
-        ]
+        *[rows[value[c]].alias(c) if c in value else rows[c] for c in cols]
     )
 
 
@@ -614,47 +624,30 @@ def dml_to_ops(snap, statement: str, id_col: str = "id") -> list:
         return [Patch(p.table, tuple(d["records"]), id_col,
                       app_start=d["app_from"], app_end=d["app_to"])]
 
-    if p.verb.startswith("insert"):
+    if p.verb == "insert_records":
         known = p.table in snap.basis.manifests
-        types = _column_types(snap.table(p.table)) if known else {}
-        if p.verb == "insert_records":
-            rows = records_to_df(
-                snap.engine.spark, _drop_allnull_new_keys(d["records"], set(types))
+        records = _drop_allnull_new_keys(
+            d["records"], lambda: snap.table(p.table).columns if known else ()
+        )
+        rows = records_to_df(snap.engine.spark, records)
+        if id_col not in rows.columns:
+            raise ValueError(
+                f"INSERT RECORDS into {p.table!r}: every record needs "
+                f"the id key {id_col!r}"
             )
-            if id_col not in rows.columns:
-                raise ValueError(
-                    f"INSERT RECORDS into {p.table!r}: every record needs "
-                    f"the id key {id_col!r}"
-                )
-        elif p.verb == "insert_values":
-            rows = snap.sql(
-                f"SELECT * FROM (VALUES {d['values']}) AS _ins({', '.join(d['cols'])})"
-            )
-        else:
-            rows = snap.sql(d["select"])
-        rows = _cast_to(rows, types)
-        if p.verb == "insert_select":
-            # materialize before the write: the SELECT may read the
-            # very table the Put appends to
-            rows = rows.localCheckpoint(eager=True)
         return [Put(p.table, rows)]
+    if p.verb == "insert_values":
+        cols = ", ".join(d["cols"])
+        return [Put(p.table, snap.sql(f"SELECT * FROM (VALUES {d['values']}) AS _ins({cols})"))]
+    if p.verb == "insert_select":
+        # materialize before the write: the SELECT may read the very
+        # table the Put appends to
+        return [Put(p.table, snap.sql(d["select"]).localCheckpoint(eager=True))]
 
     where = f" WHERE {d['where']}" if d["where"] else ""
     if p.verb == "update":
-        # each SET value rides the one read as an extra column, then
-        # replaces its column cast to that column's type: a second
-        # snap.table just for the types would build the table's file
-        # index twice
-        sets = {c: (e, f"__set_{i}") for i, (c, e) in enumerate(d["sets"])}
-        extra = "".join(f", ({e}) AS {alias}" for e, alias in sets.values())
-        matched = snap.sql(f"SELECT *{extra} FROM {p.table}{where}")
-        cols = matched.columns[: len(matched.columns) - len(sets)]
-        updated = matched.select(
-            *[
-                matched[sets[c][1]].cast(matched.schema[c].dataType).alias(c)
-                if c in sets else matched[c]
-                for c in cols
-            ]
+        updated = _set_rows(
+            snap, p.table, p.table, d["sets"], f"FROM {p.table}{where}"
         ).localCheckpoint(eager=True)  # reads the table the Put appends to
         return [Put(p.table, updated, app_start=d["app_from"], app_end=d["app_to"])]
 
@@ -717,7 +710,6 @@ def _merge_to_ops(snap, p: _ParsedDml, id_col: str) -> list:
                 "matched by more than one source row"
             )
 
-        types = _column_types(snap.table(table))
         ops: list = []
         matched_clauses = [c for c in d["clauses"] if c["matched"]]
         unmatched_clauses = [c for c in d["clauses"] if not c["matched"]]
@@ -735,14 +727,8 @@ def _merge_to_ops(snap, p: _ParsedDml, id_col: str) -> list:
         for i, c in enumerate(matched_clauses):
             flt = _clause_filter(matched_clauses, i)
             if c["kind"] == "update":
-                set_map = dict(c["sets"])
-                proj = ", ".join(
-                    f"CAST(({set_map[name]}) AS {t}) AS {name}"
-                    if name in set_map else f"{tal}.{name}"
-                    for name, t in types.items()
-                )
-                updated = snap.sql(
-                    f"SELECT {proj} {joined} WHERE {flt}"
+                updated = _set_rows(
+                    snap, table, tal, c["sets"], f"{joined} WHERE {flt}"
                 ).localCheckpoint(eager=True)
                 ops.append(Put(table, updated))
             else:  # delete
@@ -754,9 +740,7 @@ def _merge_to_ops(snap, p: _ParsedDml, id_col: str) -> list:
         for i, c in enumerate(unmatched_clauses):
             flt = _clause_filter(unmatched_clauses, i)
             proj = ", ".join(
-                f"CAST(({val}) AS {types[col]}) AS {col}" if col in types
-                else f"({val}) AS {col}"
-                for col, val in zip(c["cols"], c["vals"])
+                f"({val}) AS {col}" for col, val in zip(c["cols"], c["vals"])
             )
             inserted = snap.sql(
                 f"SELECT {proj} FROM {sv} {sal} "
@@ -830,7 +814,7 @@ def patch_to_ops(snap, table: str, records: list[dict],
     mask = "_patched_keys"
     if table not in snap.basis.manifests:
         # patching a table that does not exist yet = plain insert
-        records = _drop_allnull_new_keys(records, {id_col})
+        records = _drop_allnull_new_keys(records, lambda: ())
         pdf = records_to_df(spark, records, mask_col=mask)
         return [Put(table, pdf.drop(mask),
                     app_start=app_start, app_end=app_end)]
@@ -838,11 +822,8 @@ def patch_to_ops(snap, table: str, records: list[dict],
     cur = snap.table(table)
     # explicit NULL on a key the table does not have is a no-op (the
     # row reads NULL either way); never let it force a column type
-    records = _drop_allnull_new_keys(records, set(cur.columns))
+    records = _drop_allnull_new_keys(records, lambda: cur.columns)
     pdf = records_to_df(spark, records, mask_col=mask)
-    types = _column_types(cur)
-    types.pop(mask, None)
-    pdf = _cast_to(pdf, types)
     patch_cols = [c for c in pdf.columns if c != mask]
     if len(ids) <= 256:
         # small lists push down into the parquet scan (row-group
@@ -858,24 +839,20 @@ def patch_to_ops(snap, table: str, records: list[dict],
     p, c = pdf.alias("_p"), cur_hit.alias("_c")
     joined = p.join(c, F.col(f"_p.{id_col}") == F.col(f"_c.{id_col}"), "left")
 
-    out_cols = list(cur.columns) + [
-        k for k in patch_cols if k not in cur.columns
-    ]
+    current = {f.name: f.dataType for f in cur.schema.fields}
+    out_cols = list(current) + [k for k in patch_cols if k not in current]
     proj = []
     for name in out_cols:
-        if name == id_col:
-            proj.append(F.col(f"_p.{id_col}").alias(name))
+        if name == id_col or name not in current:
+            # a new key is NULL where a record does not mention it
+            proj.append(F.col(f"_p.{name}").alias(name))
         elif name in patch_cols:
+            # the merged value keeps its column's type: CASE's own
+            # coercion would cast a STRING column's unpatched values to
+            # a numeric patch value's type
             mentioned = F.array_contains(F.col(f"_p.{mask}"), F.lit(name))
-            current = (
-                F.col(f"_c.{name}") if name in cur.columns
-                else F.lit(None).cast(pdf.schema[name].dataType)
-            )
-            proj.append(
-                F.when(mentioned, F.col(f"_p.{name}"))
-                .otherwise(current)
-                .alias(name)
-            )
+            value = F.col(f"_p.{name}").cast(current[name])
+            proj.append(F.when(mentioned, value).otherwise(F.col(f"_c.{name}")).alias(name))
         else:
             proj.append(F.col(f"_c.{name}").alias(name))
     # materialize before the write: the merge reads the very table the

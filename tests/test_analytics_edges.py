@@ -16,12 +16,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from core2_spark.operators.cusum import cusum_alarms, cusum_oracle_sql
+from core2_spark.plans import plan_text
 from core2_spark.queries.analytics_q import (
     retention_cohorts,
     retention_oracle_sql,
     rolling_actives,
     rolling_actives_oracle_sql,
 )
+from core2_spark.queries.registry import all_queries
+from tests.conftest import SF_DIR
 from tests.parity import assert_frames_match
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -377,3 +380,32 @@ def test_quoted_stages_through_funnel_and_runs_builders(spark):
         "runs-quoted",
     )
     con.close()
+
+
+def test_bm25_single_corpus_scan(spark):
+    """bm25_topk tokenizes the corpus exactly ONCE: doc length is the
+    map-side size(filter(split(...))) carried through the tf explode,
+    and df is a window over tf — pre-r11 the plan held THREE explode
+    generators (a whole-stream length aggregate plus a duplicated tf
+    subtree under the idf broadcast)."""
+    plan = plan_text(all_queries()["text_bm25_search_topk"](spark, SF_DIR))
+    assert plan.count("Arguments: explode") == 1, plan
+    # one physical scan (each scan prints once in the tree and once in
+    # the detail section; Location lines appear once per scan)
+    assert plan.count("Location: InMemoryFileIndex") == 1, plan
+
+
+@pytest.mark.parametrize("text,expected_nonempty", [
+    ("a b  c", 3),          # double space → empty token filtered
+    ("", 0),
+    ("   ", 0),
+])
+def test_bm25_mapside_dl_matches_exploded_count(spark, text, expected_nonempty):
+    """The map-side dl expression equals the old exploded count."""
+    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+    dl = df.select(
+        F.size(
+            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        ).alias("dl")
+    ).first()["dl"]
+    assert dl == expected_nonempty

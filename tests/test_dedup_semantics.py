@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from core2_spark import dedup, similarity
 from core2_spark.catalog import load_tables
+from core2_spark.plans import plan_text
+from core2_spark.queries.registry import all_queries
 from tests.conftest import SF_DIR
 
 
@@ -383,3 +385,18 @@ def test_minhash_mega_bucket_star_linkage(spark):
     both = df.unionByName(small)
     capped2 = minhash_candidate_pairs(both, max_bucket_rows=5).collect()
     assert (100, 101) in {(r["a_id"], r["b_id"]) for r in capped2}
+
+
+def test_decontamination_spreads_before_shingling(spark):
+    """Both decontamination queries must spread the corpus across
+    cores BEFORE the gram/shingle explode: a compact corpus scans as
+    one parquet split, and the r11 sweep measured the 40-char shingle
+    pass serialized on a single task without the explicit round-robin
+    repartition (REPARTITION_BY_NUM opts out of AQE coalescing)."""
+    qs = all_queries()
+    for name in (
+        "curation_decontaminate_ngram",
+        "curation_decontaminate_substring",
+    ):
+        plan = plan_text(qs[name](spark, SF_DIR))
+        assert "RoundRobinPartitioning" in plan, name

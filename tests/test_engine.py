@@ -1294,6 +1294,7 @@ def _rows(r) -> tuple:
 def _answers(snap, since) -> dict:
     """Everything a snapshot answers about table t, order-free."""
     return {
+        "types": snap.table("t").dtypes,
         "table": sorted(map(_rows, snap.table("t").collect()), key=repr),
         "history": sorted(map(_rows, snap.history("t").collect()), key=repr),
         "changes": sorted(
@@ -1336,13 +1337,18 @@ def _differential_ops(spark, case):
                 Delete("t", ids(1)),
             ])
         ],
+        # INT columns into BIGINT ones; a new column's first type wins
+        "narrower_put": [
+            Put("t", spark.createDataFrame([(9, "i", 9, 1)], "id int, v string, n int, m int")),
+            Put("t", spark.createDataFrame([(10, 2)], "id long, m long")),
+        ],
     }[case]
 
 
 @pytest.mark.parametrize(
     "case",
     ["put_duplicate_ids", "bounded_delete", "patch", "assert_true",
-     "assert_false", "call"],
+     "assert_false", "call", "narrower_put"],
 )
 def test_with_tx_answers_as_submit_tx(spark, tmp_path, case):
     """One lowering for a what-if and a commit: ``db.with_tx(ops, t)``
@@ -1370,6 +1376,41 @@ def test_with_tx_answers_as_submit_tx(spark, tmp_path, case):
     what_if = _answers(eng.db().with_tx(ops, t), since)
     eng.submit_tx(ops, t)
     assert what_if == _answers(eng.db(), since)
+
+
+@pytest.mark.parametrize("write", ["narrower_put", "narrower_delete", "decimal_put"])
+def test_write_casts_to_recorded_types(spark, tmp_path, write):
+    """A write whose columns are narrower than, or differ from, the
+    types the table records commits cast to those types: the table
+    stays readable (no parquet schema to merge), keeps its types and
+    stays tracked."""
+    eng = Engine(spark, str(tmp_path / "db"))
+    eng.submit_tx([Put("t", spark.createDataFrame([(1, 1.5)], "id long, price double"))])
+    op, expected = {
+        "narrower_put": (
+            Put("t", spark.createDataFrame([(2, 2.5)], "id int, price double")),
+            [(1, 1.5), (2, 2.5)],
+        ),
+        "narrower_delete": (Delete("t", spark.createDataFrame([(1,)], "id int")), []),
+        "decimal_put": (
+            Put("t", spark.sql("SELECT 2L AS id, 2.5 AS price")),
+            [(1, 1.5), (2, 2.5)],
+        ),
+    }[write]
+    eng.submit_tx([op])
+    for e in (eng, Engine(spark, eng.root)):
+        assert e._table_schemas["t"] is not None
+        t = e.db().table("t")
+        assert dict(t.dtypes) == {"id": "bigint", "price": "double"}
+        assert sorted(tuple(r) for r in t.collect()) == expected
+        assert e.db().history("t").count() == 2
+
+
+def test_write_cast_reads_a_dotted_column_name_as_one_name(spark, tmp_path):
+    eng = Engine(spark, str(tmp_path / "db"))
+    for ddl in ("id long, `a.b` long", "id int, `a.b` int"):
+        eng.submit_tx([Put("t", spark.createDataFrame([(1, 2)], ddl))])
+    assert dict(eng.db().table("t").dtypes) == {"id": "bigint", "a.b": "bigint"}
 
 
 @pytest.mark.parametrize("later", ["commit_and_compact", "inflight"])

@@ -463,7 +463,8 @@ def test_flight_reads_through_the_executor_with_engine_attached(spark, engine):
 
 def test_flight_do_put_keeps_nullable_int_columns(spark, engine):
     """DoPut hands the Arrow table to Spark directly: a nullable int64
-    column stays bigint with its NULL (a pandas hop made it double)."""
+    column stays bigint with its NULL (a pandas hop made it double),
+    and a later int32 upload is cast to it at commit."""
     import pyarrow as pa
 
     from core2_spark.flight_server import SqlFlightServer, put_table
@@ -473,8 +474,11 @@ def test_flight_do_put_keeps_nullable_int_columns(spark, engine):
         loc = f"grpc://127.0.0.1:{server.port}"
         table = pa.table({"id": [1, 2], "qty": pa.array([5, None], pa.int64())})
         put_table(loc, "stock", table, tx_time="2024-01-01 00:00:01")
+        narrow = pa.table({"id": [3], "qty": pa.array([7], pa.int32())})
+        put_table(loc, "stock", narrow, tx_time="2024-01-01 00:00:02")
+        assert engine._table_schemas["stock"] is not None
         df = engine.db().sql("SELECT id, qty FROM stock ORDER BY id")
         assert dict(df.dtypes)["qty"] == "bigint"
-        assert [tuple(r) for r in df.collect()] == [(1, 5), (2, None)]
+        assert [tuple(r) for r in df.collect()] == [(1, 5), (2, None), (3, 7)]
     finally:
         server.shutdown()

@@ -12,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from core2_spark import dynamics, multimodal, temporal as bt
+from core2_spark.catalog import load_table
 from core2_spark.operators.guards import CardinalityError, max_1_row
+from tests.conftest import SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DATA_DIR = os.path.join(REPO, "_data", "test_tmp")
@@ -879,3 +881,30 @@ def test_datalog_mutual_semi_naive_deep_chain(spark):
          "rules": rules},
     )
     assert sorted(r["y"] for r in odd.collect()) == list(range(1, n + 1, 2))
+
+
+def test_schema_cache_reuses_schema_not_relation(spark):
+    """load_table memoizes the inferred SCHEMA per (app, dir, table)
+    so footer inference runs once per table, while every build still
+    gets its OWN relation object.  Both halves are regression guards:
+    the first r11 form cached the DataFrame itself, and sharing one
+    LogicalRelation across the bench's 10 concurrent query threads
+    serialized them on JVM-side instance locks (headline wall
+    2.3 s -> 4.2 s with no sequential regression)."""
+    from core2_spark.catalog import _SCHEMA_CACHE
+
+    a = load_table(spark, SF_DIR, "orders")
+    b = load_table(spark, SF_DIR, "orders")
+    assert a is not b  # fresh relation per build — no shared plan locks
+    assert a.schema == b.schema
+    assert any(
+        k[2] == "orders" and k[1].endswith("sf0.001") for k in _SCHEMA_CACHE
+    )
+    # events memoizes the RAW read schema and re-normalizes ts on hit
+    e1 = load_table(spark, SF_DIR, "events")
+    e2 = load_table(spark, SF_DIR, "events")
+    assert e1 is not e2
+    assert dict(e1.dtypes)["ts"] == "timestamp"
+    assert e1.schema == e2.schema
+    # cached-schema relation still computes (sanity action)
+    assert b.count() > 0 and e2.count() > 0

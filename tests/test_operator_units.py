@@ -281,3 +281,42 @@ def test_pagerank_parameterized_bounded_plan(spark):
     p12 = plan_chars(pagerank(nodes, edges, iterations=12))
     p30 = plan_chars(pagerank(nodes, edges, iterations=30))
     assert p30 <= 1.5 * p12, (p12, p30)
+
+
+def test_connected_components_string_ids_fallback(spark):
+    """Non-numeric node ids take the join-based convergence check (no
+    label sum to compare) — same fixpoint, multi-hop chain."""
+    from core2_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(
+        [("b", "c"), ("c", "d"), ("x", "y"), ("a", "b")],
+        ["a_id", "b_id"],
+    )
+    got = {
+        (r["node"], r["component"])
+        for r in connected_components(edges).collect()
+    }
+    assert got == {
+        ("a", "a"),
+        ("b", "a"),
+        ("c", "a"),
+        ("d", "a"),
+        ("x", "x"),
+        ("y", "x"),
+    }
+
+
+def test_connected_components_numeric_sum_check(spark):
+    """Numeric ids take the monotone label-sum convergence check; a
+    chain forces genuine multi-iteration propagation."""
+    from core2_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 9)] + [(20, 21)],
+        ["a_id", "b_id"],
+    )
+    got = {
+        (r["node"], r["component"])
+        for r in connected_components(edges).collect()
+    }
+    assert got == {(i, 1) for i in range(1, 10)} | {(20, 20), (21, 20)}

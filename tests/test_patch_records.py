@@ -117,6 +117,15 @@ def test_insert_records_visible_and_type_aligned(eng):
             if f.name == "balance"] == ["double"]
 
 
+def test_patch_number_into_string_column_keeps_other_rows(eng):
+    """A patched value takes its column's type; the rows the PATCH
+    does not change keep their values (no STRING → BIGINT cast of
+    'bob')."""
+    eng.sql_dml("PATCH INTO accounts RECORDS {id: 1, owner: 5}, {id: 2, balance: 1}")
+    got = by_id(eng.db().table("accounts"))
+    assert (got[1]["owner"], got[2]["owner"], got[2]["balance"]) == ("5", "bob", 1.0)
+
+
 def test_records_mixed_int_float_promotes_to_double(spark, tmp_path):
     """A key mixing int and float ACROSS records infers DOUBLE; the
     remaining raw ints must be coerced before createDataFrame (the

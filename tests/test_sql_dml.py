@@ -527,3 +527,88 @@ def test_update_for_portion_of_valid_time_synonym(eng):
     db = eng.db()
     assert (1, "ada", 0.0) in rows(db.table("accounts", app_time="2024-06-15"))
     assert (1, "ada", 100.0) in rows(db.table("accounts", app_time="2024-08-01"))
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "UPDATE tgt SET nosuch = 5 WHERE id = 1",
+        "MERGE INTO tgt USING (SELECT 1 AS id) s ON tgt.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = 1.0, nosuch = 5",
+    ],
+)
+def test_set_of_an_unknown_column_raises(spark, tmp_path, stmt):
+    """A SET naming a column the target lacks is an error, not a new
+    unchanged version of every matched row."""
+    eng = _merge_engine(spark, tmp_path, "nosuch")
+    with pytest.raises(ValueError, match="nosuch"):
+        eng.sql_dml(stmt)
+    assert eng.db().history("tgt").count() == 3
+
+
+def test_set_names_a_column_plain_quoted_or_qualified(spark, tmp_path):
+    eng = _merge_engine(spark, tmp_path, "qualified")
+    eng.sql_dml("UPDATE tgt SET tgt.v = 1, `name` = 'x' WHERE id = 1")
+    eng.sql_dml(
+        "MERGE INTO tgt t USING (SELECT 2 AS id) s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET t.v = 2, NAME = 'y'"
+    )
+    got = sorted(tuple(r) for r in eng.db().sql("SELECT id, name, v FROM tgt").collect())
+    assert got == [(1, "x", 1.0), (2, "y", 2.0), (3, "c", 30.0)]
+
+
+def _target_builds(monkeypatch, eng, stmt, table):
+    """How many times ``stmt`` builds ``Snapshot.table(table)``."""
+    from core2_spark.engine import Snapshot
+
+    built = []
+    inner = Snapshot.table
+
+    def counting(self, name, *args, **kw):
+        built.append(name)
+        return inner(self, name, *args, **kw)
+
+    monkeypatch.setattr(Snapshot, "table", counting)
+    eng.sql_dml(stmt)
+    monkeypatch.undo()
+    return built.count(table)
+
+
+def test_merge_builds_the_target_once_per_read(spark, tmp_path, monkeypatch):
+    """MERGE reads its target once for the cardinality check and once
+    per WHEN clause; it builds no extra view to look up column types
+    (the commit casts new values to them)."""
+    eng = _merge_engine(spark, tmp_path, "builds")
+    stmt = (
+        "MERGE INTO tgt USING (SELECT 2 AS id, 'B' AS name, 1 AS v "
+        "UNION ALL SELECT 4, 'd', 4) s ON tgt.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, name, v) VALUES (s.id, s.name, s.v)"
+    )
+    assert _target_builds(monkeypatch, eng, stmt, "tgt") == 3
+    t = eng.db().table("tgt")
+    assert dict(t.dtypes) == {"id": "bigint", "name": "string", "v": "double"}
+    assert sorted(tuple(r) for r in t.collect()) == [
+        (1, "a", 10.0), (2, "b", 1.0), (3, "c", 30.0), (4, "d", 4.0)
+    ]
+
+
+def test_insert_builds_no_target_view(eng, monkeypatch):
+    """INSERT VALUES and INSERT RECORDS read nothing of their target;
+    RECORDS reads its columns only for a key that is NULL in every
+    record (a NULL the table has no column for is not stored)."""
+    assert _target_builds(
+        monkeypatch, eng, "INSERT INTO accounts (id, owner, balance) VALUES (4, 'dan', 10)",
+        "accounts",
+    ) == 0
+    assert _target_builds(
+        monkeypatch, eng, "INSERT INTO accounts RECORDS {id: 5, owner: 'eve', balance: 5}",
+        "accounts",
+    ) == 0
+    assert _target_builds(
+        monkeypatch, eng, "INSERT INTO accounts RECORDS {id: 6, owner: NULL, note: NULL}",
+        "accounts",
+    ) == 1
+    t = eng.db().table("accounts")
+    assert dict(t.dtypes) == {"id": "int", "owner": "string", "balance": "double"}
+    assert (4, "dan", 10.0) in rows(t) and (6, None, None) in rows(t)
