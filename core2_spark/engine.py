@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from core2_spark import temporal as bt
-from core2_spark.basis import Basis, acquire_basis
+from core2_spark.basis import Basis, acquire_basis, basis_from_json
 from core2_spark import datalog as dl
 
 
@@ -235,6 +235,13 @@ def _version_rows(op: Put | Delete, t: datetime, seq: int) -> DataFrame:
     raise TypeError(f"unsupported transaction op {op!r}")
 
 
+def _computed(op: Put | Delete | Erase) -> Put | Delete | Erase:
+    """``op`` with its rows or ids computed now, off the files they read."""
+    if isinstance(op, Put):
+        return replace(op, rows=op.rows.localCheckpoint(eager=True))
+    return replace(op, ids=op.ids.localCheckpoint(eager=True))
+
+
 def _conformed_type(have: T.DataType, want: T.DataType) -> T.DataType:
     """``have`` with each leaf type replaced by the one ``want`` records
     at the same place.  Struct fields ``want`` lacks keep their type (a
@@ -280,20 +287,29 @@ def _conform(
     ]), to
 
 
-def _widened(recorded: T.StructType | None, schema: T.StructType) -> T.StructType | None:
+def _widened(recorded: T.StructType | None, schema: T.StructType) -> T.StructType:
     """``recorded`` with the fields of a written ``schema`` it lacks
-    appended, all nullable (older files lack them); None when a field
-    it has comes with another type (a struct that gained a field)."""
-    fields = list(recorded.fields) if recorded is not None else []
-    by_name = {f.name: f.dataType for f in fields}
-    for f in schema.fields:
-        if f.name == bt.SYS_DAY:  # the partition column, not a data column
-            continue
-        if f.name not in by_name:
-            fields.append(T.StructField(f.name, f.dataType, True))
-        elif by_name[f.name] != f.dataType:
-            return None
-    return T.StructType(fields)
+    added, at any depth (a struct's, or an array of structs', new
+    fields too), all nullable: older files lack them and read them as
+    NULL.  ``schema`` has been conformed (``_conform``), so a field
+    both have keeps its recorded type."""
+    def merged(have: T.DataType, new: T.DataType) -> T.DataType:
+        if isinstance(have, T.StructType) and isinstance(new, T.StructType):
+            fields = {f.name: f.dataType for f in have.fields}
+            for f in new.fields:
+                old = fields.get(f.name)
+                fields[f.name] = f.dataType if old is None else merged(old, f.dataType)
+            return T.StructType([T.StructField(n, t, True) for n, t in fields.items()])
+        if isinstance(have, T.ArrayType) and isinstance(new, T.ArrayType):
+            return T.ArrayType(merged(have.elementType, new.elementType), True)
+        return have
+
+    written = T.StructType([f for f in schema.fields if f.name != bt.SYS_DAY])
+    return merged(recorded or T.StructType(), written)
+
+
+def _struct(js: str | None) -> T.StructType | None:
+    return None if js is None else T.StructType.fromJson(json.loads(js))
 
 
 @dataclass
@@ -358,16 +374,13 @@ class Engine:
         # the transaction was durable (submit_tx never raises for these
         # — a retry would double-apply the committed tx).
         self.last_refresh_errors: dict[str, str] = {}
-        # Merged-schema cache (100 TB planning cost): a mergeSchema
-        # read pays one footer read PER FILE at plan time on every
-        # query.  The engine sees every schema it writes, so it
-        # maintains the merged schema per table in _log.json; reads
-        # then pass an explicit schema and skip the footer sweep.
-        # Writes are cast to these types (see _append); a struct that
-        # gains a field invalidates the table's cache permanently
-        # (value None → mergeSchema fallback), and legacy roots the
-        # engine didn't write start untracked.
-        self._table_schemas: dict[str, str | None] = {}
+        # The one schema source (100 TB planning cost: inferring types
+        # is a footer read PER FILE): table → StructType json, kept in
+        # _log.json.  Every table with files has one.  A write is cast
+        # to it and widens it (_append: _conform, then _widened); reads,
+        # bases and rewrites all read with it.  A table found on disk
+        # without one is inferred once, at open (_adopt_schemas).
+        self._table_schemas: dict[str, str] = {}
         # Per-block bloom filters (SURVEY §4: core2 keeps a bloom per
         # column/block in its metadata files [upstream: bloom.clj];
         # the Parquet analogue is a writer option, not code).  Opt-in
@@ -409,10 +422,11 @@ class Engine:
         # order matters: the clock (log head) decides which pending
         # manifests are uncommitted; pending rollback must restore
         # erase _old_ dirs BEFORE the generic swap repair would
-        # classify them
+        # classify them; schemas are adopted from the repaired tables
         self._recover_clock()
         self._recover_pending()
         self._recover_rewrites()
+        self._adopt_schemas()
 
     def _writer(self, df: DataFrame):
         """Engine parquet writer with the standing options applied
@@ -423,8 +437,11 @@ class Engine:
                 w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
         return w
 
-    def _basis_schemas(self) -> dict[str, str]:
-        return {t: s for t, s in self._table_schemas.items() if s}
+    def _scan(self, table: str, path: str | None = None) -> DataFrame:
+        """The version rows under ``path`` (default: the table's
+        directory) read with the recorded schema, as a rewrite reads."""
+        schema = _struct(self._table_schemas[table])
+        return self.spark.read.schema(schema).parquet(path or self._table_path(table))
 
     def _micros_timestamps(self):
         """Scoped writer conf: version tables must carry parquet
@@ -542,6 +559,7 @@ class Engine:
         self._tx_counter = 0
         self._recover_clock()
         self._recover_rewrites()
+        self._adopt_schemas()
         # drop Spark's session-wide file-listing cache for everything
         # under this root: the head we just adopted may have been
         # produced by swaps/vacuums whose os.rename bypassed the
@@ -573,11 +591,10 @@ class Engine:
             meta = json.loads(raw)
             self._last_tx_time = datetime.fromisoformat(meta["last_tx_time"])
             self._tx_counter = int(meta.get("tx_counter", 0))
-            # merged-schema cache: {table: schema json string | None};
-            # None = permanently invalidated (a struct gained a field), absent =
-            # never tracked (legacy root) — both fall back to a
-            # mergeSchema read
-            self._table_schemas = dict(meta.get("schemas", {}))
+            # a None entry is older code's "invalidated": adopted again
+            self._table_schemas = {
+                t: js for t, js in meta.get("schemas", {}).items() if js
+            }
             self._app_bounded = set(meta.get("app_bounded", []))
             self._rewrites = dict(meta.get("rewrites", {}))
             self._maintenance_seq = int(meta.get("maintenance_seq", 0))
@@ -673,6 +690,24 @@ class Engine:
                 self._last_tx_time is None or t > self._last_tx_time
             ):
                 self._last_tx_time = t
+
+    def _adopt_schemas(self) -> None:
+        """Infer, once, the schema of each table directory that holds
+        parquet files but has no record (a root this engine did not
+        write, an older log); the next commit persists it.  A table
+        whose files do not merge stays out of every basis."""
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import PySparkException
+
+        for name, path in self._all_tables().items():
+            if name in self._table_schemas or not _list_parquet(path):
+                continue
+            try:
+                inferred = self.spark.read.option("mergeSchema", "true").parquet(path)
+            except (PySparkException, Py4JJavaError) as exc:
+                warnings.warn(f"table {name!r} left unread: {exc}", RuntimeWarning)
+                continue
+            self._table_schemas[name] = json.dumps(_widened(None, inferred.schema).jsonValue())
 
     def _persist_clock(
         self, _locked: bool = False, commit_txid: str | None = None
@@ -872,22 +907,13 @@ class Engine:
         at ANY point rolls back cleanly at the next open.
 
         Columns the table already has are cast to their recorded types
-        first (``_conform``); new columns widen the recorded schema
-        (``_widened``).  A table whose files this engine did not write
-        stays untracked (None: reads fall back to mergeSchema), since
-        its files may hold fields the engine never saw."""
+        first (``_conform``); the written schema then widens the
+        recorded one (``_widened``)."""
         path = self._table_path(table)
         tx.paths.add(path)
-        snap = Snapshot(
-            self, acquire_basis({table: path}, self._epoch, self._basis_schemas())
-        )
-        recorded = snap._recorded_schema(table)
+        recorded = _struct(self._table_schemas.get(table))
         rows, schema = _conform(rows, recorded)
-        tracked = self._table_schemas.get(table, not snap.basis.manifests[table])
-        merged = _widened(recorded, schema) if tracked else None
-        self._table_schemas[table] = (
-            None if merged is None else json.dumps(merged.jsonValue())
-        )
+        self._table_schemas[table] = json.dumps(_widened(recorded, schema).jsonValue())
         staging, moves = self._stage_rows(path, rows)
         planned = [dst for _src, dst in moves]
         self._write_pending(
@@ -1462,6 +1488,10 @@ class Engine:
                 # and a peer's published but unlogged rows never reach
                 # the expansion
                 ops = head._at(t)._expand(ops)
+            # an Erase's swap removes files the lazy rows or ids of a
+            # later op may read: compute those before anything runs
+            cut = next((i + 1 for i, op in enumerate(ops) if isinstance(op, Erase)), len(ops))
+            ops = [*ops[:cut], *map(_computed, ops[cut:])]
             for seq, op in enumerate(ops):
                 if isinstance(op, Erase):
                     self._erase(tx, op)
@@ -1535,7 +1565,7 @@ class Engine:
                                     f"{exc2} (first attempt: {exc})"
                                 ),
                             )
-        return acquire_basis(self._all_tables(), t, self._basis_schemas())
+        return acquire_basis(self._all_tables(), t, self._table_schemas)
 
     def _erase(self, tx: _Tx, op: Erase) -> None:
         """Rewrite ``op.table`` without ``op.ids`` within ``tx``: the
@@ -1544,7 +1574,7 @@ class Engine:
         a crash restores the pre-transaction table."""
         path = self._table_path(op.table)
         tx.paths.add(path)
-        if not os.path.isdir(path):
+        if op.table not in self._table_schemas:
             # Erase must read the table it rewrites — on a table that
             # never existed, fail cleanly (and roll back) instead of
             # surfacing a raw AnalysisException.  Delete is different:
@@ -1554,14 +1584,7 @@ class Engine:
             raise ValueError(
                 f"unknown table {op.table!r}: nothing to erase from"
             )
-        # mergeSchema: tombstone files carry a narrow schema; a plain
-        # read could silently drop data columns that only appear in a
-        # subset of files before the rewrite.
-        remaining = bt.erase(
-            self.spark.read.option("mergeSchema", "true").parquet(path),
-            op.ids,
-            op.id_col,
-        )
+        remaining = bt.erase(self._scan(op.table), op.ids, op.id_col)
         parent, tname = os.path.split(path.rstrip("/"))
         prior_old = next((o for p, o in tx.deferred_old if p == path), None)
         if prior_old is not None:
@@ -1756,7 +1779,7 @@ class Engine:
         # expectation snapshot BEFORE the read lists files: the guarded
         # swap re-checks it under the log lock (see _rewrite_atomic)
         expect = _list_parquet(path)
-        rows = self.spark.read.option("mergeSchema", "true").parquet(path)
+        rows = self._scan(table)
         if zorder_by:
             # cluster the rewritten files by the Morton key so
             # id-point / multi-column reads also prune via footer
@@ -1903,10 +1926,10 @@ class Engine:
             and e.startswith(f"{bt.SYS_DAY}=")
         }
         if day_dirs:
-            self._vacuum_partitioned(path, horizon, day_dirs)
+            self._vacuum_partitioned(table, horizon, day_dirs)
         else:
             expect = _list_parquet(path)
-            raw = self.spark.read.option("mergeSchema", "true").parquet(path)
+            raw = self._scan(table)
             closed = bt.close_system_versions(raw, "id")
             kept = closed.filter(
                 F.col(bt.SYS_END) > bt._ts(horizon)
@@ -1923,7 +1946,7 @@ class Engine:
         # (history-rewrite clock already stamped by the claim above)
 
     def _vacuum_partitioned(
-        self, path: str, horizon: datetime, day_dirs: dict[str, str]
+        self, table: str, horizon: datetime, day_dirs: dict[str, str]
     ) -> None:
         """Partition-wise retention for ``_sys_day=`` layouts (see
         ``vacuum``).  Correctness of the slice restriction: a version's
@@ -1934,6 +1957,7 @@ class Engine:
         implies end > horizon, same as the in-slice ∞ default)."""
         import datetime as _dtmod
 
+        path = self._table_path(table)
         horizon_day = horizon.date()
         slice_days = sorted(
             d for d in day_dirs
@@ -1950,7 +1974,7 @@ class Engine:
             d: _list_parquet(day_dirs[d]) for d in day_dirs
         }
         seq_cols = []
-        probe = self.spark.read.option("mergeSchema", "true").parquet(path)
+        probe = self._scan(table)
         for c in (bt.TX_SEQ, bt.ROW_SEQ):
             if c in probe.columns:
                 seq_cols.append(c)
@@ -2031,14 +2055,12 @@ class Engine:
             return
         keep_keys = self.spark.read.parquet(keys_dir)
         for d in mixed:
-            day_df = self.spark.read.option("mergeSchema", "true").parquet(
-                day_dirs[d]
-            )
+            day_df = self._scan(table, day_dirs[d])
             day_keys = keep_keys.filter(
                 F.col(bt.SYS_DAY).cast("string") == d
             ).drop(bt.SYS_DAY)
-            # null-safe keys: legacy files may lack seq columns
-            # (mergeSchema nulls), and null = null must still match
+            # null-safe keys: legacy files may lack seq columns (read
+            # as NULL), and null = null must still match
             cond = F.col("l.id").eqNullSafe(F.col("r.id"))
             for c in (bt.SYS_START, *seq_cols):
                 cond = cond & F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}"))
@@ -2263,9 +2285,15 @@ class Engine:
             basis = acquire_basis(
                 self._all_tables(),
                 self._last_tx_time or self._epoch,
-                self._basis_schemas(),
+                self._table_schemas,
             )
         return Snapshot(self, basis)
+
+    def rehydrate(self, token: str) -> Basis:
+        """The basis a ``basis_to_json`` token names, checked against
+        this engine's tables and recorded schemas (a token is client
+        input: see ``basis.basis_from_json``)."""
+        return basis_from_json(token, self._all_tables(), self._table_schemas)
 
 
 class Snapshot:
@@ -2355,18 +2383,16 @@ class Snapshot:
         erased: dict[str, DataFrame] = {}
         # each table's types as the commit would record them, op by op
         # (Engine._append: _conform, then _widened)
-        recorded: dict[str, T.StructType | None] = {}
+        recorded = {n: _struct(js) for n, js in pre.basis.schemas.items()}
         for seq, op in enumerate(pre._expand(ops)):
             if isinstance(op, Erase):
                 into = erased
                 rows = op.ids.select(F.col(op.id_col).alias("id")).distinct()
             else:
                 into = overlays
-                if op.table not in recorded:
-                    recorded[op.table] = pre._recorded_schema(op.table)
-                before = recorded[op.table]
+                before = recorded.get(op.table)
                 rows, schema = _conform(_version_rows(op, t, seq), before)
-                recorded[op.table] = _widened(before, schema) or before
+                recorded[op.table] = _widened(before, schema)
             into[op.table] = (
                 into[op.table].unionByName(rows, allowMissingColumns=True)
                 if op.table in into
@@ -2377,22 +2403,9 @@ class Snapshot:
             # a speculative Put may create a brand-new table: an empty
             # manifest entry makes sql() register its view too
             manifests.setdefault(tname, ())
-        schemas = {n: json.dumps(s.jsonValue()) for n, s in recorded.items() if s}
-        basis = replace(
-            pre.basis, manifests=manifests, schemas={**pre.basis.schemas, **schemas}
-        )
+        schemas = {n: json.dumps(s.jsonValue()) for n, s in recorded.items()}
+        basis = replace(pre.basis, manifests=manifests, schemas=schemas)
         return _SpeculativeSnapshot(pre, basis, overlays, erased)
-
-    def _recorded_schema(self, table: str) -> T.StructType | None:
-        """The types a write to ``table`` at this basis is cast to: the
-        schema the engine records or, for a table it does not track,
-        the types a read resolves; None for a table with no rows yet."""
-        cached = self.basis.schemas.get(table)
-        if cached:
-            return T.StructType.fromJson(json.loads(cached))
-        if not self.basis.manifests.get(table):
-            return None
-        return self._versions(table).drop(bt.SYS_DAY).schema
 
     def _at(self, t: datetime) -> "Snapshot":
         """The versions this snapshot reads, read at the later clock

@@ -145,9 +145,7 @@ class Statements:
         """The engine's snapshot at ``basis_token``, or at the log head."""
         if basis_token is None:
             return self.engine.db()
-        from core2_spark.basis import basis_from_json
-
-        return self.engine.db(basis_from_json(basis_token))
+        return self.engine.db(self.engine.rehydrate(basis_token))
 
     def build(self, sql: str, basis_token: str | None = None) -> DataFrame:
         """The query's DataFrame, not executed."""

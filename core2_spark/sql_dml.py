@@ -640,18 +640,14 @@ def dml_to_ops(snap, statement: str, id_col: str = "id") -> list:
         cols = ", ".join(d["cols"])
         return [Put(p.table, snap.sql(f"SELECT * FROM (VALUES {d['values']}) AS _ins({cols})"))]
     if p.verb == "insert_select":
-        # materialize before the write: the SELECT may read the very
-        # table the Put appends to
-        return [Put(p.table, snap.sql(d["select"]).localCheckpoint(eager=True))]
+        return [Put(p.table, snap.sql(d["select"]))]
 
     where = f" WHERE {d['where']}" if d["where"] else ""
     if p.verb == "update":
-        updated = _set_rows(
-            snap, p.table, p.table, d["sets"], f"FROM {p.table}{where}"
-        ).localCheckpoint(eager=True)  # reads the table the Put appends to
+        updated = _set_rows(snap, p.table, p.table, d["sets"], f"FROM {p.table}{where}")
         return [Put(p.table, updated, app_start=d["app_from"], app_end=d["app_to"])]
 
-    ids = snap.sql(f"SELECT {id_col} FROM {p.table}{where}").localCheckpoint(eager=True)
+    ids = snap.sql(f"SELECT {id_col} FROM {p.table}{where}")
     if p.verb == "delete":
         return [Delete(p.table, ids, id_col, app_start=d["app_from"], app_end=d["app_to"])]
     return [Erase(p.table, ids, id_col)]
@@ -727,14 +723,10 @@ def _merge_to_ops(snap, p: _ParsedDml, id_col: str) -> list:
         for i, c in enumerate(matched_clauses):
             flt = _clause_filter(matched_clauses, i)
             if c["kind"] == "update":
-                updated = _set_rows(
-                    snap, table, tal, c["sets"], f"{joined} WHERE {flt}"
-                ).localCheckpoint(eager=True)
+                updated = _set_rows(snap, table, tal, c["sets"], f"{joined} WHERE {flt}")
                 ops.append(Put(table, updated))
             else:  # delete
-                ids = snap.sql(
-                    f"SELECT {tal}.{id_col} AS {id_col} {joined} WHERE {flt}"
-                ).localCheckpoint(eager=True)
+                ids = snap.sql(f"SELECT {tal}.{id_col} AS {id_col} {joined} WHERE {flt}")
                 ops.append(Delete(table, ids, id_col))
 
         for i, c in enumerate(unmatched_clauses):
@@ -855,10 +847,7 @@ def patch_to_ops(snap, table: str, records: list[dict],
             proj.append(F.when(mentioned, value).otherwise(F.col(f"_c.{name}")).alias(name))
         else:
             proj.append(F.col(f"_c.{name}").alias(name))
-    # materialize before the write: the merge reads the very table the
-    # Put appends to
-    merged = joined.select(*proj).localCheckpoint(eager=True)
-    return [Put(table, merged, app_start=app_start, app_end=app_end)]
+    return [Put(table, joined.select(*proj), app_start=app_start, app_end=app_end)]
 
 
 # -- materialized-view maintenance statements -------------------------

@@ -19,7 +19,9 @@ def test_basis_pins_file_manifest(spark):
     tbl = f"{DATA_DIR}/tbl"
     spark.createDataFrame([(1, "a")], "id long, s string").write.mode("append").parquet(tbl)
 
-    basis = acquire_basis({"tbl": tbl}, "2024-06-01T00:00:00")
+    # a basis reads with the schema it is given, never a footer's
+    schemas = {"tbl": spark.read.parquet(tbl).schema.json()}
+    basis = acquire_basis({"tbl": tbl}, "2024-06-01T00:00:00", schemas)
     assert basis.read(spark, "tbl").count() == 1
 
     # Append after basis acquisition — a new transaction.
@@ -27,7 +29,7 @@ def test_basis_pins_file_manifest(spark):
 
     # Reads at the old basis are repeatable; a new basis sees the append.
     assert basis.read(spark, "tbl").count() == 1
-    basis2 = acquire_basis({"tbl": tbl}, "2024-06-02T00:00:00")
+    basis2 = acquire_basis({"tbl": tbl}, "2024-06-02T00:00:00", schemas)
     assert basis2.read(spark, "tbl").count() == 2
     # the pinned clock travels with the basis (deterministic "now")
     assert basis.current_time.isoformat() == "2024-06-01T00:00:00"

@@ -306,13 +306,15 @@ def test_reopen_is_metadata_only_and_recovers_clock(spark, engine):
     assert eng2._last_tx_time == expected
     assert eng2._tx_counter == engine._tx_counter
 
-    # legacy root (no manifest): parquet FOOTER statistics via pyarrow
-    # — still no Spark read, same recovered clock
+    # legacy root (no manifest): the clock comes from parquet FOOTER
+    # statistics via pyarrow, the same recovered clock; the schemas no
+    # log records are inferred once, at open (Engine._adopt_schemas)
     import os
 
     os.remove(os.path.join(ROOT, "_log.json"))
-    eng3 = Engine(_NoScanSpark(spark), ROOT)
+    eng3 = Engine(spark, ROOT)
     assert eng3._last_tx_time == expected
+    assert eng3._table_schemas == engine._table_schemas
 
 
 def test_erase_and_optimize_leave_no_temp_dirs(spark, engine):
@@ -648,7 +650,8 @@ def test_schema_cache_serves_evolved_tables_without_footer_sweep(spark):
     assert eng2._table_schemas == before
     assert "phantom_col" not in _json.dumps(eng2._table_schemas)
 
-    # legacy roots the engine didn't create stay untracked → fallback
+    # a legacy root the engine didn't create is adopted at open: its
+    # inferred schema is recorded, and reads and writes use it
     legacy = ROOT + "_schemas_legacy"
     shutil.rmtree(legacy, ignore_errors=True)
     os.makedirs(os.path.join(legacy, "old_table"))
@@ -662,11 +665,114 @@ def test_schema_cache_serves_evolved_tables_without_footer_sweep(spark):
         bt2.TX_SEQ, F2.lit(0)
     ).write.mode("append").parquet(os.path.join(legacy, "old_table"))
     leg = Engine(spark, legacy)
+    adopted = _json.loads(leg._table_schemas["old_table"])
+    assert {"id", "v", "_tombstone", "_tx_seq"} <= {f["name"] for f in adopted["fields"]}
     leg.submit_tx(
         [Put("old_table", spark.createDataFrame([(2, "y")], "id long, v string"))]
     )
-    assert leg._table_schemas.get("old_table") is None  # invalidated
-    assert leg.db().history("old_table").count() == 2  # mergeSchema path
+    widened = {f["name"] for f in _json.loads(leg._table_schemas["old_table"])["fields"]}
+    assert {"id", "v", "_tombstone", "_tx_seq", "_row_seq"} <= widened  # adopted
+    assert leg.db().history("old_table").count() == 2
+
+
+@pytest.mark.parametrize("shape", ["struct", "array_of_struct", "records"])
+def test_struct_widening_stays_recorded(spark, tmp_path, shape):
+    """A write that adds a field to a struct (also one inside an array)
+    widens the recorded schema instead of dropping it: the table stays
+    recorded, so reads keep passing an explicit schema, and the older
+    file reads the new field as NULL."""
+    eng = Engine(spark, str(tmp_path / "db"))
+    if shape == "records":
+        eng.sql_dml("INSERT INTO t RECORDS {id: 1, nest: {a: 1}}")
+        eng.sql_dml("INSERT INTO t RECORDS {id: 2, nest: {a: 2, b: 'x'}}")
+        b_of = lambda r: r["nest"]["b"]
+    elif shape == "struct":
+        for ddl, row in (
+            ("id long, nest struct<a: long>", (1, (1,))),
+            ("id long, nest struct<a: long, b: string>", (2, (2, "x"))),
+        ):
+            eng.submit_tx([Put("t", spark.createDataFrame([row], ddl))])
+        b_of = lambda r: r["nest"]["b"]
+    else:
+        for ddl, row in (
+            ("id long, nest array<struct<a: long>>", (1, [(1,)])),
+            ("id long, nest array<struct<a: long, b: string>>", (2, [(2, "x")])),
+        ):
+            eng.submit_tx([Put("t", spark.createDataFrame([row], ddl))])
+        b_of = lambda r: r["nest"][0]["b"]
+    for e in (eng, Engine(spark, eng.root)):
+        assert e._table_schemas["t"] is not None
+        assert '"b"' in e.db().basis.schemas["t"]
+        rows = e.db().table("t").collect()
+        assert sorted((r["id"], b_of(r)) for r in rows) == [(1, None), (2, "x")]
+
+
+def test_open_adopts_a_root_the_engine_did_not_write(spark, tmp_path):
+    """Version files written by something else are adopted at open: one
+    inference records the merged schema, reads use it, the next commit
+    persists it and a later open runs no Spark read.  A table whose
+    files do not merge is left out and does not stop the open."""
+    import json as _json
+    import os
+
+    from pyspark.sql import functions as F2
+
+    from core2_spark import temporal as bt2
+
+    root = str(tmp_path / "foreign")
+
+    def versions(ddl, rows, at):
+        return bt2.put(spark.createDataFrame(rows, ddl), tx_time=at).withColumn(
+            bt2.TOMBSTONE, F2.lit(False)
+        )
+
+    path = os.path.join(root, "t")
+    versions("id long, v string", [(1, "a")], "2024-01-01").write.mode("append").parquet(path)
+    versions("id long, w double", [(2, 2.5)], "2024-01-02").write.mode("append").parquet(path)
+    bad = os.path.join(root, "bad")
+    versions("id long", [(1,)], "2024-01-01").write.mode("append").parquet(bad)
+    versions("id string", [("x",)], "2024-01-01").write.mode("append").parquet(bad)
+    with pytest.warns(RuntimeWarning, match="'bad' left unread"):
+        eng = Engine(spark, root)
+    assert set(eng._table_schemas) == {"t"}
+    assert {"id", "v", "w"} <= {
+        f["name"] for f in _json.loads(eng._table_schemas["t"])["fields"]
+    }
+    assert sorted(tuple(r) for r in eng.db().table("t").select("id", "v", "w").collect()) == [
+        (1, "a", None), (2, None, 2.5)
+    ]
+    eng.submit_tx([Put("u", spark.createDataFrame([(1,)], "id long"))])
+    with open(os.path.join(root, "_log.json")) as f:
+        assert _json.load(f)["schemas"]["t"] == eng._table_schemas["t"]
+    shutil.rmtree(bad)
+    reopened = Engine(_NoScanSpark(spark), root)
+    assert reopened._table_schemas == eng._table_schemas
+
+
+@pytest.mark.parametrize("via", ["ops", "call"])
+def test_erase_then_a_lazy_read_of_the_table(spark, tmp_path, via):
+    """An op written after an Erase may read the files the Erase's swap
+    removes (a Put of the pre-transaction rows, a Call's lazy ops): the
+    transaction computes it before the swap."""
+    from core2_spark.engine import Call
+
+    eng = Engine(spark, str(tmp_path / "db"))
+    eng.submit_tx([Put("u", spark.createDataFrame(
+        [(i, f"v{i}") for i in range(1, 7)], "id long, v string"))])
+    ids = spark.createDataFrame([(5,), (6,)], "id long")
+    if via == "ops":
+        pre = eng.db()
+        ops = [Erase("u", ids), Put("u", pre.table("u").filter("id = 5"))]
+    else:
+        ops = [Call(lambda snap: [
+            Erase("u", ids), Put("u", snap.table("u").filter("id = 5"))
+        ])]
+    eng.submit_tx(ops)
+    db = eng.db()
+    assert sorted(tuple(r) for r in db.table("u").collect()) == [
+        (i, f"v{i}") for i in range(1, 6)
+    ]
+    assert db.history("u").filter("id = 5").count() == 1  # the re-put only
 
 
 @pytest.mark.slow
@@ -1112,7 +1218,7 @@ def test_entity_history_and_basis_token_roundtrip(spark, engine):
     version rows (rectangles + tombstone marker) in system-time order;
     a basis serializes to a portable token and rehydrates to the exact
     same snapshot — even after later transactions."""
-    from core2_spark.basis import basis_from_json, basis_to_json
+    from core2_spark.basis import basis_to_json
 
     engine.submit_tx(
         [Put("t", spark.createDataFrame(
@@ -1145,7 +1251,7 @@ def test_entity_history_and_basis_token_roundtrip(spark, engine):
         [Put("t", spark.createDataFrame([(9, "later")], "id long, v string"))],
         tx_time="2024-04-01 00:00:01",
     )
-    rehydrated = engine.db(basis_from_json(token))
+    rehydrated = engine.db(engine.rehydrate(token))
     assert {r["id"] for r in rehydrated.table("t").collect()} == {2}
     assert rehydrated.history("t").count() == 4  # 3 puts + tombstone
     # while the live head sees the later write
@@ -1337,6 +1443,13 @@ def _differential_ops(spark, case):
                 Delete("t", ids(1)),
             ])
         ],
+        # a struct gains a field, then a write of that field is cast to it
+        "struct_widening": [
+            Put("t", spark.createDataFrame([(9, (1,))], "id long, s struct<a: long>")),
+            Put("t", spark.createDataFrame(
+                [(10, (2, "x"))], "id long, s struct<a: long, b: string>")),
+            Put("t", spark.createDataFrame([(11, (3,))], "id long, s struct<b: int>")),
+        ],
         # INT columns into BIGINT ones; a new column's first type wins
         "narrower_put": [
             Put("t", spark.createDataFrame([(9, "i", 9, 1)], "id int, v string, n int, m int")),
@@ -1348,7 +1461,7 @@ def _differential_ops(spark, case):
 @pytest.mark.parametrize(
     "case",
     ["put_duplicate_ids", "bounded_delete", "patch", "assert_true",
-     "assert_false", "call", "narrower_put"],
+     "assert_false", "call", "narrower_put", "struct_widening"],
 )
 def test_with_tx_answers_as_submit_tx(spark, tmp_path, case):
     """One lowering for a what-if and a commit: ``db.with_tx(ops, t)``

@@ -227,6 +227,58 @@ def test_http_basis_token_pins_snapshot(spark, engine):
         server.shutdown()
 
 
+@pytest.mark.parametrize("craft", ["unknown_table", "outside_file", "wider_schema"])
+def test_http_refuses_a_crafted_basis_token(spark, engine, tmp_path, craft):
+    """A basis token is client input: one naming a table the engine
+    does not record, a file outside the table's directory or a schema
+    the table does not have is refused with a SQLSTATE, and no file it
+    names is read."""
+    import json as _json
+    import urllib.request
+
+    from core2_spark.http_server import SqlHttpServer
+
+    schema = "id long, px double"
+    engine.submit_tx([Put("trades", spark.createDataFrame([(1, 100.0)], schema))])
+    other = Engine(spark, str(tmp_path / "other"))
+    other.submit_tx([Put("trades", spark.createDataFrame([(666, 6.66)], schema))])
+    secret = other.db().basis
+    server = SqlHttpServer(lambda sql: engine.db().sql(sql), engine=engine)
+    try:
+        base = f"http://127.0.0.1:{server.port}"
+        with urllib.request.urlopen(f"{base}/basis") as resp:
+            token = _json.loads(_json.loads(resp.read())["basis"])
+        table = "trades"
+        if craft == "unknown_table":
+            table = "secret"
+            token["manifests"]["secret"] = list(secret.manifests["trades"])
+            token["roots"]["secret"] = secret.roots["trades"]
+            token["schemas"]["secret"] = secret.schemas["trades"]
+        elif craft == "outside_file":
+            token["manifests"]["trades"] = list(secret.manifests["trades"])
+        else:
+            wider = _json.loads(token["schemas"]["trades"])
+            wider["fields"].append(
+                {"name": "ssn", "type": "string", "nullable": True, "metadata": {}}
+            )
+            token["schemas"]["trades"] = _json.dumps(wider)
+        req = urllib.request.Request(
+            f"{base}/query",
+            data=_json.dumps(
+                {"sql": f"SELECT id FROM {table}", "basis": _json.dumps(token)}
+            ).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req)
+        assert err.value.code == 400
+        body = _json.loads(err.value.read())
+        assert body["sqlstate"] == "22023"
+        assert "666" not in body["error"]
+    finally:
+        server.shutdown()
+
+
 def test_http_tx_mview_maintenance(spark, engine):
     """A single materialized-view maintenance statement rides the same
     POST /tx funnel (it executes immediately — not a log op); mixing
