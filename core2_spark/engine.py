@@ -381,6 +381,10 @@ class Engine:
         # bases and rewrites all read with it.  A table found on disk
         # without one is inferred once, at open (_adopt_schemas).
         self._table_schemas: dict[str, str] = {}
+        # Tables with files that _adopt_schemas could not merge: refused
+        # to every write and rewrite, and not inferred again, until the
+        # next open.
+        self._unadoptable: set[str] = set()
         # Per-block bloom filters (SURVEY §4: core2 keeps a bloom per
         # column/block in its metadata files [upstream: bloom.clj];
         # the Parquet analogue is a writer option, not code).  Opt-in
@@ -440,6 +444,8 @@ class Engine:
     def _scan(self, table: str, path: str | None = None) -> DataFrame:
         """The version rows under ``path`` (default: the table's
         directory) read with the recorded schema, as a rewrite reads."""
+        if table not in self._table_schemas:
+            raise ValueError(f"unknown table {table!r}: nothing to rewrite")
         schema = _struct(self._table_schemas[table])
         return self.spark.read.schema(schema).parquet(path or self._table_path(table))
 
@@ -650,39 +656,12 @@ class Engine:
         # BEFORE it is published, so subtracting pending-listed files
         # is exact; reading the manifests AFTER the walk closes the
         # race where a manifest+publish lands between the two.
-        pdir = os.path.join(self.root, "_pending")
-        if os.path.isdir(pdir):
-            # Manifest paths were spelled with the WRITER's root string,
-            # which can differ from this reader's for the same physical
-            # root (trailing slash, relative vs absolute, symlinked
-            # mount).  Exact-string pop would then miss silently and the
-            # fallback clock would re-adopt the in-flight tx's SYS_START
-            # — the torn read the subtraction exists to prevent.  New
-            # manifests record their writer's root, so compare
-            # root-relative; legacy manifests fall back to realpath
-            # equality (resolves symlinks/..-segments to one spelling).
-            real_index: dict[str, str] | None = None
-            for mname in os.listdir(pdir):
-                if not mname.endswith(".json"):
-                    continue
-                try:
-                    with open(os.path.join(pdir, mname)) as f:
-                        meta = json.load(f)
-                except (OSError, ValueError, json.JSONDecodeError):
-                    continue
-                for fpath in meta.get("files", []):
-                    if per_file.pop(fpath, None) is not None:
-                        continue  # identical spelling
-                    local = self._localize_manifest_path(meta, fpath)
-                    if local != fpath and per_file.pop(local, None) is not None:
-                        continue
-                    if real_index is None:
-                        real_index = {
-                            os.path.realpath(p): p for p in per_file
-                        }
-                    hit = real_index.get(os.path.realpath(fpath))
-                    if hit is not None:
-                        per_file.pop(hit, None)
+        pending = self._pending_files()
+        if pending:
+            per_file = {
+                p: t for p, t in per_file.items()
+                if os.path.realpath(p) not in pending
+            }
         for t in per_file.values():
             if isinstance(t, datetime) and t.tzinfo is not None:
                 t = t.astimezone(timezone.utc).replace(tzinfo=None)
@@ -691,23 +670,75 @@ class Engine:
             ):
                 self._last_tx_time = t
 
+    def _pending_files(self) -> set[str]:
+        """Real paths of every file a pending-transaction manifest
+        lists: published, or about to be, by a transaction the log does
+        not hold (yet).  Manifest paths were spelled with the WRITER's
+        root string, which can differ from this reader's for the same
+        physical root (trailing slash, relative vs absolute, symlinked
+        mount): each is re-based onto this root (manifests record their
+        writer's root) and resolved, so one spelling compares."""
+        out: set[str] = set()
+        pdir = os.path.join(self.root, "_pending")
+        if not os.path.isdir(pdir):
+            return out
+        for mname in os.listdir(pdir):
+            if not mname.endswith(".json"):
+                continue
+            try:
+                with open(os.path.join(pdir, mname)) as f:
+                    meta = json.load(f)
+            except (OSError, ValueError, json.JSONDecodeError):
+                continue
+            for fpath in meta.get("files", []):
+                out.add(os.path.realpath(fpath))
+                out.add(os.path.realpath(self._localize_manifest_path(meta, fpath)))
+        return out
+
     def _adopt_schemas(self) -> None:
         """Infer, once, the schema of each table directory that holds
-        parquet files but has no record (a root this engine did not
-        write, an older log); the next commit persists it.  A table
-        whose files do not merge stays out of every basis."""
+        committed parquet files but has no record (a root this engine
+        did not write, an older log); the next commit persists it.
+        Files a pending manifest lists are left out: their transaction
+        may still roll back.  A table whose files do not merge is
+        refused (``_refuse_unadopted``) until the next open."""
         from py4j.protocol import Py4JJavaError
         from pyspark.errors import PySparkException
 
         for name, path in self._all_tables().items():
-            if name in self._table_schemas or not _list_parquet(path):
+            if name in self._table_schemas or name in self._unadoptable:
+                continue
+            files = self._committed_files(path)
+            if not files:
                 continue
             try:
-                inferred = self.spark.read.option("mergeSchema", "true").parquet(path)
+                inferred = self.spark.read.option("mergeSchema", "true").parquet(*files)
             except (PySparkException, Py4JJavaError) as exc:
+                self._unadoptable.add(name)
                 warnings.warn(f"table {name!r} left unread: {exc}", RuntimeWarning)
                 continue
             self._table_schemas[name] = json.dumps(_widened(None, inferred.schema).jsonValue())
+
+    def _committed_files(self, path: str) -> list[str]:
+        """The parquet files under ``path`` that no pending manifest
+        lists."""
+        files = [os.path.join(path, f) for f in sorted(_list_parquet(path))]
+        if not files:
+            return files
+        pending = self._pending_files()
+        return [f for f in files if os.path.realpath(f) not in pending]
+
+    def _refuse_unadopted(self, table: str) -> None:
+        """Refuse a write or rewrite of a table whose files did not merge
+        at open: the write would record only its own columns, and every
+        later read and rewrite would drop the columns only the old
+        files hold."""
+        if table in self._unadoptable:
+            raise ValueError(
+                f"table {table!r} holds files whose schemas do not merge: "
+                "writes and rewrites of it are refused until they are "
+                "repaired and the engine is reopened"
+            )
 
     def _persist_clock(
         self, _locked: bool = False, commit_txid: str | None = None
@@ -911,7 +942,16 @@ class Engine:
         recorded one (``_widened``)."""
         path = self._table_path(table)
         tx.paths.add(path)
+        self._refuse_unadopted(table)
         recorded = _struct(self._table_schemas.get(table))
+        if recorded is None and self._committed_files(path):
+            # a table's first write here, onto files the open did not
+            # see: recording this write's columns alone would hide the
+            # rest; a refresh adopts them (or reads their record)
+            raise ConcurrentWriterError(
+                f"table {table!r} gained files under {self.root} since "
+                "this Engine opened — refresh() and retry"
+            )
         rows, schema = _conform(rows, recorded)
         self._table_schemas[table] = json.dumps(_widened(recorded, schema).jsonValue())
         staging, moves = self._stage_rows(path, rows)
@@ -1574,6 +1614,7 @@ class Engine:
         a crash restores the pre-transaction table."""
         path = self._table_path(op.table)
         tx.paths.add(path)
+        self._refuse_unadopted(op.table)
         if op.table not in self._table_schemas:
             # Erase must read the table it rewrites — on a table that
             # never existed, fail cleanly (and roll back) instead of
@@ -1766,6 +1807,7 @@ class Engine:
         acquired Basis manifests for the table — the reference's
         analogue is sealing/compacting chunks at maintenance points.
         Returns the new file count."""
+        self._refuse_unadopted(table)  # before the claim, like vacuum
         self._claim_maintenance()  # conflict-fence concurrent writers
         path = self._table_path(table)
         if target_files is None:
@@ -1900,6 +1942,7 @@ class Engine:
                 "bounded versions, whose superseded predecessors can still "
                 "win at app instants outside the successor's rectangle"
             )
+        self._refuse_unadopted(table)
         horizon = _to_datetime(older_than)
         # claim the maintenance window FIRST: bumps the token (in-
         # flight writers conflict + replay instead of losing files to
@@ -2385,6 +2428,7 @@ class Snapshot:
         # (Engine._append: _conform, then _widened)
         recorded = {n: _struct(js) for n, js in pre.basis.schemas.items()}
         for seq, op in enumerate(pre._expand(ops)):
+            self.engine._refuse_unadopted(op.table)  # as the commit would
             if isinstance(op, Erase):
                 into = erased
                 rows = op.ids.select(F.col(op.id_col).alias("id")).distinct()

@@ -707,6 +707,18 @@ def test_struct_widening_stays_recorded(spark, tmp_path, shape):
         assert sorted((r["id"], b_of(r)) for r in rows) == [(1, None), (2, "x")]
 
 
+def _foreign_versions(spark, path, ddl, rows, at):
+    """Append version rows to ``path`` the way a writer other than the
+    engine would: plain parquet, no log, no pending manifest."""
+    from pyspark.sql import functions as F2
+
+    from core2_spark import temporal as bt2
+
+    bt2.put(spark.createDataFrame(rows, ddl), tx_time=at).withColumn(
+        bt2.TOMBSTONE, F2.lit(False)
+    ).write.mode("append").parquet(path)
+
+
 def test_open_adopts_a_root_the_engine_did_not_write(spark, tmp_path):
     """Version files written by something else are adopted at open: one
     inference records the merged schema, reads use it, the next commit
@@ -715,23 +727,13 @@ def test_open_adopts_a_root_the_engine_did_not_write(spark, tmp_path):
     import json as _json
     import os
 
-    from pyspark.sql import functions as F2
-
-    from core2_spark import temporal as bt2
-
     root = str(tmp_path / "foreign")
-
-    def versions(ddl, rows, at):
-        return bt2.put(spark.createDataFrame(rows, ddl), tx_time=at).withColumn(
-            bt2.TOMBSTONE, F2.lit(False)
-        )
-
     path = os.path.join(root, "t")
-    versions("id long, v string", [(1, "a")], "2024-01-01").write.mode("append").parquet(path)
-    versions("id long, w double", [(2, 2.5)], "2024-01-02").write.mode("append").parquet(path)
+    _foreign_versions(spark, path, "id long, v string", [(1, "a")], "2024-01-01")
+    _foreign_versions(spark, path, "id long, w double", [(2, 2.5)], "2024-01-02")
     bad = os.path.join(root, "bad")
-    versions("id long", [(1,)], "2024-01-01").write.mode("append").parquet(bad)
-    versions("id string", [("x",)], "2024-01-01").write.mode("append").parquet(bad)
+    _foreign_versions(spark, bad, "id long", [(1,)], "2024-01-01")
+    _foreign_versions(spark, bad, "id string", [("x",)], "2024-01-01")
     with pytest.warns(RuntimeWarning, match="'bad' left unread"):
         eng = Engine(spark, root)
     assert set(eng._table_schemas) == {"t"}
@@ -747,6 +749,132 @@ def test_open_adopts_a_root_the_engine_did_not_write(spark, tmp_path):
     shutil.rmtree(bad)
     reopened = Engine(_NoScanSpark(spark), root)
     assert reopened._table_schemas == eng._table_schemas
+
+
+def test_a_table_whose_files_do_not_merge_is_refused(spark, tmp_path):
+    """A table left unadopted at open has no record, so a write would
+    record only its own columns and every later read or rewrite would
+    drop the columns only the old files hold: writes, rewrites and
+    what-ifs of it are refused and leave its files untouched, and a
+    refresh neither infers it again nor warns again."""
+    import os
+    import warnings
+
+    root = str(tmp_path / "foreign")
+    bad = os.path.join(root, "bad")
+    _foreign_versions(spark, bad, "id long, c long", [(1, 7)], "2024-01-01")
+    _foreign_versions(spark, bad, "id long, c string", [(2, "x")], "2024-01-01")
+
+    def files():
+        return {
+            os.path.join(d, n): os.path.getsize(os.path.join(d, n))
+            for d, _s, ns in os.walk(bad) for n in ns
+        }
+
+    before = files()
+    with pytest.warns(RuntimeWarning, match="'bad' left unread"):
+        eng = Engine(spark, root)
+    put = Put("bad", spark.createDataFrame([(3, "v")], "id long, v string"))
+    with pytest.raises(ValueError, match="do not merge"):
+        eng.submit_tx([put])
+    with pytest.raises(ValueError, match="do not merge"):
+        eng.db().with_tx([put])
+    with pytest.raises(ValueError, match="do not merge"):
+        eng.submit_tx([Erase("bad", spark.createDataFrame([(1,)], "id long"))])
+    with pytest.raises(ValueError, match="do not merge"):
+        eng.optimize("bad")
+    with pytest.raises(ValueError, match="do not merge"):
+        eng.vacuum("bad", older_than="2024-06-01")
+    assert files() == before
+    eng.submit_tx([Put("u", spark.createDataFrame([(1,)], "id long"))])
+    assert set(eng._table_schemas) == {"u"}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        eng.refresh()
+    with pytest.raises(ValueError, match="do not merge"):
+        eng.submit_tx([put])
+    assert files() == before
+
+
+def test_a_first_write_onto_files_the_open_did_not_see_conflicts(spark, tmp_path):
+    """Files that appear in a table after the open, with no record,
+    are a concurrent writer's: a first write onto them is refused as a
+    conflict instead of recording its own columns alone, and after a
+    refresh adopts them the write keeps every column."""
+    import os
+
+    from core2_spark.engine import ConcurrentWriterError
+
+    root = str(tmp_path / "db")
+    eng = Engine(spark, root)
+    _foreign_versions(
+        spark, os.path.join(root, "late"), "id long, c long", [(1, 7)], "2024-01-01"
+    )
+    put = Put("late", spark.createDataFrame([(2, "v")], "id long, v string"))
+    with pytest.raises(ConcurrentWriterError, match="refresh"):
+        eng.submit_tx([put])
+    eng.refresh()
+    eng.submit_tx([put])
+    assert sorted(tuple(r) for r in eng.db().table("late").select("id", "c", "v").collect()) == [
+        (1, 7, None), (2, None, "v")
+    ]
+
+
+def test_adoption_leaves_out_files_of_a_pending_transaction(spark, tmp_path):
+    """Files a pending manifest lists belong to a transaction the log
+    does not hold and that may still roll back: adoption, at open and
+    at refresh, infers no type from them, and a table whose only files
+    are pending stays unrecorded."""
+    import json as _json
+    import os
+    from datetime import datetime
+
+    from pyspark.sql import functions as FF
+
+    from core2_spark import temporal as btmod
+
+    root = str(tmp_path / "db")
+    eng = Engine(spark, root)
+    eng.submit_tx([Put("t", spark.createDataFrame([(1, "a")], "id long, v string"))])
+    log = os.path.join(root, "_log.json")
+    with open(log) as f:
+        meta = _json.load(f)
+    del meta["schemas"]  # a log written before schemas were recorded
+    with open(log, "w") as f:
+        _json.dump(meta, f)
+
+    # a live peer mid-transaction: manifest written, files published,
+    # log not yet advanced
+    peer = Engine(spark, root)
+    t_peer = datetime.fromisoformat("2030-01-01 00:00:01")
+    pending = peer._pending_path()
+    published = []
+    for table, ddl, row in [
+        ("t", "id long, v string, phantom_col boolean", (2, "b", True)),
+        ("n", "id long, w double", (1, 2.5)),
+    ]:
+        rows = (
+            btmod.put(spark.createDataFrame([row], ddl), tx_time=t_peer)
+            .withColumn(btmod.TOMBSTONE, FF.lit(False))
+            .withColumn(btmod.TX_SEQ, FF.lit(0))
+            .withColumn(btmod.ROW_SEQ, FF.monotonically_increasing_id())
+        )
+        path = os.path.join(root, table)
+        staging, moves = peer._stage_rows(path, rows)
+        published += [d for _s, d in moves]
+        peer._write_pending(pending, t_peer, published, [])
+        peer._publish_staged(path, staging, moves)
+
+    for opened in (Engine(spark, root), eng):
+        if opened is eng:
+            eng.refresh()
+        assert set(opened._table_schemas) == {"t"}
+        assert "phantom_col" not in opened._table_schemas["t"]
+    eng.submit_tx([Put("u", spark.createDataFrame([(1,)], "id long"))])
+    with open(log) as f:
+        persisted = _json.load(f)["schemas"]
+    assert set(persisted) == {"t", "u"}
+    assert "phantom_col" not in persisted["t"]
 
 
 @pytest.mark.parametrize("via", ["ops", "call"])
