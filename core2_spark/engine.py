@@ -981,6 +981,17 @@ class Engine:
         pending-transaction manifest can list them first; see
         _write_pending).
 
+        Files are sized by bytes, not by the caller's partitioning: the
+        rows are rebalanced by day first (Spark's REBALANCE), so AQE
+        coalesces a small append to one file per day and splits a day
+        larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+        into files of about that size.  Spark ignores REBALANCE with
+        AQE off, so there the rows are hashed by day instead and each
+        day lands in one file, however large.  Every
+        append (``submit_tx``, SQL DML, ``apply_changes``) comes here;
+        rewrites (``_rewrite_atomic``, ``compact``) keep their own
+        partitioning.
+
         Staging, then publishing by rename, instead of
         ``mode("append")`` on the table directory: concurrent appends
         to ONE directory share the Hadoop committer's ``_temporary/0``
@@ -994,6 +1005,11 @@ class Engine:
 
         staging = os.path.join(self.root, f"_tmp_stage_{_uuid.uuid4().hex}")
         rows = rows.withColumn(bt.SYS_DAY, F.to_date(F.col(bt.SYS_START)))
+        day = F.col(bt.SYS_DAY)
+        if self.spark.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+            rows = rows.hint("rebalance", day)
+        else:  # Spark drops a REBALANCE without AQE
+            rows = rows.repartition(day)
         with self._micros_timestamps():
             self._writer(rows).partitionBy(bt.SYS_DAY).parquet(staging)
         # stamp stage time: the scavenger's live-peer age gate must

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 
 import pytest
 
@@ -1835,6 +1836,106 @@ def test_duplicate_ids_within_one_put_read_repeatably(spark, engine):
     assert {
         (r["id"], r["tag"]) for r in reopened.table("trades").collect()
     } == reads[0]
+
+
+def _parquet_files(root: str, table: str) -> set[str]:
+    return {
+        os.path.join(d, f)
+        for d, _dirs, names in os.walk(os.path.join(root, table))
+        for f in names
+        if f.endswith(".parquet")
+    }
+
+
+def _files_per_day(root: str, table: str, commit) -> dict[str, int]:
+    """Run ``commit()`` and count the parquet files it published into
+    ``table``, per ``_sys_day`` directory."""
+    before = _parquet_files(root, table)
+    commit()
+    return dict(
+        Counter(
+            os.path.basename(os.path.dirname(f))
+            for f in _parquet_files(root, table) - before
+        )
+    )
+
+
+def _numbered_rows(spark, lo: int, hi: int, parts: int):
+    return spark.range(lo, hi, numPartitions=parts).selectExpr(
+        "id", "CAST(id AS STRING) AS v", "id * 1.5 AS px"
+    )
+
+
+@pytest.mark.parametrize("write", ["put", "delete", "update", "patch"])
+def test_a_small_append_publishes_one_file_per_day(spark, tmp_path, write):
+    """An append's file count follows its bytes, not the caller's
+    partitioning: a small Put, Delete, UPDATE or PATCH publishes one
+    file per system-time day."""
+    root = str(tmp_path / "root")
+    eng = Engine(spark, root)
+    n = 50_000  # per seed day: big enough that a read shuffles into several partitions
+    for day in range(4):
+        eng.submit_tx(
+            [Put("t", _numbered_rows(spark, day * n, day * n + n, 4))],
+            tx_time=f"2024-01-1{day} 00:00:00",
+        )
+    commit = {
+        "put": lambda: eng.submit_tx([Put("t", _numbered_rows(spark, 4 * n, 4 * n + 2000, 4).repartition(16))]),
+        "delete": lambda: eng.submit_tx([Delete("t", spark.range(0, 2000, 100, numPartitions=8))]),
+        "update": lambda: eng.sql_dml("UPDATE t SET px = px + 1 WHERE id % 25000 = 5"),
+        "patch": lambda: eng.sql_dml(
+            "PATCH INTO t RECORDS {id: 5, px: 1.0}, {id: 50005, v: 'x'}, "
+            "{id: 100005, px: 3.0}, {id: 150005, px: 4.0}"
+        ),
+    }[write]
+    assert list(_files_per_day(root, "t", commit).values()) == [1]
+    current = {r["id"]: (r["v"], r["px"]) for r in eng.db().table("t").collect()}
+    assert len(current) == {"put": 4 * n + 2000, "delete": 4 * n - 20}.get(write, 4 * n)
+    assert current[50005] == {
+        "update": ("50005", 75008.5), "patch": ("x", 75007.5)
+    }.get(write, ("50005", 75007.5))
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_a_replicated_feed_publishes_one_file_per_day(spark, tmp_path, aqe):
+    src_root, dst_root = str(tmp_path / "src"), str(tmp_path / "dst")
+    src, dst = Engine(spark, src_root), Engine(spark, dst_root)
+    for day in ("2024-01-10", "2024-01-11", "2024-01-12"):
+        rows = spark.range(0, 500, numPartitions=8).selectExpr("id", f"'{day}' AS v")
+        src.submit_tx([Put("t", rows)], tx_time=f"{day} 00:00:00")
+    feed = src.db().changes("t", since="2024-01-01", until="2024-12-31")
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        per_day = _files_per_day(
+            dst_root, "t", lambda: dst.apply_changes("t", feed.repartition(16))
+        )
+    finally:
+        spark.conf.set(key, before)
+    assert per_day == {
+        f"_sys_day=2024-01-1{d}": 1 for d in (0, 1, 2)
+    }
+    assert dst.db().history("t").count() == 1500
+
+
+def test_a_bulk_append_still_splits_by_size(spark, tmp_path):
+    """Past ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` one
+    day's rows are split over several files."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    root = str(tmp_path / "root")
+    eng = Engine(spark, root)
+    rows = spark.range(0, 200_000, numPartitions=8).selectExpr(
+        "id", "uuid() AS v"
+    )
+    spark.conf.set(key, "256k")
+    try:
+        per_day = _files_per_day(root, "t", lambda: eng.submit_tx([Put("t", rows)]))
+    finally:
+        spark.conf.set(key, before)
+    assert len(per_day) == 1 and list(per_day.values())[0] > 1
+    assert eng.db().table("t").count() == 200_000
 
 
 def test_day_partition_rewrite_scratch_names_are_equals_free(
